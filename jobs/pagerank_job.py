@@ -57,14 +57,6 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     )
     ap.add_argument("--dtype", choices=["float64", "float32"], default="float64")
     ap.add_argument(
-        "--partials",
-        choices=["auto", "rows", "blob"],
-        default="auto",
-        help="csr_block partial aggregation: blob ships packed per-dst-"
-        "range cells instead of per-(bucket,dst) JVM rows (auto: blob at "
-        "scale, rows on tiny graphs)",
-    )
-    ap.add_argument(
         "--num-partitions",
         type=int,
         default=None,
@@ -115,7 +107,6 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         hub_threshold=args.hub_threshold,
         block_dir=args.block_dir,
         dtype=args.dtype,
-        partials=args.partials,
         num_partitions=args.num_partitions,
         checkpoint=cat if args.checkpoint_every else None,
         checkpoint_every=args.checkpoint_every,

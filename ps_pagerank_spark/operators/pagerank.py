@@ -41,7 +41,10 @@ Execution design (scale-first):
     (OS page cache keeps them RAM-hot across iterations). Correctness does
     NOT depend on the alignment: missing ranks gather as 0 and every state
     row is seen exactly once, so per-task partials always SUM to the exact
-    contribution (any repartitioning only costs extra block reads).
+    contribution (any repartitioning only costs extra block reads). The
+    partials leave Python as ≤P packed binary cells per bucket keyed by
+    dst range and are summed by a second Arrow stage (dense bincount, sort
+    fallback for sparse ids) — never as per-(bucket, dst) JVM rows.
     block_dir must be visible to all executors: a local/shared-FS path
     (mmap fast path) or any pyarrow.fs URI (`hdfs://`, `s3://`, ...) when
     executors don't share a disk — the block store is "device memory".
@@ -66,7 +69,6 @@ from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -129,26 +131,10 @@ def _loop_aqe_off(loop_aqe: str, kernel: str, n: int, P: int) -> bool:
 LOOP_EDGES_PER_BUCKET = 400_000
 SMALL_GRAPH_STATS_BYTES = 256 << 20
 
-# csr_block partial-aggregation mode: blob wins once the (bucket, dst)
-# partial cardinality dwarfs the rank state (measured A/B at 64M and sf0.1,
-# BENCH/BASELINE.md §5 V5); below the threshold the rows path's single
-# reused exchange is already cheap and blob's extra stage is pure overhead
-PARTIALS_BLOB_MIN_EDGES = 4_000_000
-
-
-def _use_blob_partials(partials: str, kernel: str, n_edges: int) -> bool:
-    """Resolve the partials mode (BENCH/BASELINE.md §5 V5 A/B): blob at
-    scale (64M: −20%/iter), rows on tiny graphs (sf0.1: blob loses ~20%,
-    the extra Arrow stage outweighs a ~21k-row aggregation)."""
-    if kernel != "csr_block":
-        return False
-    if partials == "auto":
-        return n_edges >= PARTIALS_BLOB_MIN_EDGES
-    return partials == "blob"
-# dense np.bincount combine only when the per-bucket id range fits a
-# modest array (64M slots = 512 MB float64 worst case is too big; 1<<26
-# slots = 512 MB/8 = 64 MB accumulator); exotic sparse ids fall back to
-# the sort-based combine
+# blob dense combine: one float64 accumulator slot (plus a bool presence
+# flag) per id in a dst range, so one range costs 9 B/slot — at most
+# 2**26 slots = 512 MiB acc + 64 MiB mask per combine task. Wider ranges
+# (exotic sparse ids) take the sort-based combine instead.
 _BLOB_DENSE_MAX = 1 << 26
 
 
@@ -325,7 +311,6 @@ def _pagerank_impl(
     checkpoint_table: str = "pagerank_ranks",
     block_dir: str | None = None,  # csr_block store (must be executor-visible)
     dtype: str = "float64",  # csr_block arithmetic: "float64" | "float32"
-    partials: str = "auto",  # csr_block partial agg: "auto" | "rows" | "blob"
     loop_aqe: str = "auto",  # iteration-loop AQE: "auto" | "on" | "off"
     start_state: DataFrame | None = None,  # resume: (vertex_id,dangling,rank)
     start_iter: int = 0,  # resume: iterations already done
@@ -364,8 +349,6 @@ def _pagerank_impl(
         raise ValueError(f"unknown gather {gather!r}")
     if loop_aqe not in ("auto", "on", "off"):
         raise ValueError(f"unknown loop_aqe {loop_aqe!r}")
-    if partials not in ("auto", "rows", "blob"):
-        raise ValueError(f"unknown partials {partials!r}")
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     # setup cost discipline — exactly 3 actions before the loop (plus the
     # csr_block upload when selected): (1) vertex materialize+count, which
@@ -499,7 +482,6 @@ def _pagerank_impl(
     # 3.51 vs 3.59) — so it gates on rows per partition, letting AQE
     # coalesce the tiny stages on small graphs.
     aqe_off = _loop_aqe_off(loop_aqe, kernel, n, P)
-    blob_partials = _use_blob_partials(partials, kernel, n_edges)
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     try:
         if aqe_off:
@@ -509,7 +491,6 @@ def _pagerank_impl(
             wedges,
             hub_part,
             store,
-            blob_partials=blob_partials,
             n=n,
             P=P,
             d=d,
@@ -559,7 +540,6 @@ def _iterate(
     hub_part,
     store: "_BlockStore | None",
     *,
-    blob_partials: bool = False,
     n: int,
     P: int,
     d: float,
@@ -610,7 +590,7 @@ def _iterate(
         base = (1.0 - d) / n + (d * dang_mass / n)
 
         if store is not None:
-            contribs = _gather_scatter_blocks(state, store, P, blob=blob_partials)
+            contribs = _gather_scatter_blocks(state, store, P)
         else:
             contribs = _gather_scatter_join(
                 state, wedges, hub_part, broadcast_ranks=use_bcast
@@ -711,17 +691,10 @@ class _BlockStore:
     owns_dir: bool
     run_id: str = ""
     num_buckets: int = 0
-    # dst id bounds (from the build): when they fit int32, per-iteration
-    # partials cross Python→JVM with 4-byte ids
+    # dst id bounds (from the build): they cut the blob dst ranges, and
+    # when they fit int32 the packed partial cells carry 4-byte ids
     min_dst: int = -(2**62)
     max_dst: int = 2**62
-    # src id bounds (from the build): recorded so the state-stream
-    # narrowing variant stays reproducible (BENCH/profile_csr.py measures
-    # it; the shipping kernel keeps long ids — measured no win, see
-    # _gather_scatter_blocks). Stores written before these fields keep
-    # the wide defaults.
-    min_src: int = -(2**62)
-    max_src: int = 2**62
 
 
 _STORE_VERSION = 2  # v2: per-src suw replaces per-edge w; narrowed dst/starts
@@ -905,7 +878,7 @@ def _build_csr_blocks(
     if dtype not in ("float64", "float32"):
         raise ValueError(f"unknown dtype {dtype!r}")
     owns = block_dir is None
-    path = block_dir or tempfile.mkdtemp(prefix="ps_pagerank_blocks_")
+    path = block_dir or tempfile.mkdtemp(prefix="ps_pagerank_csr_store_")
     _store_mkdirs(path)
     # a reused dir may hold blocks of a previous (different) graph; stale
     # files would silently contribute phantom edges — clear, then manifest
@@ -924,7 +897,6 @@ def _build_csr_blocks(
         dst = tbl.column("dst_id").to_numpy()
         w = tbl.column("w").to_numpy().astype(dtype, copy=False)
         out_k, out_n, out_lo, out_hi = [], [], [], []
-        out_slo, out_shi = [], []
         for key in np.unique(pk):
             m = pk == key
             s, t, ww = src[m], dst[m], w[m]
@@ -962,18 +934,14 @@ def _build_csr_blocks(
             out_n.append(int(len(s)))
             out_lo.append(int(t[0]))  # dst-sorted: [0] is the min
             out_hi.append(int(t[-1]))
-            out_slo.append(int(su[0]))  # su is sorted (np.unique)
-            out_shi.append(int(su[-1]))
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(out_k, type=pa.int32()),
                 pa.array(out_n, type=pa.int64()),
                 pa.array(out_lo, type=pa.int64()),
                 pa.array(out_hi, type=pa.int64()),
-                pa.array(out_slo, type=pa.int64()),
-                pa.array(out_shi, type=pa.int64()),
             ],
-            names=["pkey", "n_edges", "min_dst", "max_dst", "min_src", "max_src"],
+            names=["pkey", "n_edges", "min_dst", "max_dst"],
         )
 
     keyed = wedges.select(
@@ -985,17 +953,11 @@ def _build_csr_blocks(
     if not aligned:
         keyed = keyed.repartition(P, "pkey")
     rows = keyed.mapInArrow(
-        build,
-        schema=(
-            "pkey int, n_edges long, min_dst long, max_dst long, "
-            "min_src long, max_src long"
-        ),
+        build, schema="pkey int, n_edges long, min_dst long, max_dst long"
     ).collect()
     n_edges = sum(r["n_edges"] for r in rows)
     min_dst = min((r["min_dst"] for r in rows), default=0)
     max_dst = max((r["max_dst"] for r in rows), default=0)
-    min_src = min((r["min_src"] for r in rows), default=0)
-    max_src = max((r["max_src"] for r in rows), default=0)
     # the manifest makes stale/missing stores fail LOUDLY: readers validate
     # run_id and only skip pkeys the manifest says have no block
     _store_write_bytes(
@@ -1010,8 +972,6 @@ def _build_csr_blocks(
                 "edges_fp": fingerprint,
                 "min_dst": min_dst,
                 "max_dst": max_dst,
-                "min_src": min_src,
-                "max_src": max_src,
                 "pkeys": sorted(int(r["pkey"]) for r in rows),
             }
         ).encode(),
@@ -1025,8 +985,6 @@ def _build_csr_blocks(
         num_buckets=len(rows),
         min_dst=min_dst,
         max_dst=max_dst,
-        min_src=min_src,
-        max_src=max_src,
     )
 
 
@@ -1062,25 +1020,33 @@ def _attach_csr_blocks(
         num_buckets=len(mf["pkeys"]),
         min_dst=mf.get("min_dst", -(2**62)),
         max_dst=mf.get("max_dst", 2**62),
-        min_src=mf.get("min_src", -(2**62)),
-        max_src=mf.get("max_src", 2**62),
     )
 
 
 def _gather_scatter_blocks(
-    state: DataFrame, store: _BlockStore, P: int, blob: bool = False
+    state: DataFrame, store: _BlockStore, P: int
 ) -> DataFrame:
     """Per-bucket CSR gather-scatter (J3 analog, opencl/kernel_csr.cl:18-33)
     over the resident block store — only the rank state moves per iteration.
 
-    Each mapInArrow task groups its state rows by pkey, mmap-loads the
-    bucket's block, fills su_rank by binary-searching the incoming
-    (vertex_id, rank) rows, and emits pre-aggregated (dst, partial) pairs.
-    Ranks absent from the task gather as 0, and every state row exists in
-    exactly one task, so summing partials across tasks is exact regardless
-    of how the state is physically partitioned — alignment with the block
-    buckets (the default, via hash partitioning) only removes duplicate
-    block reads.
+    Stage 1 (gather): each mapInArrow task groups its state rows by pkey,
+    mmap-loads the bucket's block, fills su_rank by binary-searching the
+    incoming (vertex_id, rank) rows and reduces each dst run to one
+    partial. Ranks absent from the task gather as 0, and every state row
+    exists in exactly one task, so summing partials across tasks is exact
+    regardless of how the state is physically partitioned — alignment with
+    the block buckets (the default, via hash partitioning) only removes
+    duplicate block reads.
+
+    Blob partials (V5, BENCH/BASELINE.md §5): the Σ_b unique-dst(b)
+    partials never materialize as JVM rows. Each bucket splits its
+    dst-sorted partials into ≤P contiguous dst-range slices (free: one
+    searchsorted) and ships them as packed binary cells keyed by range.
+    Stage 2 (combine) sums each range densely (np.bincount; sort fallback
+    above _BLOB_DENSE_MAX ids per range) and emits the globally-unique
+    (vertex_id, _c) contribs: a ≤P²-row cell exchange plus one
+    |V|-row contrib exchange into the update join, instead of a wide
+    shuffle + two-level hash agg of per-(bucket, dst) rows.
 
     Each task validates the store manifest (cached per worker): a missing
     or stale store raises instead of silently dropping contributions, and
@@ -1088,45 +1054,30 @@ def _gather_scatter_blocks(
 
     dtype="float32" halves the float side of the per-iteration byte
     budget: the rank state crosses JVM→Python as float32, the per-source
-    suw weights are float32, and the gather/scatter arithmetic (the
-    |edges|-wide scaled-rank gather + reduceat) runs at half the memory
-    traffic. Since store v2 the per-edge arrays are index-only (sidx), so
-    float width no longer touches the per-edge block bytes.
-
-    blob=True (V5, BENCH/BASELINE.md §5): identical per-bucket gather,
-    but the Σ_b unique-dst(b) partials never materialize as JVM rows —
-    each bucket splits its dst-sorted partials into ≤P contiguous
-    dst-range slices (free: one searchsorted) and ships them as packed
-    binary cells; a second Arrow stage combines each range densely
-    (np.bincount; sort fallback above _BLOB_DENSE_MAX ids per range) and
-    emits the globally-unique (vertex_id, _c) contribs directly. This
-    replaces the rows path's wide shuffle + two-level hash agg (the
-    measured 57% cost term) with a ≤P²-row blob exchange plus one |V|-row
-    contrib exchange into the update join.
+    suw weights and the packed partial values are float32, and the
+    gather/scatter arithmetic (the |edges|-wide scaled-rank gather +
+    reduceat) runs at half the memory traffic. The combine accumulates in
+    float64.
     """
     path, dtype, run_id = store.path, store.dtype, store.run_id
-    # Arrow respects element widths (unlike Spark's 8-byte-slot UnsafeRow),
-    # so narrowing the Python→JVM partial stream is a real byte saving:
-    # int32 ids when every dst fits (recorded in the manifest at build
-    # time), float32 values in float32 mode. Spark's Sum over floats still
-    # accumulates in double, so the cross-bucket merge stays exact-ish.
+    # int32 dst ids in the packed cells when every dst fits (bounds are
+    # recorded in the manifest at build time)
     use32 = -(2**31) <= store.min_dst and store.max_dst < 2**31
-    f32 = dtype == "float32"
-    id_pa = pa.int32() if use32 else pa.int64()
     id_np = np.int32 if use32 else np.int64
-    val_pa = pa.float32() if f32 else pa.float64()
-    val_np = np.float32 if f32 else np.float64
-    # The JVM→Python state stream deliberately KEEPS long vertex ids: the
-    # symmetric narrowing (int32 ids when the manifest's src+dst bounds
-    # fit) was measured flat-to-slightly-negative at 64M edges / 4M
-    # vertices — the stream is overhead-bound, not bandwidth-bound, at
-    # 32 MB/iter, and the narrowing cast adds JVM work per row
-    # (BENCH/BASELINE.md §5 variant V4; the A/B rung stays in
-    # BENCH/profile_csr.py so the call can be re-measured at larger V).
+    val_np = np.float32 if dtype == "float32" else np.float64
+    lo_id, hi_id = store.min_dst, store.max_dst
+    span = max(1, hi_id - lo_id + 1)
+    qwidth = -(-span // P)  # ceil: qkey = (dst - lo_id) // qwidth ∈ [0, P)
 
-    def _key_partials(tbl: pa.Table):
-        """Per-bucket gather-scatter: yields (dst_sorted, sums) per pkey."""
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        got = list(batches)
+        if not got:
+            return
+        tbl = pa.Table.from_batches(got)
+        if tbl.num_rows == 0:
+            return
         have = _bucket_set(path, run_id)
+        cuts = lo_id + qwidth * np.arange(1, P, dtype=np.int64)
         pk = tbl.column("pkey").to_numpy()
         vid = tbl.column("vertex_id").to_numpy()
         rank = tbl.column("rank").to_numpy()
@@ -1153,48 +1104,6 @@ def _gather_scatter_blocks(
             scaled = su_rank * suw
             vals = scaled[sidx]  # gather: val[k]·prevR[col[k]]
             sums = np.add.reduceat(vals, starts)  # CSR rowPtr scatter
-            yield dst, sums
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        got = list(batches)
-        if not got:
-            return
-        tbl = pa.Table.from_batches(got)
-        if tbl.num_rows == 0:
-            return
-        for dst, sums in _key_partials(tbl):
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.asarray(dst).astype(id_np, copy=False), type=id_pa),
-                    pa.array(sums.astype(val_np, copy=False), type=val_pa),
-                ],
-                names=["vertex_id", "_p"],
-            )
-
-    # ---- blob partial aggregation (V5, BENCH/BASELINE.md §5) ----
-    # The rows path above emits one JVM row per (bucket, dst) partial —
-    # Σ_b unique-dst(b) rows (≈14× |V| at 64M/P=64), whose shuffle + hash
-    # agg is the measured top cost term (57%) of a csr_block iteration.
-    # The blob path keeps the SAME per-bucket gather but ships the
-    # partials as ≤P packed binary cells per bucket, keyed by contiguous
-    # dst RANGE (free split: block dst arrays are sorted), and sums them
-    # densely (np.bincount) in a second Arrow stage — the per-key
-    # aggregation never materializes as JVM rows at all. The combine
-    # output is globally unique per vertex_id (ranges partition the id
-    # space), so it feeds the update join directly.
-    lo_id, hi_id = store.min_dst, store.max_dst
-    span = max(1, hi_id - lo_id + 1)
-    qwidth = -(-span // P)  # ceil: qkey = (dst - lo_id) // qwidth ∈ [0, P)
-
-    def gen_blob(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        cuts = lo_id + qwidth * np.arange(1, P, dtype=np.int64)
-        got = list(batches)
-        if not got:
-            return
-        tbl = pa.Table.from_batches(got)
-        if tbl.num_rows == 0:
-            return
-        for dst, sums in _key_partials(tbl):
             bounds = np.concatenate(
                 ([0], np.searchsorted(dst, cuts), [len(dst)])
             )
@@ -1242,9 +1151,10 @@ def _gather_scatter_blocks(
                 # dense combine — dictionary-encoded ids make ranges
                 # compact, so this is the hot path (one C pass per blob set)
                 off = d_all - qlo
-                cnt = np.bincount(off, minlength=size)
                 acc = np.bincount(off, weights=v_all, minlength=size)
-                nz = np.flatnonzero(cnt)
+                seen = np.zeros(size, dtype=bool)
+                seen[off] = True
+                nz = np.flatnonzero(seen)
                 out_ids, out_vals = nz + qlo, acc[nz]
             else:
                 # sparse/exotic id range: sort-based combine
@@ -1266,42 +1176,32 @@ def _gather_scatter_blocks(
     rank_col = (
         F.col("rank").cast("float") if dtype == "float32" else F.col("rank")
     )
-    keyed_state = state.select(
+    blobs = state.select(
         F.pmod(F.hash("vertex_id"), F.lit(P)).cast("int").alias("pkey"),
         "vertex_id",
         rank_col.alias("rank"),
+    ).mapInArrow(gen, schema="qkey int, dst binary, val binary")
+    # ≤ P rows per bucket task enter this exchange — the partial payload
+    # moves as a few thousand packed cells, not as Σ_b unique-dst(b) JVM
+    # rows. The combine output is already unique per vertex_id, but
+    # Catalyst only sees that through an Aggregate: without one it sizes
+    # the update join as the PRODUCT of its sides, each localCheckpoint'd
+    # state inherits that estimate, and its digit count doubles every
+    # iteration (~25 iterations in, planning spends minutes multiplying
+    # BigIntegers). The sum over one row per key is exact, and it shares
+    # the hash(vertex_id, P) exchange the update join needs anyway.
+    # shuffle_hash keeps the update join from sorting the rank state
+    # (contribs side builds the hash table).
+    return (
+        blobs.repartition(P, "qkey")
+        .mapInArrow(combine, schema="vertex_id long, _c double")
+        .groupBy("vertex_id")
+        .agg(F.sum("_c").alias("_c"))
+        .hint("shuffle_hash")
     )
-    if blob:
-        blobs = keyed_state.mapInArrow(
-            gen_blob, schema="qkey int, dst binary, val binary"
-        )
-        # ≤ P rows per bucket task enter this exchange — the partial
-        # payload moves as a few thousand packed cells, not as
-        # Σ_b unique-dst(b) JVM rows. The combine output is unique per
-        # vertex_id; shuffle_hash keeps the update join from sorting the
-        # rank state (contribs side builds the hash table).
-        return (
-            blobs.repartition(P, "qkey")
-            .mapInArrow(combine, schema="vertex_id long, _c double")
-            .hint("shuffle_hash")
-        )
-    schema = (
-        f"vertex_id {'int' if use32 else 'long'}, "
-        f"_p {'float' if f32 else 'double'}"
-    )
-    partials = keyed_state.mapInArrow(gen, schema=schema)
-    # widen BEFORE the groupBy so the agg's partitioning is on the long
-    # key — the update join then reuses the exchange instead of adding one
-    partials = partials.select(
-        F.col("vertex_id").cast("long").alias("vertex_id"),
-        F.col("_p").cast("double").alias("_p"),
-    )
-    return partials.groupBy("vertex_id").agg(F.sum("_p").alias("_c"))
 
 
-def _alignment_fraction(
-    state: DataFrame, P: int, n: int | None = None, mode: str | None = None
-) -> float | None:
+def _alignment_fraction(state: DataFrame, P: int, n: int | None = None) -> float:
     """Runtime probe for the csr_block bucket↔task alignment invariant:
     fraction of state rows whose pmod(hash(vertex_id), P) equals their
     physical partition id. Alignment is a PERFORMANCE invariant only
@@ -1309,22 +1209,16 @@ def _alignment_fraction(
     upgrade ever changes HashPartitioning placement, every task would
     read ~P blocks instead of 1; this probe makes that degradation loud.
 
-    Probe cost control (PS_PAGERANK_ALIGN_PROBE env or ``mode``):
-      * "sample" (default) — above 200k vertices, a pushed-down filter
-        samples ~64k rows (salted xxhash64, independent of the murmur
-        partitioning hash, so the sample is placement-unbiased). A
-        placement change misplaces whole partitions, so a sampled
-        fraction detects it as reliably as the full scan.
-      * "full" — exact fraction over every row.
-      * "off"  — skip the probe job entirely (returns None).
-    The filter must NOT move rows (no limit/repartition): sampling is a
-    predicate evaluated in place, keeping spark_partition_id meaningful.
+    Probe cost control: above 200k vertices, a pushed-down filter samples
+    ~64k rows (salted xxhash64, independent of the murmur partitioning
+    hash, so the sample is placement-unbiased). A placement change
+    misplaces whole partitions, so a sampled fraction detects it as
+    reliably as a full scan. The filter must NOT move rows (no
+    limit/repartition): sampling is a predicate evaluated in place,
+    keeping spark_partition_id meaningful.
     """
-    mode = mode or os.environ.get("PS_PAGERANK_ALIGN_PROBE", "sample")
-    if mode == "off":
-        return None
     probe = state
-    if mode == "sample" and n is not None and n > 200_000:
+    if n is not None and n > 200_000:
         m = max(1, n // 65_536)
         probe = state.filter(
             F.pmod(F.xxhash64("vertex_id", F.lit(17)), F.lit(m)) == 0
@@ -1410,150 +1304,6 @@ def _continue(
         start_iter=start_iter,
         prev_metrics=prev_metrics,
         **kwargs,
-    )
-
-
-def pagerank_block(
-    spark: SparkSession,
-    edges: DataFrame,
-    *,
-    d: float = D_DEFAULT,
-    eps: float = EPS_DEFAULT,
-    max_iter: int = 1000,
-    fixed_iterations: int | None = None,
-    dangling_mode: str = "redistribute",
-    num_partitions: int | None = None,
-) -> PageRankResult:
-    """Block-row PageRank with a driver-held rank vector — the Spark analog
-    of the reference's host-driven GPU loop (opencl/pagerank.c:456-531):
-    the dense rank vector lives on the driver (host), each iteration
-    broadcasts it (H2D upload), every partition computes its CSR-block
-    partial y = A_block · x with vectorized NumPy (one partition ≈ one
-    workgroup, kernel_csr.cl:18-33), and the partials come back in one
-    Arrow collect (D2H of per-workgroup results). Damping, dangling mass,
-    and the convergence norm are O(V) NumPy on the driver — exactly the
-    host-side final reduction of opencl/pagerank.c:517-527.
-
-    Physical properties (why this wins the mid-scale regime):
-      * edges are range-partitioned by dst and sorted once, then NEVER
-        move — zero shuffle bytes per iteration;
-      * each dst row lives in exactly one partition, so per-partition
-        partials are already final sums — collect size is ≤ V rows total;
-      * the only serial costs are one ~8·V-byte broadcast and one ≤16·V-byte
-        collect per iteration.
-    Valid while the rank vector fits driver memory (~8 GB per 10^9
-    vertices); beyond that use pagerank(kernel="join", gather="shuffle"),
-    which holds at any V. Ids must be bounded (dense dictionary ids make
-    the arrays tight; sparse ids waste array slots up to max_id).
-    """
-    if dangling_mode not in ("none", "redistribute"):
-        raise ValueError(f"unknown dangling_mode {dangling_mode!r}")
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    wedges = weighted_edges(edges)
-    blocks = (
-        wedges.repartitionByRange(P, "dst_id")
-        .sortWithinPartitions("dst_id")
-        .persist()
-    )
-    blocks.count()
-
-    # driver-side vertex universe / degree arrays (one pass)
-    vstats = (
-        vertices_from_edges(edges)
-        .join(
-            out_degrees(edges).select(
-                F.col("src_id").alias("vertex_id"), "deg"
-            ),
-            "vertex_id",
-            "left",
-        )
-        .select("vertex_id", F.coalesce("deg", F.lit(0)).alias("deg"))
-        .toPandas()
-    )
-    vids = vstats["vertex_id"].to_numpy()
-    size = int(vids.max()) + 1 if len(vids) else 0
-    n = len(vids)
-    if n == 0:  # degenerate input: nothing to rank
-        blocks.unpersist()
-        empty = spark.createDataFrame([], "vertex_id long, rank double")
-        return PageRankResult(
-            ranks=empty, iterations=0, converged=True, metrics=[],
-            kernel="block",
-        )
-    exists = np.zeros(size, dtype=bool)
-    exists[vids] = True
-    dangling = np.zeros(size, dtype=bool)
-    dangling[vids[vstats["deg"].to_numpy() == 0]] = True
-
-    prev = np.zeros(size, dtype=np.float64)
-    prev[vids] = 1.0 / n
-
-    sc = spark.sparkContext
-    metrics: list[dict] = []
-    it = 0
-    converged = False
-    target = fixed_iterations if fixed_iterations is not None else max_iter
-    while it < target:
-        it += 1
-        t0 = time.perf_counter()
-        bc = sc.broadcast(prev)
-
-        def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            pv = bc.value
-            for batch in batches:
-                dst = batch.column("dst_id").to_numpy(zero_copy_only=False)
-                src = batch.column("src_id").to_numpy(zero_copy_only=False)
-                w = batch.column("w").to_numpy(zero_copy_only=False)
-                if len(dst) == 0:
-                    continue
-                vals = w * pv[src]
-                bounds = np.flatnonzero(np.diff(dst)) + 1
-                starts = np.concatenate(([0], bounds))
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(dst[starts], type=pa.int64()),
-                        pa.array(np.add.reduceat(vals, starts), type=pa.float64()),
-                    ],
-                    names=["vertex_id", "_p"],
-                )
-
-        partials = blocks.mapInArrow(
-            gen, schema="vertex_id long, _p double"
-        ).toPandas()
-        contrib = np.zeros(size, dtype=np.float64)
-        # batches within a partition can split a dst run → add, not assign
-        np.add.at(
-            contrib,
-            partials["vertex_id"].to_numpy(),
-            partials["_p"].to_numpy(),
-        )
-        dm = float(prev[dangling].sum()) if dangling_mode == "redistribute" else 0.0
-        base = (1.0 - d) / n + d * dm / n
-        curr = np.where(exists, base + d * contrib, 0.0)
-        delta = float(np.sqrt(((curr - prev) ** 2).sum()))
-        prev = curr
-        bc.destroy()
-        metrics.append(
-            {
-                "iter": it,
-                "l2_delta": delta,
-                "rank_sum": float(curr.sum()),
-                "dangling_mass": float(curr[dangling].sum()),
-                "elapsed_s": time.perf_counter() - t0,
-            }
-        )
-        if fixed_iterations is None and delta <= eps:
-            converged = True
-            break
-    if fixed_iterations is not None:
-        converged = True
-
-    ranks_pdf = pd.DataFrame({"vertex_id": vids, "rank": prev[vids]})
-    ranks = spark.createDataFrame(ranks_pdf)
-    blocks.unpersist()
-    return PageRankResult(
-        ranks=ranks, iterations=it, converged=converged, metrics=metrics,
-        kernel="block",
     )
 
 

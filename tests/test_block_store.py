@@ -106,6 +106,10 @@ def test_attach_validates_manifest(spark, tmp_path, big_edges_df):
 
     mf_path = tmp_path / "blocks" / _MANIFEST
     mf = _json.loads(mf_path.read_text())
+    # keys this reader does not use (older builds also recorded src id
+    # bounds) are ignored: such a store still attaches
+    mf_path.write_text(_json.dumps({**mf, "src_bounds": [1, 11]}))
+    assert _attach_csr_blocks(str(bdir), 4, "float64", n_edges) is not None
     mf["version"] = 1
     mf_path.write_text(_json.dumps(mf))
     assert _attach_csr_blocks(str(bdir), 4, "float64", n_edges) is None

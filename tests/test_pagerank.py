@@ -184,43 +184,91 @@ def test_csr_block_float32_fixed_point(spark, big_edges_df):
 
 
 def test_blob_partials_kernel_equality(spark):
-    """V5 blob partial aggregation (BENCH/BASELINE.md §5): the csr_block
-    kernel with partials="blob" (packed per-dst-range binary cells +
-    dense bincount combine) must produce the same scores as the rows path
-    (JVM hash agg) — on dense dictionary-encoded ids (dense combine) AND
-    on ids far above the dense-combine cap (sort-fallback combine)."""
+    """The csr_block kernel (blob partials: packed per-dst-range binary
+    cells + dense bincount combine) must produce the join kernel's scores
+    — on dense dictionary-encoded ids (dense combine), on ids far above
+    the dense-combine cap (sort-fallback combine), and in float32 mode."""
     syn_edges, n = _syn_graph()
     edges_df = spark.createDataFrame(syn_edges, "src_id long, dst_id long")
-    kw = dict(
-        eps=1e-6, dangling_mode="redistribute", kernel="csr_block",
-        num_partitions=4,
-    )
-    r_rows = pagerank(spark, edges_df, partials="rows", **kw)
-    r_blob = pagerank(spark, edges_df, partials="blob", **kw)
-    a, b = _ranks_np(r_rows, n), _ranks_np(r_blob, n)
+    kw = dict(eps=1e-6, dangling_mode="redistribute", num_partitions=4)
+    r_join = pagerank(spark, edges_df, kernel="join", **kw)
+    r_blob = pagerank(spark, edges_df, kernel="csr_block", **kw)
+    a, b = _ranks_np(r_join, n), _ranks_np(r_blob, n)
     assert np.abs(a - b).max() < 1e-12
-    assert r_blob.iterations == r_rows.iterations
+    assert r_blob.iterations == r_join.iterations
+    # the loop's Catalyst size estimate must grow at most geometrically:
+    # a product-estimated update join squares it every iteration, and
+    # planning then stalls in BigInteger multiplication ~25 iterations in
+    est = r_blob.ranks._jdf.queryExecution().optimizedPlan().stats()
+    assert len(str(est.sizeInBytes())) < 30, r_blob.iterations
 
-    # exotic sparse ids: per-bucket range >> _BLOB_DENSE_MAX forces the
-    # sort-based combine; scores must still agree with the rows path
+    # exotic sparse ids: per-range id span >> _BLOB_DENSE_MAX forces the
+    # sort-based combine; scores must still agree with the join kernel
     STRIDE = 90_000_000_000
     wide = edges_df.selectExpr(
         f"src_id * {STRIDE} as src_id", f"dst_id * {STRIDE} as dst_id"
     )
-    w_rows = pagerank(spark, wide, partials="rows", **kw)
-    w_blob = pagerank(spark, wide, partials="blob", **kw)
-    aw = {r["vertex_id"]: r["rank"] for r in w_rows.ranks.collect()}
+    w_join = pagerank(spark, wide, kernel="join", **kw)
+    w_blob = pagerank(spark, wide, kernel="csr_block", **kw)
+    aw = {r["vertex_id"]: r["rank"] for r in w_join.ranks.collect()}
     bw = {r["vertex_id"]: r["rank"] for r in w_blob.ranks.collect()}
     assert aw.keys() == bw.keys()
     for k in aw:
         assert np.isclose(aw[k], bw[k], rtol=1e-12, atol=1e-15)
 
-    # float32 mode ships float32 blob values; must reach the same fixed
-    # point as the float32 rows path within the float32 contract bound
-    f_rows = pagerank(spark, edges_df, partials="rows", dtype="float32", **kw)
-    f_blob = pagerank(spark, edges_df, partials="blob", dtype="float32", **kw)
-    af, bf = _ranks_np(f_rows, n), _ranks_np(f_blob, n)
-    assert np.abs(af - bf).max() < 1e-6
+    # float32 mode ships float32 cell values; it must reach the float64
+    # join kernel's fixed point within the float32 contract bound
+    f_blob = pagerank(
+        spark, edges_df, kernel="csr_block", dtype="float32", **kw
+    )
+    assert np.abs(a - _ranks_np(f_blob, n)).max() < 1e-6
+
+
+def test_kernel_auto_survives_catalyst_drift(spark, big_edges_df, tmp_path,
+                                             monkeypatch):
+    """If the private Catalyst stats API behind the small-input probe
+    breaks (a Spark upgrade renames it), kernel="auto" must fall back to
+    the scale path — csr_block at the session's P — and still produce the
+    join kernel's scores, never fail or mis-size the run."""
+    from ps_pagerank_spark.operators import pagerank as pr
+
+    pdir = str(tmp_path / "edges_drift_parquet")
+    big_edges_df.write.parquet(pdir)
+    edges = spark.read.parquet(pdir)  # provably small: auto would pick join
+    kw = dict(fixed_iterations=10, dangling_mode="redistribute")
+    want = pagerank(spark, edges, kernel="join", **kw)
+
+    class _Drifted:
+        @property
+        def _jdf(self):
+            raise AttributeError("simulated Catalyst internals drift")
+
+    real_select = edges.select
+
+    def select(*cols):  # only the probe's select("*") hits the drift
+        if len(cols) == 1 and isinstance(cols[0], str) and cols[0] == "*":
+            return _Drifted()
+        return real_select(*cols)
+
+    monkeypatch.setattr(edges, "select", select)
+    assert pr._catalyst_small_count(edges) is None
+
+    seen = {}
+    real_impl = pr._pagerank_impl
+
+    def spy(s, e, **k):
+        seen["P"] = k["num_partitions"]
+        return real_impl(s, e, **k)
+
+    monkeypatch.setattr(pr, "_pagerank_impl", spy)
+    got = pagerank(spark, edges, **kw)
+    assert got.kernel == "csr_block"
+    assert seen["P"] == int(spark.conf.get("spark.sql.shuffle.partitions"))
+    a = {r["vertex_id"]: r["rank"] for r in want.ranks.collect()}
+    b = {r["vertex_id"]: r["rank"] for r in got.ranks.collect()}
+    assert a.keys() == b.keys()
+    for k in a:
+        assert abs(a[k] - b[k]) < 1e-12
 
 
 def test_kernel_auto_selection(spark, big_edges_df, tmp_path):
@@ -263,10 +311,12 @@ def test_kernel_auto_selection(spark, big_edges_df, tmp_path):
 
 
 def test_wide_id_state_stream_kernel_equality(spark):
-    """Ids above int32 keep the wide (long) state stream: every other test
-    uses small ids and therefore exercises the int32-narrowed JVM→Python
-    stream, so this is the only pin on the fallback. Same micro-graph
-    shifted by 2^33 must produce the same scores from both kernels."""
+    """Ids above int32 make the csr_block kernel pack its blob cells with
+    int64 dst ids while the id span stays dense: the only pin on int64
+    cells through the dense combine (the stride-9e10 graph in
+    test_blob_partials_kernel_equality takes the sort fallback). Same
+    micro-graph shifted by 2^33 must produce the same scores from both
+    kernels."""
     from ps_pagerank_spark.sources.edgelist import edges_from_pairs
     from tests.conftest import SMALL_EDGES
 

@@ -148,26 +148,6 @@ def test_loop_aqe_auto_gate_is_kernel_aware():
     assert _loop_aqe_off("auto", "csr_block", T * 4, 4)
 
 
-def test_blob_partials_auto_gate():
-    """partials="auto" policy pinned to the measured A/B (BENCH/BASELINE.md
-    §5 V5): blob at ≥ PARTIALS_BLOB_MIN_EDGES (64M: −20%/iter), rows on
-    tiny graphs (sf0.1: blob loses ~20%); join kernel never uses blob."""
-    from ps_pagerank_spark.operators.pagerank import (
-        PARTIALS_BLOB_MIN_EDGES as B,
-        _use_blob_partials,
-    )
-
-    # explicit settings win regardless of size (csr_block only)
-    assert _use_blob_partials("blob", "csr_block", 10)
-    assert not _use_blob_partials("rows", "csr_block", 100 * B)
-    # auto gates on edge count
-    assert not _use_blob_partials("auto", "csr_block", 1_615_851)  # sf0.1
-    assert _use_blob_partials("auto", "csr_block", B)  # 64M shape
-    # the join kernel has no block store; blob never applies
-    assert not _use_blob_partials("auto", "join", 100 * B)
-    assert not _use_blob_partials("blob", "join", 100 * B)
-
-
 def test_auto_partitions_tiny_graph_floor(spark, big_edges_df, tmp_path):
     """Tiny-graph loop-partition floor (BENCH/BASELINE.md §4 sweep): a
     provably-small input gets P sized to the data instead of the
