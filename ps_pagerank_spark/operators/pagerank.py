@@ -16,8 +16,14 @@ Execution design (scale-first):
     hash aggregate does map-side partial sums (the OpenMP chunk-accumulator
     pattern, openmp/pagerank.c:341-394) and shuffle-merge (the atomics,
     opencl/kernel_coo.cl:37-60) automatically.
-  * Weighted edges are computed once, hash-repartitioned on src_id and
-    persisted — the iteration-invariant side of the join never reshuffles.
+  * Prep is one shared pass: a single vertex aggregate, vstats(vertex_id,
+    deg, h), explodes each edge into its endpoints and yields the vertex
+    universe, out-degrees, dangling flags, |E| and the content
+    fingerprint for both kernels (one scalar agg reads them off). State0
+    is a projection of it; the join kernel's weighted edges are
+    edges ⋈ vstats(deg > 0) with w = 1/deg, hash-repartitioned on src_id
+    and persisted — the iteration-invariant side of the join never
+    reshuffles. csr_block builds no weighted edges at all (see below).
   * Lineage is truncated every iteration with localCheckpoint — the Spark
     analog of the reference's two-buffer pointer swap (pagerank.c:211-213).
   * One scalar action per iteration returns (‖Δ‖², Σrank, next dangling
@@ -30,11 +36,12 @@ Execution design (scale-first):
     Arrow UDF with a one-time edge "upload" — the Spark analog of the
     reference keeping the CSR matrix resident in device memory across
     iterations (opencl/pagerank.c:456-531 uploads buffers once, then loops).
-    Setup partitions edges by pkey = pmod(hash(src_id), P) and writes one
-    pre-digested CSR block per bucket to a block store (np.save: sorted
-    unique srcs, int32 gather indices, dst-run boundaries for
-    np.add.reduceat). Per iteration ONLY the rank state (V rows) crosses
-    JVM→Python: state is hash-partitioned on vertex_id with the same P, and
+    Setup partitions the raw edges by pkey = pmod(hash(src_id), P) and
+    writes one pre-digested CSR block per bucket to a block store
+    (np.save: sorted unique srcs, their 1/L weights counted in the bucket,
+    int32 gather indices, dst-run boundaries for np.add.reduceat). Per
+    iteration ONLY the rank state (V rows) crosses JVM→Python: state is
+    hash-partitioned on vertex_id with the same P, and
     pmod(hash(v), P) IS the physical partition id, so each mapInArrow task
     holds exactly the ranks its block gathers — no per-iteration edge
     shuffle, no O(V) driver transfer, no broadcast. Blocks are mmap-loaded
@@ -72,12 +79,6 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ps_pagerank_spark.operators.graph import (
-    out_degrees,
-    vertices_from_edges,
-    weighted_edges,
-)
 
 D_DEFAULT = 0.85
 EPS_DEFAULT = 1e-8  # c-single-threaded/pagerank.c:19
@@ -182,13 +183,67 @@ class PageRankResult:
     kernel: str = ""
 
 
-def _split_hubs(wedges: DataFrame, outdeg: DataFrame, hub_threshold: int):
+def _vertex_stats(
+    edges: DataFrame, vertices: DataFrame | None, P: int
+) -> DataFrame:
+    """vstats(vertex_id, deg, h, inu): the one shared pass over the edges
+    that every prep question reads (the Layered Aggregate Engine idea:
+    many aggregates from one scan). Each edge explodes into its two
+    endpoints — the src row carries (1, xxhash64(src_id, dst_id)), the dst
+    row (0, 0) — grouped on vertex_id and hash-partitioned on it with P.
+    So deg is the out-degree (0 = dangling), and bit_xor(h) over all rows
+    is the edge-level content fingerprint.
+
+    inu marks the rank universe: every endpoint by default; with explicit
+    ``vertices``, exactly those ids (unioned in with deg 0). deg still
+    counts every edge, so Σdeg and the fingerprint cover edges whose
+    endpoints fall outside the universe, as the weights do."""
+    rows = edges.select(
+        F.inline(
+            F.array(
+                F.struct(
+                    F.col("src_id").alias("vertex_id"),
+                    F.lit(1).alias("deg"),
+                    F.xxhash64("src_id", "dst_id").alias("h"),
+                ),
+                F.struct(
+                    F.col("dst_id").alias("vertex_id"),
+                    F.lit(0).alias("deg"),
+                    F.lit(0).cast("long").alias("h"),
+                ),
+            )
+        ),
+        F.lit(vertices is None).alias("inu"),
+    )
+    if vertices is not None:
+        rows = rows.unionByName(
+            vertices.select(
+                "vertex_id",
+                F.lit(0).alias("deg"),
+                F.lit(0).cast("long").alias("h"),
+                F.lit(True).alias("inu"),
+            )
+        )
+    return (
+        rows.groupBy("vertex_id")
+        .agg(
+            F.sum("deg").alias("deg"),
+            F.bit_xor("h").alias("h"),
+            F.max("inu").alias("inu"),
+        )
+        .repartition(P, "vertex_id")
+    )
+
+
+def _split_hubs(wedges: DataFrame, vstats: DataFrame, hub_threshold: int):
     """Split edges whose SOURCE is a super-emitter out of the shuffle join.
 
     hub rank rows are few (vertices with out-degree > threshold), so their
     ranks broadcast; everything else takes the normal co-partitioned path.
     """
-    hubs = outdeg.filter(F.col("deg") > hub_threshold).select("src_id")
+    hubs = vstats.filter(F.col("deg") > hub_threshold).select(
+        F.col("vertex_id").alias("src_id")
+    )
     hubs.persist()
     n_hubs = hubs.count()
     if n_hubs == 0:
@@ -235,8 +290,8 @@ def pagerank(spark: SparkSession, edges: DataFrame, **kwargs) -> PageRankResult:
     under AQE), adding two rank-vector shuffles per iteration that the
     static planner proves unnecessary. The loop needs none of AQE's
     strengths: its plan is identical every iteration and skew is handled
-    explicitly (hub split + salting). PREP — vertex distinct, the 1/L
-    weight join, the fingerprint agg — keeps AQE: those are exactly the
+    explicitly (hub split + salting). PREP — the vertex aggregate, the
+    1/L weight join, the block build — keeps AQE: those are exactly the
     one-shot skew/size-sensitive shuffles AQE is for, and measured A/B
     (16M edges, local[8]) shows AQE-off prep is ~2x slower for both
     kernels while loop speed is unaffected by prep's setting.
@@ -350,22 +405,27 @@ def _pagerank_impl(
     if loop_aqe not in ("auto", "on", "off"):
         raise ValueError(f"unknown loop_aqe {loop_aqe!r}")
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # setup cost discipline — exactly 3 actions before the loop (plus the
-    # csr_block upload when selected): (1) vertex materialize+count, which
-    # doubles as the gather="auto" broadcast probe; (2) weighted-edge
-    # materialize; (3) the dangling-count agg, which piggybacks state0's
-    # lazy-checkpoint materialization (skipped entirely for mode "none",
-    # where iteration 1 materializes state0 inside its own job)
+    # setup cost discipline — ONE shared pass over the edges answers every
+    # prep question: vstats (see _vertex_stats) plus one scalar agg over it
+    # that also materializes it. The only other action before the loop is
+    # the join kernel's weighted-edge materialize, or the csr_block store
+    # build (which reads the raw edges) and its alignment probe. State0 is
+    # a lazy checkpoint that iteration 1's job materializes.
     t_prep0 = time.perf_counter()
-    verts = (
-        (vertices if vertices is not None else vertices_from_edges(edges))
-        .select("vertex_id")
-        .repartition(P, "vertex_id")
-        .persist()
-    )
-    n = verts.count()
+    vstats = _vertex_stats(edges, vertices, P).persist()
+    inu, deg = F.col("inu"), F.col("deg")
+    # the content fingerprint — bit_xor of per-edge xxhash64, order-
+    # insensitive and ANSI-overflow-safe — lets a resumed csr_block run
+    # whose edges CHANGED but kept the same count refuse a stale store
+    st = vstats.agg(
+        F.count(F.when(inu, 1)).alias("n"),
+        F.coalesce(F.sum(deg), F.lit(0)).alias("n_edges"),
+        F.coalesce(F.bit_xor("h"), F.lit(0)).alias("fp"),
+        F.count(F.when(inu & (deg == 0), 1)).alias("dang"),
+    ).collect()[0]
+    n, n_edges, edges_fp = int(st["n"]), int(st["n_edges"]), int(st["fp"])
     if n == 0:  # degenerate input: no vertices, nothing to rank
-        verts.unpersist()
+        vstats.unpersist()
         empty = spark.createDataFrame([], "vertex_id long, rank double")
         return PageRankResult(
             ranks=empty, iterations=0, converged=True, metrics=[],
@@ -375,24 +435,23 @@ def _pagerank_impl(
         gather == "broadcast"
         or (gather == "auto" and n <= broadcast_max_vertices)
     )
-    outdeg = out_degrees(edges)
-    wedges = (
-        weighted_edges(edges)
-        .repartition(P, "dst_id" if use_bcast else "src_id")
-        .persist()
-    )
-    # materialize once (iterations reuse the persisted blocks); the same
-    # scan also computes a content fingerprint — bit_xor of per-edge
-    # xxhash64 is order-insensitive and ANSI-overflow-safe — so a resumed
-    # csr_block run whose edges CHANGED but kept the same edge count can't
-    # silently reattach a stale block store
-    estats = wedges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("src_id", "dst_id")), F.lit(0)).alias(
-            "fp"
-        ),
-    ).collect()[0]
-    n_edges, edges_fp = int(estats["n"]), int(estats["fp"])
+    wedges = None
+    if kernel == "join":
+        # iteration-invariant side of the gather join: w = 1/L from vstats
+        # (the same Spark division weighted_edges does), materialized once
+        wedges = (
+            edges.select("src_id", "dst_id")
+            .join(
+                vstats.filter(deg > 0).select(
+                    F.col("vertex_id").alias("src_id"), "deg"
+                ),
+                "src_id",
+            )
+            .select("src_id", "dst_id", (F.lit(1.0) / deg).alias("w"))
+            .repartition(P, "dst_id" if use_bcast else "src_id")
+            .persist()
+        )
+        wedges.count()
     if start_state is not None:
         # resume: the checkpointed vector already carries the dangling flag;
         # _iterate reseeds the redistribute mass from Σ rank over dangling
@@ -404,34 +463,25 @@ def _pagerank_impl(
         )
         init_dang_mass = None
     else:
-        dang = verts.join(
-            outdeg.select(F.col("src_id").alias("vertex_id")),
-            "vertex_id",
-            "left_anti",
-        ).withColumn("dangling", F.lit(True))
         state = (
-            verts.join(dang, "vertex_id", "left")
+            vstats.filter(inu)
             .select(
                 "vertex_id",
-                F.coalesce(F.col("dangling"), F.lit(False)).alias("dangling"),
+                (deg == 0).alias("dangling"),
                 (F.lit(1.0) / F.lit(float(n))).alias("rank"),
             )
             .repartition(P, "vertex_id")
             .localCheckpoint(eager=False)
         )
+        # seed mass = (#dangling)/N — the exact numeric path of the
+        # contract's unrolled oracle (dm0 in _pagerank_sql)
         init_dang_mass = 0.0
         if dangling_mode == "redistribute":
-            # seed mass = (#dangling)/N — the exact numeric path of the
-            # contract's unrolled oracle (dm0 in _pagerank_sql); the agg also
-            # materializes state0's checkpoint in the same job
-            dang_cnt = state.agg(
-                F.sum(F.when(F.col("dangling"), 1).otherwise(0)).alias("c")
-            ).collect()[0]["c"]
-            init_dang_mass = (dang_cnt or 0) / float(n)
+            init_dang_mass = int(st["dang"]) / float(n)
 
     hub_part = None
     if hub_threshold is not None and kernel == "join":
-        wedges, hub_part = _split_hubs(wedges, outdeg, hub_threshold)
+        wedges, hub_part = _split_hubs(wedges, vstats, hub_threshold)
     t_prep = time.perf_counter() - t_prep0
 
     store = None
@@ -446,10 +496,8 @@ def _pagerank_impl(
                 block_dir, P, dtype, n_edges, fingerprint=edges_fp
             )
         if store is None:
-            # wedges was persisted with repartition(P, "src_id") above, so
-            # each physical partition IS one pkey bucket — no bucket shuffle
             store = _build_csr_blocks(
-                wedges, P, block_dir, dtype, aligned=True, fingerprint=edges_fp
+                edges, P, block_dir, dtype, n_edges, fingerprint=edges_fp
             )
         t_blocks = time.perf_counter() - t0
         align_frac = _alignment_fraction(state, P, n=n)
@@ -509,8 +557,9 @@ def _pagerank_impl(
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     ranks = state.select("vertex_id", "rank")
-    for df in (wedges, verts):
-        df.unpersist()
+    for df in (wedges, vstats):
+        if df is not None:
+            df.unpersist()
     if store is not None and store.owns_dir:
         # best-effort: driver sees the store on local/shared FS only
         shutil.rmtree(store.path, ignore_errors=True)
@@ -536,7 +585,7 @@ def _pagerank_impl(
 
 def _iterate(
     state: DataFrame,
-    wedges: DataFrame,
+    wedges: DataFrame | None,
     hub_part,
     store: "_BlockStore | None",
     *,
@@ -836,11 +885,11 @@ def _bucket_set(path: str, run_id: str) -> set:
 
 
 def _build_csr_blocks(
-    wedges: DataFrame,
+    edges: DataFrame,
     P: int,
     block_dir: str | None,
     dtype: str,
-    aligned: bool = False,
+    n_edges: int,
     fingerprint: int | None = None,
 ) -> _BlockStore:
     """One-time edge "upload" (S5 analog — clEnqueueWriteBuffer of the CSR
@@ -861,19 +910,16 @@ def _build_csr_blocks(
 
     Store format v2: PageRank's edge weight is purely a function of the
     source (w = 1/out-degree, reference openmp/pagerank.c's val[] built
-    from outdeg), so the per-edge float array of v1 is redundant — one
-    weight per UNIQUE source (suw) carries the same information at
-    |su| ≤ |edges| elements. At 256M edges / 16M vertices this removes
-    ~2 GB (float64) of block reads from EVERY iteration and one 256M-wide
-    multiply; the per-edge arrays shrink from 12 B to 4 B per edge. The
-    build verifies src-functionality bit-exactly and fails loudly on
-    violation (unreachable via pagerank(), which always derives w = 1/L).
-
-    aligned=True asserts the input is ALREADY hash(src_id, P)-partitioned
-    (pagerank()'s persisted wedges are), in which case each physical
-    partition holds exactly one pkey's rows and the bucketing shuffle is
-    skipped. Each block file must be written by exactly one task, so only
-    pass aligned=True when that invariant truly holds.
+    from outdeg), so one weight per UNIQUE source (suw) carries it at
+    |su| ≤ |edges| elements — at 256M edges / 16M vertices that keeps
+    ~2 GB (float64) of per-edge weights out of EVERY iteration's block
+    reads. The build reads the raw edges, repartitioned on src_id with P:
+    each physical partition is one pkey bucket and holds EVERY edge of its
+    sources, so suw = 1.0/np.bincount(sidx) is the exact out-degree
+    reciprocal — the same IEEE division as Spark's 1.0/deg — and no
+    weighted edge table is ever built. The buckets' edge counts must sum
+    to ``n_edges`` (the caller's Σdeg from the vertex aggregate); a
+    mismatch raises instead of writing an inconsistent store.
     """
     if dtype not in ("float64", "float32"):
         raise ValueError(f"unknown dtype {dtype!r}")
@@ -895,28 +941,19 @@ def _build_csr_blocks(
         pk = tbl.column("pkey").to_numpy()
         src = tbl.column("src_id").to_numpy()
         dst = tbl.column("dst_id").to_numpy()
-        w = tbl.column("w").to_numpy().astype(dtype, copy=False)
         out_k, out_n, out_lo, out_hi = [], [], [], []
         for key in np.unique(pk):
             m = pk == key
-            s, t, ww = src[m], dst[m], w[m]
+            s, t = src[m], dst[m]
             order = np.argsort(t, kind="stable")
-            s, t, ww = s[order], t[order], ww[order]
+            s, t = s[order], t[order]
             su = np.unique(s)
             sidx = np.searchsorted(su, s)
+            # the bucket holds every edge of its sources: per-source edge
+            # count = out-degree, and float64 1.0/deg is Spark's 1/L bits
+            suw = (1.0 / np.bincount(sidx)).astype(dtype, copy=False)
             if len(su) < np.iinfo(np.int32).max:
                 sidx = sidx.astype(np.int32)
-            # per-source weight (scatter, then verify src-functionality
-            # bit-exactly: every edge of a source carries the identical
-            # 1/L bits, so equality is exact, not approximate)
-            suw = np.empty(len(su), dtype=ww.dtype)
-            suw[sidx] = ww
-            if not np.array_equal(ww, suw[sidx]):
-                raise ValueError(
-                    "csr_block store requires src-functional edge weights "
-                    "(w = f(src_id), e.g. PageRank's 1/out-degree); got "
-                    "edges of one source with differing weights"
-                )
             starts = np.concatenate(([0], np.flatnonzero(np.diff(t)) + 1))
             rdst = t[starts]
             i32 = np.iinfo(np.int32)
@@ -944,18 +981,29 @@ def _build_csr_blocks(
             names=["pkey", "n_edges", "min_dst", "max_dst"],
         )
 
-    keyed = wedges.select(
-        F.pmod(F.hash("src_id"), F.lit(P)).cast("int").alias("pkey"),
-        "src_id",
-        "dst_id",
-        "w",
+    # hash(src_id, P) placement: physical partition = pkey bucket, so each
+    # block file is written by exactly one task
+    rows = (
+        edges.select("src_id", "dst_id")
+        .repartition(P, "src_id")
+        .select(
+            F.pmod(F.hash("src_id"), F.lit(P)).cast("int").alias("pkey"),
+            "src_id",
+            "dst_id",
+        )
+        .mapInArrow(
+            build, schema="pkey int, n_edges long, min_dst long, max_dst long"
+        )
+        .collect()
     )
-    if not aligned:
-        keyed = keyed.repartition(P, "pkey")
-    rows = keyed.mapInArrow(
-        build, schema="pkey int, n_edges long, min_dst long, max_dst long"
-    ).collect()
-    n_edges = sum(r["n_edges"] for r in rows)
+    built = sum(r["n_edges"] for r in rows)
+    if built != n_edges:
+        if owns:
+            shutil.rmtree(path, ignore_errors=True)
+        raise RuntimeError(
+            f"csr_block build wrote {built} edges but the vertex aggregate "
+            f"counted {n_edges} — the edges changed between the two scans"
+        )
     min_dst = min((r["min_dst"] for r in rows), default=0)
     max_dst = max((r["max_dst"] for r in rows), default=0)
     # the manifest makes stale/missing stores fail LOUDLY: readers validate

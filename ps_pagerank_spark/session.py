@@ -7,6 +7,7 @@ local-only except the master default.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -61,12 +62,37 @@ def _ship_package(spark: SparkSession) -> None:
     ``spark-submit --py-files engine.zip``). Without it, pandas-UDF closures
     that reference engine modules fail to unpickle on workers unless the
     driver happens to run from the repo root."""
-    pkg_dir = Path(__file__).resolve().parent
     zpath = Path(tempfile.gettempdir()) / "ps_pagerank_spark_pyfiles.zip"
-    if not zpath.exists():
-        tmp = zpath.with_suffix(".tmp.zip")
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for py in sorted(pkg_dir.rglob("*.py")):
-                zf.write(py, f"ps_pagerank_spark/{py.relative_to(pkg_dir)}")
-        os.replace(tmp, zpath)
+    build_package_zip(Path(__file__).resolve().parent, zpath)
     spark.sparkContext.addPyFile(str(zpath))
+
+
+def build_package_zip(pkg_dir: Path, zpath: Path) -> bool:
+    """Zip the ``*.py`` sources under ``pkg_dir`` (as ``<pkg name>/...``)
+    to ``zpath`` unless it already holds exactly these sources. The
+    sources' sha256 is recorded as the zip comment, so an edited tree
+    replaces a stale zip (workers would otherwise import old code) and an
+    unchanged one is not rewritten. Returns True when the zip was
+    (re)written."""
+    sources = [
+        (py.relative_to(pkg_dir).as_posix(), py.read_bytes())
+        for py in sorted(pkg_dir.rglob("*.py"))
+    ]
+    digest = hashlib.sha256()
+    for rel, data in sources:
+        digest.update(f"{rel}\0{len(data)}\0".encode())
+        digest.update(data)
+    tag = digest.hexdigest().encode()
+    try:
+        with zipfile.ZipFile(zpath) as zf:
+            if zf.comment == tag:
+                return False
+    except (OSError, zipfile.BadZipFile):
+        pass  # missing or unreadable: build it
+    tmp = zpath.with_name(f"{zpath.name}.{os.getpid()}.tmp")
+    with zipfile.ZipFile(tmp, "w") as zf:
+        for rel, data in sources:
+            zf.writestr(f"{pkg_dir.name}/{rel}", data)
+        zf.comment = tag
+    os.replace(tmp, zpath)  # atomic: concurrent readers see old or new
+    return True

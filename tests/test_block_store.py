@@ -115,18 +115,44 @@ def test_attach_validates_manifest(spark, tmp_path, big_edges_df):
     assert _attach_csr_blocks(str(bdir), 4, "float64", n_edges) is None
 
 
-def test_build_rejects_non_src_functional_weights(spark, big_edges_df):
-    """Store v2 keeps ONE weight per unique source (PageRank's w = 1/L is
-    purely src-functional); a weight column that varies within a source
-    must fail the build loudly, never silently store wrong weights."""
-    from ps_pagerank_spark.operators.pagerank import _build_csr_blocks
+def test_build_weights_are_exact_inverse_out_degree(spark, tmp_path):
+    """The build counts each source's out-degree inside its bucket
+    (every edge of a source lands in one bucket) and stores
+    suw = 1.0/deg. On a power-law graph (many degrees whose reciprocal is
+    inexact) every block's suw must equal weighted_edges' Spark-computed
+    1/out-degree bit for bit, in float64 and as float32; a build whose
+    bucket counts disagree with the vertex aggregate's Σdeg must raise."""
+    import json as _json
 
-    bad = big_edges_df.select(
-        "src_id", "dst_id", (F.col("dst_id") + 0.5).alias("w")
-    )
-    with pytest.raises(Exception, match="src-functional"):
-        _build_csr_blocks(bad.repartition(4, "src_id"), 4, None, "float64",
-                          aligned=True)
+    from ps_pagerank_spark.operators.graph import weighted_edges
+    from ps_pagerank_spark.operators.pagerank import _build_csr_blocks
+    from ps_pagerank_spark.sources.pages import synth_powerlaw_edges
+
+    pairs = sorted({(int(s), int(d)) for s, d in
+                    synth_powerlaw_edges(2000, 16000, seed=11)})
+    edges = spark.createDataFrame(pairs, "src_id long, dst_id long")
+    want = {
+        r["src_id"]: r["w"]
+        for r in weighted_edges(edges).select("src_id", "w").distinct()
+        .collect()
+    }
+    assert len(set(want.values())) > 10
+    for dtype in ("float64", "float32"):
+        bdir = tmp_path / dtype
+        _build_csr_blocks(edges, 4, str(bdir), dtype, len(pairs))
+        got = {}
+        for k in _json.loads((bdir / _MANIFEST).read_text())["pkeys"]:
+            su = np.load(bdir / f"blk{k}_su.npy")
+            suw = np.load(bdir / f"blk{k}_suw.npy")
+            assert suw.dtype == np.dtype(dtype)
+            got.update(zip(su.tolist(), suw))
+        assert got.keys() == want.keys()
+        exp = np.array([want[v] for v in sorted(want)]).astype(dtype)
+        act = np.array([got[v] for v in sorted(want)], dtype=dtype)
+        assert np.array_equal(exp.view(f"u{exp.itemsize}"),
+                              act.view(f"u{act.itemsize}"))
+    with pytest.raises(RuntimeError, match="vertex aggregate"):
+        _build_csr_blocks(edges, 4, None, "float64", len(pairs) + 1)
 
 
 def test_resume_csr_block_identical(spark, tmp_path, big_edges_df):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from ps_pagerank_spark.operators.graph import vertices_id_range
 from ps_pagerank_spark.operators.pagerank import pagerank, top_k_ranks
@@ -59,6 +60,53 @@ def test_big_graph_ghost_vertex(spark, big_edges_df, dangling_mode):
     assert res.iterations == want_iters
     if dangling_mode == "none":
         assert abs(got[0] - 0.15 / BIG_N) < 1e-12
+
+
+@pytest.mark.parametrize("dangling_mode", ["none", "redistribute"])
+def test_big_graph_ghost_vertex_csr_block(spark, big_edges_df, dangling_mode):
+    """csr_block twin of test_big_graph_ghost_vertex: the explicit
+    vertices= universe holds isolated ids (vertex 0 and three ids past
+    every edge endpoint). They exist only in the universe, never in an
+    edge, so the state, the dangling seed and N all come from it while the
+    blocks are built from the raw edges."""
+    n = BIG_N + 3
+    verts = vertices_id_range(spark, big_edges_df).union(
+        spark.range(BIG_N, n).select(F.col("id").alias("vertex_id"))
+    )
+    res = pagerank(
+        spark, big_edges_df, vertices=verts, dangling_mode=dangling_mode,
+        kernel="csr_block", fixed_iterations=15, num_partitions=4,
+    )
+    got = _ranks_np(res, n)
+    want, _ = pagerank_ref(
+        BIG_EDGES, n, fixed_iterations=15, dangling_mode=dangling_mode
+    )
+    assert res.kernel == "csr_block" and res.iterations == 15
+    assert np.allclose(got, want, rtol=0, atol=1e-12)
+    isolated = [0, BIG_N, BIG_N + 1, BIG_N + 2]
+    if dangling_mode == "none":
+        assert all(abs(got[v] - 0.15 / n) < 1e-15 for v in isolated)
+
+
+def test_prep_job_count(spark, big_edges_df):
+    """The prep is one shared vertex aggregate plus one materialization
+    per kernel (weighted edges or the block build), so a one-iteration
+    run costs a fixed number of Spark jobs per kernel (counted by job
+    group); an extra pass over the edges shows up here."""
+    sc = spark.sparkContext
+    counts = {}
+    for kernel in ("join", "csr_block"):
+        group = f"prep-jobs-{kernel}"
+        sc.setJobGroup(group, group)
+        try:
+            pagerank(
+                spark, big_edges_df, kernel=kernel, fixed_iterations=1,
+                dangling_mode="redistribute", num_partitions=4,
+            )
+        finally:
+            sc.setJobGroup("", "")
+        counts[kernel] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert counts == {"join": 12, "csr_block": 13}
 
 
 def test_fixed_iterations(spark, big_edges_df):
