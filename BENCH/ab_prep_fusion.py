@@ -5,7 +5,7 @@
 Imports the engine from <checkout>, runs
 pagerank(kernel="csr_block", fixed_iterations=3,
 dangling_mode="redistribute") on a local[4] session over a seeded
-synth_powerlaw_edges graph (AB_VERTICES=100000, AB_EDGES=1200000 before
+synth_powerlaw_edges graph (100,000 vertices, 1,200,000 edges before
 dedup) and prints one JSON line with prep_s, blocks_s and their sum. The
 ranks, dense by vertex id, go to <ranks.npy> so the arms can be compared.
 Alternate two checkouts across invocations for an interleaved A/B
@@ -21,6 +21,9 @@ import sys
 import numpy as np
 import pandas as pd
 
+N_VERTICES = 100_000
+N_EDGES = 1_200_000
+
 
 def main(checkout: str, out: str) -> None:
     sys.path.insert(0, os.path.abspath(checkout))
@@ -28,9 +31,7 @@ def main(checkout: str, out: str) -> None:
     from ps_pagerank_spark.operators.pagerank import pagerank
     from ps_pagerank_spark.sources.pages import synth_powerlaw_edges
 
-    n_v = int(os.environ.get("AB_VERTICES", "100000"))
-    n_e = int(os.environ.get("AB_EDGES", "1200000"))
-    pairs = np.unique(synth_powerlaw_edges(n_v, n_e, seed=7), axis=0)
+    pairs = np.unique(synth_powerlaw_edges(N_VERTICES, N_EDGES, seed=7), axis=0)
     spark = get_spark(master="local[4]", app_name="ab_prep_fusion")
     edges = spark.createDataFrame(
         pd.DataFrame(pairs, columns=["src_id", "dst_id"])

@@ -33,24 +33,6 @@ SCRIPT_RE = re.compile(r"<script\b.*?</script>", re.DOTALL | re.IGNORECASE)
 STYLE_RE = re.compile(r"<style\b.*?</style>", re.DOTALL | re.IGNORECASE)
 TAG_RE = re.compile(r"<[^>]*>")
 WS_RE = re.compile(r"\s+")
-# hrefs that urljoin returns unchanged (up to the fragment, cut below): an
-# already-absolute lowercase http(s) URL with a host, in printable ASCII
-# without ';', '[' or ']'. urljoin would re-serialize anything else:
-# urlsplit strips whitespace and controls and validates non-ASCII and
-# [v6] hosts, and urlunparse drops an empty ';' params or '?' query.
-_PLAIN_ABS_RE = re.compile(
-    r"https?://[^\x00-\x20/?#;\[\]\x7f-\U0010ffff]+"
-    r"(?:[/?#][^\x00-\x20;\[\]\x7f-\U0010ffff]*)?"
-)
-_EMPTY_QUERY_RE = re.compile(r"\?(?:#|$)")
-
-
-def _resolve(page_url: str, href: str) -> str:
-    """urljoin(page_url, href), skipping urljoin for the plain absolute
-    hrefs it would return as-is (most links on real pages)."""
-    if _PLAIN_ABS_RE.fullmatch(href) and not _EMPTY_QUERY_RE.search(href):
-        return href
-    return urljoin(page_url, href)
 
 
 def extract_links_py(page_url: str, html: bytes | str) -> list[str]:
@@ -62,7 +44,7 @@ def extract_links_py(page_url: str, html: bytes | str) -> list[str]:
     out: list[str] = []
     seen: set[str] = set()
     for href in HREF_RE.findall(html):
-        absu = _resolve(page_url, href)
+        absu = urljoin(page_url, href)
         if not (absu.startswith("http://") or absu.startswith("https://")):
             continue
         absu = absu.split("#", 1)[0]

@@ -15,7 +15,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from ps_pagerank_spark.functions.extract import (
-    HREF_RE,
     extract_links,
     extract_links_py,
     extract_text_py,
@@ -198,92 +197,3 @@ def test_partition_invariance(spark):
         assert base.keys() == other.keys()
         for k in base:
             assert math.isclose(base[k], other[k], rel_tol=0, abs_tol=1e-12)
-
-
-def _links_plain_urljoin(page_url, html):
-    """The link spec with urljoin on every href (no fast path)."""
-    from urllib.parse import urljoin
-
-    out, seen = [], set()
-    for href in HREF_RE.findall(html):
-        absu = urljoin(page_url, href)
-        if not absu.startswith(("http://", "https://")):
-            continue
-        absu = absu.split("#", 1)[0]
-        if absu == page_url or not absu:
-            continue
-        if absu not in seen:
-            seen.add(absu)
-            out.append(absu)
-    return out
-
-
-_BASES = ["https://h.org/p/q.html", "http://h.org/p/", "http://h.org"]
-_CRAFTED = [
-    "rel/x.html", "../up.html", "../../a/./b", "./", "", "?q=1", "#top",
-    "//other.net/p", "//h.org/p/q.html", "HTTP://A.com/x", "Https://a.com",
-    "http://a.com/x", "http:rel", "http:/abs", "http:///x",
-    "https://a.com/b?", "https://a.com/b?#f", "https://a.com/b#",
-    "https://a.com/b;", "https://a.com/b;p?q", "https://a.com/b?q;r",
-    "http://a.com/b\tc", "http://a.com/\nb", " http://a.com/lead",
-    "http://a.com/trail ", "http://a.com/\x01x", "http://bücher.de/x",
-    "http://a.com/é", "http://[::1]/v6", "http://[v6/bad", "http://a]b/",
-    "mailto:x@y.z", "javascript:void(0)", "ftp://a.com/f",
-    "https://h.org/p/q.html", "https://h.org/p/q.html#frag",
-    "http://h.org/p/q.html", "http://h.org", "http://h.org/",
-    "http://user:pw@a.com:8080/p?x=1&y=2#z", "http://a.com/p/../q",
-]
-
-
-def _check_links_against_plain_urljoin(base, hrefs):
-    html = "".join(f'<a class="k" href="{h}">x</a>' for h in hrefs)
-    try:
-        want = _links_plain_urljoin(base, html)
-    except ValueError as e:  # urljoin rejects some hosts: so must the spec
-        with pytest.raises(ValueError, match=str(e)[:20]):
-            extract_links_py(base, html)
-        return
-    assert extract_links_py(base, html) == want
-    assert extract_links_py(base, html.encode()) == want
-
-
-def test_absolute_href_fast_path_matches_urljoin():
-    """extract_links_py skips urljoin for plain absolute http(s) hrefs;
-    over crafted hrefs (relative and ../ paths, //host, uppercase schemes,
-    http: on an https base, empty ?/#/;, tab/newline, non-ASCII and [v6]
-    hosts, mailto:, self-links) its output must equal the spec with
-    urljoin on every href, one href per page and all of them together."""
-    for base in _BASES:
-        for h in _CRAFTED:
-            _check_links_against_plain_urljoin(base, [h])
-        ok = [h for h in _CRAFTED if "[" not in h and "]" not in h]
-        _check_links_against_plain_urljoin(base, ok)
-
-
-def test_absolute_href_fast_path_property():
-    """Generated hrefs (scheme + host + a tail mixed from the characters
-    urljoin treats specially) must resolve exactly as plain urljoin
-    does."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    scheme = st.sampled_from(
-        ["http://", "https://", "HTTP://", "//", "", "http:", "mailto:",
-         "../", "/"]
-    )
-    host = st.sampled_from(
-        ["a.com", "h.org", "a.com:8080", "u@a.com", "[::1]", "bü.de", ""]
-    )
-    tail = st.lists(
-        st.sampled_from(["/", "p", "?", "#", ";", "/p;", "x=1", "..", "\t",
-                         "\n", " ", "\x00", "é", "%20", "[", "q.html"]),
-        max_size=4,
-    ).map("".join)
-    href = st.builds("".join, st.tuples(scheme, host, tail))
-
-    @settings(max_examples=2000, deadline=None, derandomize=True)
-    @given(st.sampled_from(_BASES), st.lists(href, max_size=6))
-    def prop(base, hrefs):
-        _check_links_against_plain_urljoin(base, hrefs)
-
-    prop()
