@@ -8,7 +8,7 @@ reps interleaved round-robin (same stall-hygiene as BENCH/ab_loop.py) to
 measure where the per-bucket task payload stops paying for itself.
 
 The measured sweep (raw: BENCH/psweep_sf01_r5.json) backs the
-``_auto_partitions`` tiny-graph floor in operators/pagerank.py —
+``_auto_partitions`` tiny-graph floor in operators/partitioning.py —
 P = ceil(n_edges / 400k), applied only when Catalyst stats prove the
 input small.
 

@@ -88,9 +88,11 @@ _TEXT_SCHEMA = T.StructType(
 def extract_links(pages: DataFrame, html_col: str = "html") -> DataFrame:
     """pages(url, html, …) → links(src_url, dst_url), order-free.
 
-    Vectorized: ``mapInPandas`` processes Arrow batches of (url, html); the
-    regex scan runs via pandas ``str`` ops per batch. Catalyst prunes the
-    scan to exactly (url, html) — no other page columns are read.
+    ``mapInPandas`` streams Arrow batches of (url, html), which batches
+    the JVM↔Python transfer; inside a batch the scan is NOT vectorized —
+    a per-page Python loop calls ``extract_links_py`` (regex over the
+    html, ``urljoin`` per href). Catalyst prunes the scan to exactly
+    (url, html) — no other page columns are read.
     """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

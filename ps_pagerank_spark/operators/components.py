@@ -9,13 +9,22 @@ size rather than graph diameter.
 
 Each round is two groupBy-min aggregations + distinct — all shuffle-friendly
 hash ops on (u, v) pairs; no per-row Python anywhere. Lineage is truncated
-per round with localCheckpoint. Convergence = edge multiset fixed point,
-detected with a (count, xxhash64-sum) signature — one tiny scalar action per
-round; exactness is guaranteed by the algorithm (signature collision would
-only delay, not corrupt: the fixed point re-checks next round).
+per round with localCheckpoint(eager=False), which runs no action of its
+own: the round's convergence signature — a (count, xxhash64 bit_xor)
+scalar aggregate — is the one action that computes and stores the new
+edge set (the PageRank loop's pattern; an eager checkpoint would add a
+second pass per round). Convergence = edge set fixed point;
+exactness is guaranteed by the algorithm (signature collision would only
+delay, not corrupt: the fixed point re-checks next round). Hitting
+``max_rounds`` before the fixed point raises instead of returning a
+partly contracted labelling.
+
+Shuffles are sized by operators.partitioning.partition_scope (PageRank's
+rule: the session default, floored to the input size when Catalyst proves
+it small), and the output is materialized inside that scope.
 
 Output labels are the minimum vertex id of each component (exact, checked
-against a union-find oracle in tests/test_components.py).
+against a union-find oracle in tests/test_graph_algos.py).
 """
 
 from __future__ import annotations
@@ -26,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ps_pagerank_spark.operators.graph import vertices_from_edges
+from ps_pagerank_spark.operators.partitioning import partition_scope
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -111,30 +121,39 @@ def connected_components(
 ) -> ComponentsResult:
     """edges(src_id, dst_id) → (vertex_id, component) with component =
     min vertex id; isolated vertices (in `vertices` but no edges) are their
-    own component."""
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    verts = vertices if vertices is not None else vertices_from_edges(edges)
-    e = _symmetrize(edges).repartition(P, "u").localCheckpoint(eager=True)
-    sig = _signature(e)
-    rounds = 0
-    while rounds < max_rounds:
-        rounds += 1
-        e2 = _small_star(_large_star(e)).repartition(P, "u").localCheckpoint(
-            eager=True
+    own component. Raises RuntimeError if the edge set has not reached its
+    fixed point after ``max_rounds`` rounds."""
+    with partition_scope(spark, edges, num_partitions) as (P, _):
+        verts = vertices if vertices is not None else vertices_from_edges(edges)
+        e = _symmetrize(edges).repartition(P, "u").localCheckpoint(eager=False)
+        sig = _signature(e)
+        for rounds in range(1, max_rounds + 1):
+            e2 = _small_star(_large_star(e)).repartition(P, "u").localCheckpoint(
+                eager=False
+            )
+            sig2 = _signature(e2)  # the action that materializes e2
+            e.unpersist()
+            e = e2
+            if sig2 == sig:
+                break
+            sig = sig2
+        else:
+            raise RuntimeError(
+                f"connected_components: no fixed point after {max_rounds} "
+                "rounds; the labelling is only partly contracted "
+                "(raise max_rounds)"
+            )
+        # at the fixed point e is a star forest: u → root (root = component
+        # min). Materialized here, so it runs at P, not the restored width.
+        roots = e.groupBy("u").agg(F.min("v").alias("component"))
+        comp = (
+            verts.join(roots, verts.vertex_id == roots.u, "left")
+            .select(
+                "vertex_id",
+                F.coalesce(F.col("component"), F.col("vertex_id")).alias(
+                    "component"
+                ),
+            )
+            .localCheckpoint(eager=True)
         )
-        sig2 = _signature(e2)
-        e.unpersist()
-        e = e2
-        if sig2 == sig:
-            break
-        sig = sig2
-    # at the fixed point e is a star forest: u → root (root = component min).
-    roots = e.groupBy("u").agg(F.min("v").alias("component"))
-    comp = (
-        verts.join(roots, verts.vertex_id == roots.u, "left")
-        .select(
-            "vertex_id",
-            F.coalesce(F.col("component"), F.col("vertex_id")).alias("component"),
-        )
-    )
     return ComponentsResult(components=comp, rounds=rounds)

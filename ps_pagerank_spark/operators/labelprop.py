@@ -14,6 +14,8 @@ Physical plan per round: join labels to edges on one side (shuffle-hash /
 sort-merge on vertex key), count (vertex, label) pairs (hash agg with
 map-side partials), pick argmax per vertex with a (count DESC, label ASC)
 row_number window partitioned by vertex — no global sort, no Python.
+Shuffles are sized by operators.partitioning.partition_scope (PageRank's
+rule), and every round is materialized inside that scope.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ps_pagerank_spark.operators.components import _symmetrize
 from ps_pagerank_spark.operators.graph import vertices_from_edges
+from ps_pagerank_spark.operators.partitioning import partition_scope
 
 
 def label_propagation(
@@ -35,36 +38,35 @@ def label_propagation(
 ) -> DataFrame:
     """edges(src_id, dst_id) → (vertex_id long, label long) after
     `iterations` synchronous rounds."""
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    verts = (vertices if vertices is not None else vertices_from_edges(edges)).select(
-        "vertex_id"
-    )
-    und = _symmetrize(edges).repartition(P, "v").persist()
-    und.count()
-    labels = verts.select("vertex_id", F.col("vertex_id").alias("label"))
-    labels = labels.repartition(P, "vertex_id").localCheckpoint(eager=True)
-    w = Window.partitionBy("u").orderBy(F.desc("cnt"), F.asc("label"))
-    for _ in range(iterations):
-        neigh_labels = (
-            und.join(labels, und.v == labels.vertex_id)
-            .groupBy("u", "label")
-            .agg(F.count("*").alias("cnt"))
-        )
-        top = (
-            neigh_labels.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(F.col("u").alias("vertex_id"), F.col("label").alias("_new"))
-        )
-        new_labels = (
-            labels.join(top, "vertex_id", "left")
-            .select(
-                "vertex_id",
-                F.coalesce(F.col("_new"), F.col("label")).alias("label"),
+    with partition_scope(spark, edges, num_partitions) as (P, _):
+        verts = vertices if vertices is not None else vertices_from_edges(edges)
+        verts = verts.select("vertex_id")
+        und = _symmetrize(edges).repartition(P, "v").persist()
+        und.count()
+        labels = verts.select("vertex_id", F.col("vertex_id").alias("label"))
+        labels = labels.repartition(P, "vertex_id").localCheckpoint(eager=True)
+        w = Window.partitionBy("u").orderBy(F.desc("cnt"), F.asc("label"))
+        for _ in range(iterations):
+            neigh_labels = (
+                und.join(labels, und.v == labels.vertex_id)
+                .groupBy("u", "label")
+                .agg(F.count("*").alias("cnt"))
             )
-            .repartition(P, "vertex_id")
-            .localCheckpoint(eager=True)
-        )
-        labels.unpersist()
-        labels = new_labels
-    und.unpersist()
+            top = (
+                neigh_labels.withColumn("rn", F.row_number().over(w))
+                .filter(F.col("rn") == 1)
+                .select(F.col("u").alias("vertex_id"), F.col("label").alias("_new"))
+            )
+            new_labels = (
+                labels.join(top, "vertex_id", "left")
+                .select(
+                    "vertex_id",
+                    F.coalesce(F.col("_new"), F.col("label")).alias("label"),
+                )
+                .repartition(P, "vertex_id")
+                .localCheckpoint(eager=True)
+            )
+            labels.unpersist()
+            labels = new_labels
+        und.unpersist()
     return labels

@@ -68,7 +68,6 @@ import math
 import os
 import shutil
 import tempfile
-import threading
 import time
 import uuid
 import warnings
@@ -80,23 +79,11 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ps_pagerank_spark.operators.partitioning import partition_scope
+
 D_DEFAULT = 0.85
 EPS_DEFAULT = 1e-8  # c-single-threaded/pagerank.c:19
 
-# Enforces the documented single-tenant session contract: pagerank() pins
-# session-wide SQLConf (shuffle partitions; loop AQE) and restores it in
-# ``finally``, so two OVERLAPPING calls on the same SparkSession would
-# silently corrupt each other's conf (last-writer-wins restore). Rather
-# than corrupt, fail loudly and point at spark.newSession().
-_ACTIVE_SESSIONS: set[str] = set()
-_ACTIVE_LOCK = threading.Lock()
-
-
-def _session_key(spark: SparkSession) -> str:
-    try:  # one SQLConf per JVM session — the thing the pins actually mutate
-        return str(spark._jsparkSession.sessionUUID())
-    except Exception:  # pragma: no cover — connect/mocked sessions
-        return str(id(spark))
 # loop_aqe="auto", csr_block kernel: disable AQE inside the iteration loop
 # only when the rank state carries at least this many rows per partition —
 # below it the P fixed tiny tasks cost more than the two removed
@@ -116,57 +103,11 @@ def _loop_aqe_off(loop_aqe: str, kernel: str, n: int, P: int) -> bool:
     return kernel == "join" or n >= LOOP_AQE_MIN_ROWS_PER_PARTITION * P
 
 
-# Tiny-graph loop-partition floor (measured sweep, BENCH/BASELINE.md §4):
-# at the session's cores-tracking default P, a small graph runs P
-# near-empty tasks per loop stage AND duplicates each dst's partial
-# across up to P source buckets. Sizing P to the data (~400k edges per
-# bucket) cut the sf0.1 (1.62M-edge) best-rep median iteration
-# 0.451 -> 0.360 s (csr_block, P=2) and 0.254 -> 0.193 s (join, P=8).
-# Applied only when num_partitions is not given AND the input is provably
-# small: the decision reads Catalyst's sizeInBytes (free — no scan) and
-# only pays an exact count() when that estimate is already under
-# SMALL_GRAPH_STATS_BYTES. Unpersisted multi-join inputs carry wild
-# product-of-children overestimates and RDD-backed frames report
-# defaultSizeInBytes (Long.Max) — both conservatively keep the session
-# default, so a 100 TB input can never be mis-sized down.
-LOOP_EDGES_PER_BUCKET = 400_000
-SMALL_GRAPH_STATS_BYTES = 256 << 20
-
 # blob dense combine: one float64 accumulator slot (plus a bool presence
 # flag) per id in a dst range, so one range costs 9 B/slot — at most
 # 2**26 slots = 512 MiB acc + 64 MiB mask per combine task. Wider ranges
 # (exotic sparse ids) take the sort-based combine instead.
 _BLOB_DENSE_MAX = 1 << 26
-
-
-def _catalyst_small_count(edges: DataFrame) -> "int | None":
-    """Exact edge count IF Catalyst's free sizeInBytes estimate proves the
-    input small (< SMALL_GRAPH_STATS_BYTES), else None. Unknown sizes
-    (RDD-backed frames report defaultSizeInBytes = Long.Max) and anything
-    large return None — a 100 TB input never pays the count() and is never
-    treated as small."""
-    try:
-        # fresh Dataset handle: a memoized QueryExecution on `edges` may
-        # predate a persist() and still carry the un-cached estimate
-        est = int(str(
-            edges.select("*")._jdf.queryExecution().optimizedPlan()
-            .stats().sizeInBytes()
-        ))
-    except Exception:  # internal stats API unavailable: treat as unknown
-        return None
-    if est >= SMALL_GRAPH_STATS_BYTES:
-        return None
-    return edges.count()  # provably small -> exact count is cheap
-
-
-def _auto_partitions(default_p: int, small_n: "int | None") -> int:
-    """Loop partition count when the caller didn't pin one: the session
-    default, floored to ceil(n_edges / LOOP_EDGES_PER_BUCKET) for inputs
-    that are provably tiny (small_n from _catalyst_small_count). Never
-    raises P above the session default."""
-    if default_p <= 1 or small_n is None:
-        return default_p
-    return max(1, min(default_p, -(-small_n // LOOP_EDGES_PER_BUCKET)))
 
 
 @dataclass
@@ -261,8 +202,8 @@ def pagerank(spark: SparkSession, edges: DataFrame, **kwargs) -> PageRankResult:
     unknown kwargs still raise TypeError).
 
     kernel defaults to "auto": the join kernel when the input is PROVABLY
-    small (the same conservative Catalyst-stats probe _auto_partitions
-    uses), the csr_block kernel otherwise. Measured crossover
+    small (the conservative Catalyst-stats probe partition_scope runs
+    for the partition floor), the csr_block kernel otherwise. Measured crossover
     (BENCH/BASELINE.md §4): below the block-store amortization point the
     join kernel wins outright (sf0.1: 0.19 vs 0.36 s/iter, plus csr_block
     pays a 1-3 s store build the short loop never recoups), while at and
@@ -271,13 +212,12 @@ def pagerank(spark: SparkSession, edges: DataFrame, **kwargs) -> PageRankResult:
     property that holds on a 1000-executor cluster). Unknown-size inputs
     resolve to csr_block: at 100 TB "unknown" is never small.
 
-    P defaults to the session's shuffle-partition count, floored to
-    ceil(n_edges / LOOP_EDGES_PER_BUCKET) when the input is provably tiny
-    (see _auto_partitions — a conservative Catalyst-stats probe; explicit
-    ``num_partitions`` always wins). ``spark.sql.shuffle.partitions`` is
-    then pinned to P for the duration of the run (and restored after,
-    even on failure): the contribs
-    aggregation then lands on hash(dst_id, P), the same partitioning the
+    P comes from operators.partitioning.partition_scope, the sizing rule
+    every graph operator shares: the session's shuffle-partition count,
+    floored to ceil(n_edges / LOOP_EDGES_PER_BUCKET) when the input is
+    provably tiny (explicit ``num_partitions`` always wins), pinned as
+    ``spark.sql.shuffle.partitions`` for the duration of the run and
+    restored after, even on failure. The contribs aggregation then lands on hash(dst_id, P), the same partitioning the
     rank state carries, so the per-iteration update join streams BOTH
     sides with no re-exchange of the rank vector. With a mismatched conf
     the planner inserts an extra full Exchange of (vertex_id, rank) every
@@ -304,46 +244,19 @@ def pagerank(spark: SparkSession, edges: DataFrame, **kwargs) -> PageRankResult:
     shares the SparkContext/cache with isolated SQLConf) and build its
     DataFrames there; an edges DataFrame is bound to the session that
     created it, which is why this function cannot transparently clone.
-    Overlapping pagerank() calls on ONE session are rejected loudly
+    Overlapping calls on ONE session — of pagerank() or of any other
+    graph operator that enters partition_scope — are rejected loudly
     (RuntimeError) instead of silently corrupting each other's conf.
     """
-    skey = _session_key(spark)
-    with _ACTIVE_LOCK:
-        if skey in _ACTIVE_SESSIONS:
-            raise RuntimeError(
-                "pagerank() is already running on this SparkSession; the "
-                "run pins session-wide SQLConf (single-tenant contract). "
-                "Run the second job on spark.newSession() and build its "
-                "edges DataFrame there."
-            )
-        _ACTIVE_SESSIONS.add(skey)
-    try:
-        return _pagerank_conf_scoped(spark, edges, **kwargs)
-    finally:
-        with _ACTIVE_LOCK:
-            _ACTIVE_SESSIONS.discard(skey)
-
-
-def _pagerank_conf_scoped(
-    spark: SparkSession, edges: DataFrame, **kwargs
-) -> PageRankResult:
-    prev_p = spark.conf.get("spark.sql.shuffle.partitions")
     kernel = kwargs.get("kernel", "auto")
-    # one shared probe serves both auto decisions (at most one count())
-    need_probe = kernel == "auto" or (
-        not kwargs.get("num_partitions") and int(prev_p) > 1
-    )
-    small_n = _catalyst_small_count(edges) if need_probe else None
-    if kernel == "auto":
-        kernel = "join" if small_n is not None else "csr_block"
-    P = kwargs.get("num_partitions") or _auto_partitions(int(prev_p), small_n)
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(P))
+    with partition_scope(
+        spark, edges, kwargs.get("num_partitions"), probe=kernel == "auto"
+    ) as (P, small_n):
+        if kernel == "auto":
+            kernel = "join" if small_n is not None else "csr_block"
         return _pagerank_impl(
             spark, edges, **{**kwargs, "kernel": kernel, "num_partitions": P}
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_p)
 
 
 def _pagerank_impl(

@@ -24,7 +24,9 @@ through the widest shuffle. Validity bound: vertex ids < 2^32 (the
 dictionary encoder emits dense 0..N−1, so this holds to 4.3B vertices).
 
 All joins are equi-joins Catalyst can plan (sort-merge / shuffled-hash /
-broadcast by stats + AQE).
+broadcast by stats + AQE). Shuffles are sized by
+operators.partitioning.partition_scope (PageRank's rule), and the output
+is materialized inside that scope.
 """
 
 from __future__ import annotations
@@ -33,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ps_pagerank_spark.operators.graph import vertices_from_edges
+from ps_pagerank_spark.operators.partitioning import partition_scope
 
 
 def triangle_counts(
@@ -43,7 +46,13 @@ def triangle_counts(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """edges(src_id, dst_id) → (vertex_id long, triangles long)."""
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with partition_scope(spark, edges, num_partitions) as (P, _):
+        return _triangle_counts(edges, vertices, P)
+
+
+def _triangle_counts(
+    edges: DataFrame, vertices: DataFrame | None, P: int
+) -> DataFrame:
     verts = (vertices if vertices is not None else vertices_from_edges(edges)).select(
         "vertex_id"
     )

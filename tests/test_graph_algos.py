@@ -3,6 +3,8 @@ and a seeded random digraph (FIXTURES.md §4)."""
 
 from __future__ import annotations
 
+import time
+
 import numpy as np
 import pytest
 
@@ -86,12 +88,96 @@ def test_triangles_direction_invariant(spark):
 def test_triangles_guard_rejects_non_dense_ids(spark):
     """The (deg, id)-packing precondition (0 <= id < 2^32) is enforced IN
     the plan via raise_error: feeding raw non-dictionary-encoded ids must
-    fail loudly instead of silently returning wrong counts."""
+    fail loudly instead of silently returning wrong counts — and the
+    shuffle-partition pin is restored when it fires, whether P was given
+    or sized to the (provably small, cached) input."""
+    session_p = spark.conf.get("spark.sql.shuffle.partitions")
     bad = edges_from_pairs(
         spark, [(2**32 + 5, 1), (1, 2), (2, 2**32 + 5)]
     )
     with pytest.raises(Exception, match="dictionary-dense"):
         triangle_counts(spark, bad, num_partitions=4).collect()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == session_p
+    bad = bad.cache()
+    bad.count()
+    with pytest.raises(Exception, match="dictionary-dense"):
+        triangle_counts(spark, bad).collect()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == session_p
+    bad.unpersist()
+
+
+def _job_task_counts(sc, group):
+    """(jobs, completed tasks) of one job group. Job-end events reach the
+    status store asynchronously, so poll until no job is still running."""
+    st = sc.statusTracker()
+    deadline = time.monotonic() + 10.0
+    while True:
+        jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+        done = all(j is not None and j.status != "RUNNING" for j in jobs)
+        if done or time.monotonic() > deadline:
+            break
+        time.sleep(0.05)
+    stage_ids = {s for j in jobs if j is not None for s in j.stageIds}
+    stages = [st.getStageInfo(s) for s in stage_ids]
+    return len(jobs), sum(s.numCompletedTasks for s in stages if s is not None)
+
+
+def test_auto_sized_graph_ops(spark):
+    """With no num_partitions, CC, label propagation and triangles size
+    their shuffles to a provably small input (PageRank's partition floor:
+    P = 1 here, not the session's 32), stay exact, and restore
+    spark.sql.shuffle.partitions on return. The job and task counts pin
+    the sized plans: a stage back at the session width, a second job per
+    CC round, or a lazy output left to run after the scope shows up
+    here."""
+    sc = spark.sparkContext
+    session_p = spark.conf.get("spark.sql.shuffle.partitions")
+    assert int(session_p) > 1
+    edges, n = random_graph()
+    df = edges_from_pairs(spark, edges).cache()
+    df.count()  # materialized cache: Catalyst knows its exact size
+    verts = spark.range(n).selectExpr("id AS vertex_id").cache()
+    verts.count()
+    universe = list(range(n))
+    runs = {
+        "cc": lambda: connected_components(spark, df, vertices=verts),
+        "lpa": lambda: label_propagation(
+            spark, df, vertices=verts, iterations=2
+        ),
+        "tri": lambda: triangle_counts(spark, df, vertices=verts),
+    }
+    got, counts = {}, {}
+    for name, run in runs.items():
+        group = f"auto-sized-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            out = run()
+        finally:
+            sc.setJobGroup("", "")
+        counts[name] = _job_task_counts(sc, group)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == session_p
+        rows = (out.components if name == "cc" else out).collect()
+        got[name] = {r[0]: r[1] for r in rows}
+    assert got["cc"] == components_ref(edges, universe)
+    assert got["lpa"] == label_propagation_ref(edges, universe, 2)
+    assert got["tri"] == triangles_ref(edges, universe)
+    assert counts == {"cc": (39, 61), "lpa": (19, 32), "tri": (23, 46)}
+    df.unpersist()
+    verts.unpersist()
+
+
+def test_components_max_rounds_raises(spark):
+    """A 64-vertex path needs several large-star/small-star rounds; a
+    round cap below that must raise instead of returning a partly
+    contracted labelling, while the default cap reaches one component."""
+    path = [(i, i + 1) for i in range(63)]
+    df = edges_from_pairs(spark, path)
+    with pytest.raises(RuntimeError, match="no fixed point after 1 rounds"):
+        connected_components(spark, df, max_rounds=1, num_partitions=4)
+    res = connected_components(spark, df, num_partitions=4)
+    got = {r["vertex_id"]: r["component"] for r in res.components.collect()}
+    assert got == {v: 0 for v in range(64)}
+    assert res.rounds > 1
 
 
 def test_graph_job_cli_dispatch(spark, tmp_path):

@@ -279,6 +279,7 @@ def test_kernel_auto_survives_catalyst_drift(spark, big_edges_df, tmp_path,
     the scale path — csr_block at the session's P — and still produce the
     join kernel's scores, never fail or mis-size the run."""
     from ps_pagerank_spark.operators import pagerank as pr
+    from ps_pagerank_spark.operators import partitioning
 
     pdir = str(tmp_path / "edges_drift_parquet")
     big_edges_df.write.parquet(pdir)
@@ -299,7 +300,7 @@ def test_kernel_auto_survives_catalyst_drift(spark, big_edges_df, tmp_path,
         return real_select(*cols)
 
     monkeypatch.setattr(edges, "select", select)
-    assert pr._catalyst_small_count(edges) is None
+    assert partitioning._catalyst_small_count(edges) is None
 
     seen = {}
     real_impl = pr._pagerank_impl

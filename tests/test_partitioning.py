@@ -156,11 +156,11 @@ def test_auto_partitions_tiny_graph_floor(spark, big_edges_df, tmp_path):
     keep the default, so a huge input can never be mis-sized down."""
     import math as _math
 
-    from ps_pagerank_spark.operators.pagerank import (
+    from ps_pagerank_spark.operators.pagerank import pagerank
+    from ps_pagerank_spark.operators.partitioning import (
         LOOP_EDGES_PER_BUCKET,
         _auto_partitions,
         _catalyst_small_count,
-        pagerank,
     )
 
     # parquet-backed: exact file-size stats -> provably small -> floor
@@ -192,19 +192,29 @@ def test_auto_partitions_tiny_graph_floor(spark, big_edges_df, tmp_path):
 def test_overlapping_pagerank_on_one_session_rejected(spark, big_edges_df):
     """pagerank() pins session-wide SQLConf; a second overlapping call on
     the SAME session must fail loudly (single-tenant contract) instead of
-    silently corrupting the first run's conf — and the guard must clear
-    even when the inner run raises."""
+    silently corrupting the first run's conf — and so must CC, label
+    propagation and triangles, which pin the same conf through the same
+    scope. The guard must clear even when the inner run raises."""
     import pytest as _pytest
 
     from ps_pagerank_spark.operators import pagerank as pr
+    from ps_pagerank_spark.operators.components import connected_components
+    from ps_pagerank_spark.operators.labelprop import label_propagation
+    from ps_pagerank_spark.operators.triangles import triangle_counts
 
     inner_calls = []
     real_impl = pr._pagerank_impl
 
     def overlapping_impl(s, e, **kw):
         inner_calls.append(kw["kernel"])
-        with _pytest.raises(RuntimeError, match="already running"):
-            pr.pagerank(s, e, fixed_iterations=1)
+        for op in (
+            lambda: pr.pagerank(s, e, fixed_iterations=1),
+            lambda: connected_components(s, e),
+            lambda: label_propagation(s, e, iterations=1),
+            lambda: triangle_counts(s, e, num_partitions=4),
+        ):
+            with _pytest.raises(RuntimeError, match="already running"):
+                op()
         return real_impl(s, e, **kw)
 
     pr._pagerank_impl = overlapping_impl
