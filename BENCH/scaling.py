@@ -38,13 +38,6 @@ N_EDGES = int(os.environ.get("SCALING_EDGES", "32000000"))
 N_VERTS = N_EDGES // 16
 ITERS = int(os.environ.get("SCALING_ITERS", "8"))
 KERNEL = os.environ.get("SCALING_KERNEL", "join")
-# gather="shuffle": the plan that holds at ANY vertex count (the broadcast
-# gather's serial rank-vector build would cap strong scaling and is not
-# what a 1000-executor run would use at 10^12-doc scale)
-GATHER = os.environ.get("SCALING_GATHER", "shuffle")
-# csr_block arithmetic/transfer precision (the reference's opencl-float
-# analog): float32 halves block-read AND state/partial-transfer bytes
-DTYPE = os.environ.get("SCALING_DTYPE", "float64")
 # "strong": same input at every level (classic speedup; on one box the
 # shared memory bus punishes high levels). "weak": input scales with the
 # level (constant work per core, n_edges = SCALING_EDGES * cpus / 4) — the
@@ -116,8 +109,6 @@ def run_level(cpus: int) -> dict:
         fixed_iterations=ITERS,
         dangling_mode="redistribute",
         kernel=KERNEL,
-        gather=GATHER,
-        dtype=DTYPE,
         num_partitions=FIXED_P or max(cpus * 2, 8),
     )
     res.ranks.count()
@@ -176,8 +167,6 @@ def main() -> None:
     sums = {c: r["rank_sum"] for c, r in results.items()}
     out = {
         "kernel": KERNEL,
-        "gather": GATHER,
-        "dtype": DTYPE,
         "mode": MODE,
         "P": {str(c): r["P"] for c, r in results.items()},
         "n_edges": results[LEVELS[0]]["n_edges"],

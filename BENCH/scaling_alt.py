@@ -97,7 +97,6 @@ def main() -> None:
     out = {
         "protocol": "alternating",
         "kernel": os.environ.get("SCALING_KERNEL", "join"),
-        "dtype": os.environ.get("SCALING_DTYPE", "float64"),
         "n_edges": n_edges,
         "P": runs[LO][0]["P"],
         "rounds": ROUNDS,

@@ -12,7 +12,7 @@ Build engine.zip with ``python -m zipfile -c engine.zip ps_pagerank_spark``
 
 Pipeline (SURVEY.md §3.4):
     pages ──extract_links──▶ links ──dict encode──▶ edges  [catalog]
-    edges ──pagerank (join kernel, auto gather, hub split)──▶ ranks
+    edges ──pagerank (auto kernel: join or csr_block, hub split)──▶ ranks
     per-iteration metrics + lineage → catalog "metrics" table
 """
 
@@ -44,9 +44,6 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         help="'auto' picks join for provably-small inputs, csr_block "
         "otherwise (measured crossover, BENCH/BASELINE.md §4)",
     )
-    ap.add_argument(
-        "--gather", choices=["auto", "shuffle", "broadcast"], default="auto"
-    )
     ap.add_argument("--hub-threshold", type=int, default=None)
     ap.add_argument(
         "--block-dir",
@@ -55,7 +52,6 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         "pyarrow.fs URI); a resumed csr_block run reattaches it when the "
         "manifest matches instead of rebuilding",
     )
-    ap.add_argument("--dtype", choices=["float64", "float32"], default="float64")
     ap.add_argument(
         "--num-partitions",
         type=int,
@@ -103,10 +99,8 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         eps=args.eps,
         dangling_mode=args.dangling,
         kernel=args.kernel,
-        gather=args.gather,
         hub_threshold=args.hub_threshold,
         block_dir=args.block_dir,
-        dtype=args.dtype,
         num_partitions=args.num_partitions,
         checkpoint=cat if args.checkpoint_every else None,
         checkpoint_every=args.checkpoint_every,

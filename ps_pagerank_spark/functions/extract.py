@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ps_pagerank_spark.session import drop_zip_importers
+
 HREF_RE = re.compile(r'<a\s[^>]*href="([^"]*)"')
 SCRIPT_RE = re.compile(r"<script\b.*?</script>", re.DOTALL | re.IGNORECASE)
 STYLE_RE = re.compile(r"<style\b.*?</style>", re.DOTALL | re.IGNORECASE)
@@ -96,6 +98,7 @@ def extract_links(pages: DataFrame, html_col: str = "html") -> DataFrame:
     """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             srcs: list[str] = []
             dsts: list[str] = []
@@ -112,6 +115,7 @@ def extract_texts(pages: DataFrame, html_col: str = "html") -> DataFrame:
     """pages(url, html, …) → (url, text) with the canonical text spec."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             texts = [extract_text_py(h) for h in pdf[html_col].values]
             yield pd.DataFrame({"url": pdf["url"].values, "text": texts})

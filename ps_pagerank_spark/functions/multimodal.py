@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ps_pagerank_spark.session import drop_zip_importers
+
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, n_bytes long, src_url string"
 )
@@ -77,6 +79,7 @@ def extract_media_features(
         raise ValueError(f"unknown decode_mode {decode_mode!r}")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for pdf in batches:
             if decode_mode == "real":
                 raise NotImplementedError(

@@ -80,26 +80,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ps_pagerank_spark.operators.partitioning import partition_scope
+from ps_pagerank_spark.session import drop_zip_importers
 
 D_DEFAULT = 0.85
 EPS_DEFAULT = 1e-8  # c-single-threaded/pagerank.c:19
 
-# loop_aqe="auto", csr_block kernel: disable AQE inside the iteration loop
-# only when the rank state carries at least this many rows per partition —
-# below it the P fixed tiny tasks cost more than the two removed
-# rank-vector exchanges save (measured A/B, BENCH/BASELINE.md §4). The
-# join kernel ignores this (its shuffle-bound loop wins with AQE off at
-# every measured size).
+# csr_block kernel: disable AQE inside the iteration loop only when the
+# rank state carries at least this many rows per partition — below it the
+# P fixed tiny tasks cost more than the two removed rank-vector exchanges
+# save (measured A/B, BENCH/BASELINE.md §4). The join kernel ignores this
+# (its shuffle-bound loop wins with AQE off at every measured size).
 LOOP_AQE_MIN_ROWS_PER_PARTITION = 25_000
 
 
-def _loop_aqe_off(loop_aqe: str, kernel: str, n: int, P: int) -> bool:
+def _loop_aqe_off(kernel: str, n: int, P: int) -> bool:
     """Should AQE be disabled around the iteration loop? (see the comment
     at the call site in _pagerank_impl for the measured rationale)"""
-    if loop_aqe == "off":
-        return True
-    if loop_aqe != "auto":
-        return False
     return kernel == "join" or n >= LOOP_AQE_MIN_ROWS_PER_PARTITION * P
 
 
@@ -270,16 +266,12 @@ def _pagerank_impl(
     fixed_iterations: int | None = None,
     dangling_mode: str = "none",
     kernel: str = "join",
-    gather: str = "auto",
     num_partitions: int | None = None,
     hub_threshold: int | None = None,
-    broadcast_max_vertices: int = 1_000_000,
     checkpoint: "object | None" = None,  # plans.catalog.Catalog
     checkpoint_every: int = 0,
     checkpoint_table: str = "pagerank_ranks",
     block_dir: str | None = None,  # csr_block store (must be executor-visible)
-    dtype: str = "float64",  # csr_block arithmetic: "float64" | "float32"
-    loop_aqe: str = "auto",  # iteration-loop AQE: "auto" | "on" | "off"
     start_state: DataFrame | None = None,  # resume: (vertex_id,dangling,rank)
     start_iter: int = 0,  # resume: iterations already done
     prev_metrics: list | None = None,  # resume: metrics of the prior run
@@ -290,33 +282,15 @@ def _pagerank_impl(
     docstring for semantics and physical design.
 
     start_state resumes from a checkpointed rank vector with IDENTICAL
-    per-kernel semantics: every kernel/gather/hub option works on a
-    resumed run (resume_pagerank routes here). A resumed csr_block run
-    reattaches an existing block_dir when its manifest matches (P, dtype,
-    edge count), else rebuilds the store.
-
-    gather ("join" kernel only):
-      * "shuffle"   — co-partitioned equi-join on src_id; the plan that
-        holds at any vertex count (production default beyond
-        broadcast_max_vertices).
-      * "broadcast" — the rank vector is broadcast every iteration and
-        edges stay persisted partitioned by dst_id, so BOTH the gather
-        join and the scatter groupBy(dst) run without a shuffle of the
-        edge table — one map-side stage per iteration. The per-iteration
-        broadcast build is serial (~16 B/vertex), which caps strong
-        scaling — hence the conservative default threshold. This is the
-        reference's memory model (dense prevR[] visible to every thread,
-        openmp/pagerank.c:285-301) lifted to Spark.
-      * "auto"      — broadcast iff N ≤ broadcast_max_vertices.
+    per-kernel semantics: every kernel/hub option works on a resumed run
+    (resume_pagerank routes here). A resumed csr_block run reattaches an
+    existing block_dir when its manifest matches (P, edge count, content
+    fingerprint), else rebuilds the store.
     """
     if dangling_mode not in ("none", "redistribute"):
         raise ValueError(f"unknown dangling_mode {dangling_mode!r}")
     if kernel not in ("join", "csr_block"):
         raise ValueError(f"unknown kernel {kernel!r}")
-    if gather not in ("auto", "shuffle", "broadcast"):
-        raise ValueError(f"unknown gather {gather!r}")
-    if loop_aqe not in ("auto", "on", "off"):
-        raise ValueError(f"unknown loop_aqe {loop_aqe!r}")
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     # setup cost discipline — ONE shared pass over the edges answers every
     # prep question: vstats (see _vertex_stats) plus one scalar agg over it
@@ -344,14 +318,11 @@ def _pagerank_impl(
             ranks=empty, iterations=0, converged=True, metrics=[],
             kernel=kernel,
         )
-    use_bcast = kernel == "join" and (
-        gather == "broadcast"
-        or (gather == "auto" and n <= broadcast_max_vertices)
-    )
     wedges = None
     if kernel == "join":
         # iteration-invariant side of the gather join: w = 1/L from vstats
-        # (the same Spark division weighted_edges does), materialized once
+        # (the same Spark division weighted_edges does), materialized once,
+        # hash-partitioned on src_id with the state's P (co-partitioned)
         wedges = (
             edges.select("src_id", "dst_id")
             .join(
@@ -361,7 +332,7 @@ def _pagerank_impl(
                 "src_id",
             )
             .select("src_id", "dst_id", (F.lit(1.0) / deg).alias("w"))
-            .repartition(P, "dst_id" if use_bcast else "src_id")
+            .repartition(P, "src_id")
             .persist()
         )
         wedges.count()
@@ -406,11 +377,11 @@ def _pagerank_impl(
             # resume fast path: reattach the prior run's store if its
             # manifest matches this graph (count AND content fingerprint)
             store = _attach_csr_blocks(
-                block_dir, P, dtype, n_edges, fingerprint=edges_fp
+                block_dir, P, n_edges, fingerprint=edges_fp
             )
         if store is None:
             store = _build_csr_blocks(
-                edges, P, block_dir, dtype, n_edges, fingerprint=edges_fp
+                edges, P, block_dir, n_edges, fingerprint=edges_fp
             )
         t_blocks = time.perf_counter() - t0
         align_frac = _alignment_fraction(state, P, n=n)
@@ -432,7 +403,7 @@ def _pagerank_impl(
     # the rank vector. Prep above keeps the session's AQE — its one-shot
     # joins/aggs are what AQE is good at (measured ~2x prep win).
     #
-    # loop_aqe="auto" is kernel-aware (measured A/B, BENCH/BASELINE.md §4):
+    # The gate is kernel-aware (measured A/B, BENCH/BASELINE.md §4):
     # the JOIN kernel's loop is shuffle-bound (gather join + contrib agg +
     # update join), so removing the two rank exchanges wins at EVERY
     # measured size (sf0.1: 0.261 vs 0.389 s/iter; 64M: 3.16 vs 3.31) —
@@ -442,7 +413,7 @@ def _pagerank_impl(
     # 0.440 — the round-4 regression), while at real sizes off wins (64M:
     # 3.51 vs 3.59) — so it gates on rows per partition, letting AQE
     # coalesce the tiny stages on small graphs.
-    aqe_off = _loop_aqe_off(loop_aqe, kernel, n, P)
+    aqe_off = _loop_aqe_off(kernel, n, P)
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     try:
         if aqe_off:
@@ -459,7 +430,6 @@ def _pagerank_impl(
             max_iter=max_iter,
             fixed_iterations=fixed_iterations,
             dangling_mode=dangling_mode,
-            use_bcast=use_bcast,
             start_iter=start_iter,
             metrics=list(prev_metrics or []),
             init_dang_mass=init_dang_mass,
@@ -509,7 +479,6 @@ def _iterate(
     max_iter: int,
     fixed_iterations: int | None,
     dangling_mode: str,
-    use_bcast: bool,
     start_iter: int,
     metrics: list[dict],
     init_dang_mass: float | None = None,
@@ -519,16 +488,21 @@ def _iterate(
 ):
     """Shared power-method loop (fresh runs and resumed runs).
 
-    Per-iteration cost discipline: ONE Spark job. new_state is
+    Per-iteration cost discipline: ONE action. new_state is
     localCheckpoint(eager=False) — Dataset.checkpoint builds the
     LogicalRDD-leaf DataFrame immediately (no action), so the plan depth
     is CONSTANT across iterations, and the fused scalar agg (‖Δ‖², Σrank,
     dangling mass) then computes the join, persists the checkpoint storage,
-    and reduces the scalars in a single job. (An un-truncated plan is not
-    an option: each iteration references the previous state twice — update
-    join + gather — so the logical tree doubles per iteration; eager
-    checkpointing per iteration, round 1's design, pays a second job per
-    iteration for the same truncation.)
+    and reduces the scalars. With loop AQE off that action is ONE Spark
+    job: always for the join kernel, and for csr_block once the state
+    reaches LOOP_AQE_MIN_ROWS_PER_PARTITION rows per partition. Below
+    that, csr_block keeps AQE and each of its query stages runs as a job
+    of its own (5 per iteration, pinned in
+    tests/test_pagerank.py::test_prep_job_count). (An un-truncated plan
+    is not an option: each iteration references the previous state twice
+    — update join + gather — so the logical tree doubles per iteration;
+    eager checkpointing per iteration, round 1's design, pays a second job
+    per iteration for the same truncation.)
     """
     # dangling mass of the incoming state; callers pass the exact seed
     # (fresh run: (#dangling)/N — the contract's numeric path; resume:
@@ -546,6 +520,17 @@ def _iterate(
     target_iters = (
         start_iter + fixed_iterations if fixed_iterations is not None else max_iter
     )
+    # loop-invariant Columns, built once: each Column op costs py4j round
+    # trips, and on small graphs driver overhead is most of an iteration
+    old_cols = ("vertex_id", "dangling", F.col("rank").alias("_old"))
+    d_contrib = F.lit(d) * F.coalesce(F.col("_c"), F.lit(0.0))
+    scalars = (
+        F.sum(F.pow(F.col("rank") - F.col("_old"), F.lit(2.0))).alias("sq"),
+        F.sum("rank").alias("rank_sum"),
+        F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)).alias(
+            "dmass"
+        ),
+    )
     while it < target_iters:
         it += 1
         t0 = time.perf_counter()
@@ -554,20 +539,13 @@ def _iterate(
         if store is not None:
             contribs = _gather_scatter_blocks(state, store, P)
         else:
-            contribs = _gather_scatter_join(
-                state, wedges, hub_part, broadcast_ranks=use_bcast
-            )
+            contribs = _gather_scatter_join(state, wedges, hub_part)
 
         new_state = (
-            state.select("vertex_id", "dangling", F.col("rank").alias("_old"))
+            state.select(*old_cols)
             .join(contribs, "vertex_id", "left")
             .select(
-                "vertex_id",
-                "dangling",
-                (F.lit(base) + F.lit(d) * F.coalesce(F.col("_c"), F.lit(0.0))).alias(
-                    "rank"
-                ),
-                "_old",
+                "vertex_id", "dangling", (F.lit(base) + d_contrib).alias("rank"), "_old"
             )
             # no repartition: the update join streams the P-hash-partitioned
             # state, so its output (and the checkpoint) already carries
@@ -579,13 +557,7 @@ def _iterate(
         )
         # one fused scalar action: ‖Δ‖², Σrank, next iteration's dangling
         # mass — also materializes new_state's checkpoint (single job)
-        agg = new_state.agg(
-            F.sum(F.pow(F.col("rank") - F.col("_old"), F.lit(2.0))).alias("sq"),
-            F.sum("rank").alias("rank_sum"),
-            F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)).alias(
-                "dmass"
-            ),
-        ).collect()[0]
+        agg = new_state.agg(*scalars).collect()[0]
         delta = math.sqrt(agg["sq"])
         dang_mass = agg["dmass"] if dangling_mode == "redistribute" else 0.0
         old_state = state
@@ -615,32 +587,31 @@ def _iterate(
 
 
 def _gather_scatter_join(
-    state: DataFrame,
-    wedges: DataFrame,
-    hub_part,
-    broadcast_ranks: bool = False,
+    state: DataFrame, wedges: DataFrame, hub_part
 ) -> DataFrame:
     """J1-J6 analog: gather = equi-join on src, scatter = hash agg on dst.
-    Returns (vertex_id, _c) where _c = Σ w·rank over in-edges.
-
-    broadcast_ranks=True: BroadcastHashJoin probe over dst-partitioned
-    persisted edges + exchange-free partial agg — no edge bytes move."""
-    ranks = state.select(F.col("vertex_id").alias("src_id"), "rank")
-    if broadcast_ranks:
-        ranks = F.broadcast(ranks)
-    else:
-        # shuffled-hash, not sort-merge: both sides are already hash
-        # co-partitioned (wedges persisted on src_id, state on vertex_id,
-        # same P), so SHJ probes without re-sorting 10^? edges/iteration
-        ranks = ranks.hint("shuffle_hash")
+    Returns (vertex_id, _c) where _c = Σ w·rank over in-edges."""
+    # shuffled-hash, not sort-merge: both sides are already hash
+    # co-partitioned (wedges persisted on src_id, state on vertex_id,
+    # same P), so SHJ probes without re-sorting the edges every iteration
+    ranks = state.select(F.col("vertex_id").alias("src_id"), "rank").hint(
+        "shuffle_hash"
+    )
     joined = wedges.join(ranks, "src_id")
     if hub_part is not None:
         w_hub, hubs = hub_part
         hub_ranks = ranks.join(F.broadcast(hubs), "src_id")
         joined = joined.unionByName(w_hub.join(F.broadcast(hub_ranks), "src_id"))
-    return joined.groupBy("dst_id").agg(
-        F.sum(F.col("w") * F.col("rank")).alias("_c")
-    ).select(F.col("dst_id").alias("vertex_id"), "_c")
+    # shuffle_hash: the contribs already sit on hash(dst_id, P), the rank
+    # state's partitioning, so the update join streams both sides. Without
+    # the hint a small size estimate makes it broadcast the contribs — one
+    # extra job per iteration until the estimate outgrows the threshold.
+    return (
+        joined.groupBy("dst_id")
+        .agg(F.sum(F.col("w") * F.col("rank")).alias("_c"))
+        .select(F.col("dst_id").alias("vertex_id"), "_c")
+        .hint("shuffle_hash")
+    )
 
 
 @dataclass
@@ -648,7 +619,6 @@ class _BlockStore:
     """Handle to the CSR block set built by _build_csr_blocks."""
 
     path: str
-    dtype: str
     n_edges: int
     owns_dir: bool
     run_id: str = ""
@@ -660,6 +630,8 @@ class _BlockStore:
 
 
 _STORE_VERSION = 2  # v2: per-src suw replaces per-edge w; narrowed dst/starts
+# stores are float64 only; the manifest still records it, so attach refuses
+# a store of any other dtype (e.g. a float32 store of an older build)
 _MANIFEST = "manifest.json"
 
 
@@ -801,7 +773,6 @@ def _build_csr_blocks(
     edges: DataFrame,
     P: int,
     block_dir: str | None,
-    dtype: str,
     n_edges: int,
     fingerprint: int | None = None,
 ) -> _BlockStore:
@@ -812,7 +783,7 @@ def _build_csr_blocks(
 
       su     — sorted unique src ids in the bucket
       sidx   — per-edge gather index into su (int32 when it fits)
-      suw    — PER-SOURCE 1/L weight, aligned with su, in `dtype`
+      suw    — PER-SOURCE float64 1/L weight, aligned with su
       dst    — unique dst ids, one per run (int32 when the bucket fits)
       starts — np.add.reduceat run starts (int32 when the bucket fits)
 
@@ -834,8 +805,6 @@ def _build_csr_blocks(
     to ``n_edges`` (the caller's Σdeg from the vertex aggregate); a
     mismatch raises instead of writing an inconsistent store.
     """
-    if dtype not in ("float64", "float32"):
-        raise ValueError(f"unknown dtype {dtype!r}")
     owns = block_dir is None
     path = block_dir or tempfile.mkdtemp(prefix="ps_pagerank_csr_store_")
     _store_mkdirs(path)
@@ -845,6 +814,7 @@ def _build_csr_blocks(
     run_id = uuid.uuid4().hex
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        drop_zip_importers()
         got = list(batches)
         if not got:
             return
@@ -864,7 +834,7 @@ def _build_csr_blocks(
             sidx = np.searchsorted(su, s)
             # the bucket holds every edge of its sources: per-source edge
             # count = out-degree, and float64 1.0/deg is Spark's 1/L bits
-            suw = (1.0 / np.bincount(sidx)).astype(dtype, copy=False)
+            suw = 1.0 / np.bincount(sidx)
             if len(su) < np.iinfo(np.int32).max:
                 sidx = sidx.astype(np.int32)
             starts = np.concatenate(([0], np.flatnonzero(np.diff(t)) + 1))
@@ -928,7 +898,7 @@ def _build_csr_blocks(
                 "version": _STORE_VERSION,
                 "run_id": run_id,
                 "P": P,
-                "dtype": dtype,
+                "dtype": "float64",
                 "n_edges": n_edges,
                 "edges_fp": fingerprint,
                 "min_dst": min_dst,
@@ -939,7 +909,6 @@ def _build_csr_blocks(
     )
     return _BlockStore(
         path=path,
-        dtype=dtype,
         n_edges=n_edges,
         owns_dir=owns,
         run_id=run_id,
@@ -952,12 +921,11 @@ def _build_csr_blocks(
 def _attach_csr_blocks(
     path: str,
     P: int,
-    dtype: str,
     expected_edges: int | None = None,
     fingerprint: int | None = None,
 ) -> _BlockStore | None:
     """Reattach an existing block store (resume path). Returns None unless
-    the manifest exists and matches (version, P, dtype, and — when given —
+    the manifest exists and matches (version, P, float64, and — when given —
     edge count and content fingerprint), in which case the store is reused
     without a rebuild. The fingerprint closes the same-count-different-
     edges hole: a resumed run over a CHANGED graph that coincidentally
@@ -967,14 +935,13 @@ def _attach_csr_blocks(
         mf is None
         or mf.get("version") != _STORE_VERSION
         or mf.get("P") != P
-        or mf.get("dtype") != dtype
+        or mf.get("dtype") != "float64"
         or (expected_edges is not None and mf.get("n_edges") != expected_edges)
         or (fingerprint is not None and mf.get("edges_fp") != fingerprint)
     ):
         return None
     return _BlockStore(
         path=path,
-        dtype=dtype,
         n_edges=mf["n_edges"],
         owns_dir=False,
         run_id=mf["run_id"],
@@ -1012,25 +979,18 @@ def _gather_scatter_blocks(
     Each task validates the store manifest (cached per worker): a missing
     or stale store raises instead of silently dropping contributions, and
     only pkeys the manifest lists as blockless are skipped.
-
-    dtype="float32" halves the float side of the per-iteration byte
-    budget: the rank state crosses JVM→Python as float32, the per-source
-    suw weights and the packed partial values are float32, and the
-    gather/scatter arithmetic (the |edges|-wide scaled-rank gather +
-    reduceat) runs at half the memory traffic. The combine accumulates in
-    float64.
     """
-    path, dtype, run_id = store.path, store.dtype, store.run_id
+    path, run_id = store.path, store.run_id
     # int32 dst ids in the packed cells when every dst fits (bounds are
     # recorded in the manifest at build time)
     use32 = -(2**31) <= store.min_dst and store.max_dst < 2**31
     id_np = np.int32 if use32 else np.int64
-    val_np = np.float32 if dtype == "float32" else np.float64
     lo_id, hi_id = store.min_dst, store.max_dst
     span = max(1, hi_id - lo_id + 1)
     qwidth = -(-span // P)  # ceil: qkey = (dst - lo_id) // qwidth ∈ [0, P)
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        drop_zip_importers()
         got = list(batches)
         if not got:
             return
@@ -1058,7 +1018,7 @@ def _gather_scatter_blocks(
             pos = np.searchsorted(ids, su)
             pos_c = np.minimum(pos, len(ids) - 1)
             present = ids[pos_c] == su
-            su_rank = np.where(present, rk[pos_c], 0.0).astype(dtype, copy=False)
+            su_rank = np.where(present, rk[pos_c], 0.0)
             # fold the per-source 1/L into the rank BEFORE the per-edge
             # gather: one |su|-wide multiply replaces v1's |edges|-wide
             # multiply + per-edge weight read
@@ -1077,7 +1037,7 @@ def _gather_scatter_blocks(
                 ds.append(
                     np.asarray(dst[a:b]).astype(id_np, copy=False).tobytes()
                 )
-                vs.append(sums[a:b].astype(val_np, copy=False).tobytes())
+                vs.append(sums[a:b].tobytes())
             if qs:
                 yield pa.RecordBatch.from_arrays(
                     [
@@ -1089,6 +1049,7 @@ def _gather_scatter_blocks(
                 )
 
     def combine(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        drop_zip_importers()
         got = list(batches)
         if not got:
             return
@@ -1104,7 +1065,7 @@ def _gather_scatter_blocks(
                 [np.frombuffer(dcol[i], dtype=id_np) for i in rows]
             ).astype(np.int64, copy=False)
             v_all = np.concatenate(
-                [np.frombuffer(vcol[i], dtype=val_np) for i in rows]
+                [np.frombuffer(vcol[i], dtype=np.float64) for i in rows]
             )
             qlo = lo_id + int(q) * qwidth
             size = min(qwidth, span - int(q) * qwidth)
@@ -1125,22 +1086,19 @@ def _gather_scatter_blocks(
                     ([0], np.flatnonzero(np.diff(ds)) + 1)
                 )
                 out_ids = ds[starts]
-                out_vals = np.add.reduceat(vs.astype(np.float64), starts)
+                out_vals = np.add.reduceat(vs, starts)
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(out_ids, type=pa.int64()),
-                    pa.array(out_vals.astype(np.float64), type=pa.float64()),
+                    pa.array(out_vals, type=pa.float64()),
                 ],
                 names=["vertex_id", "_c"],
             )
 
-    rank_col = (
-        F.col("rank").cast("float") if dtype == "float32" else F.col("rank")
-    )
     blobs = state.select(
         F.pmod(F.hash("vertex_id"), F.lit(P)).cast("int").alias("pkey"),
         "vertex_id",
-        rank_col.alias("rank"),
+        "rank",
     ).mapInArrow(gen, schema="qkey int, dst binary, val binary")
     # ≤ P rows per bucket task enter this exchange — the partial payload
     # moves as a few thousand packed cells, not as Σ_b unique-dst(b) JVM
@@ -1252,7 +1210,7 @@ def _continue(
     **kwargs,
 ) -> PageRankResult:
     """Continuation used by resume — delegates to pagerank() with the
-    checkpointed state, so EVERY kernel/gather/hub option a fresh run
+    checkpointed state, so EVERY kernel/hub option a fresh run
     accepts also works on a resumed run (a csr_block run resumes as
     csr_block, reattaching block_dir when its manifest matches).
     Checkpointing continues through the resumed run: a second failure

@@ -37,7 +37,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Tiny-graph partition floor (measured sweep, BENCH/BASELINE.md §4): at
+# Tiny-graph partition floor (measured sweep, BENCH/BASELINE.md §4, raw
+# BENCH/psweep_sf01_r5.json; a cell reruns as BENCH/ab_pagerank.py with
+# num_partitions in its kwargs): at
 # the session's cores-tracking default P, a small graph runs P near-empty
 # tasks per stage AND duplicates each dst's partial across up to P source
 # buckets. Sizing P to the data (~400k edges per bucket) cut the sf0.1

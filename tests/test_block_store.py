@@ -70,7 +70,7 @@ def test_stale_manifest_fails_loudly(spark, tmp_path, big_edges_df):
              num_partitions=4, fixed_iterations=1)
     import dataclasses
 
-    store = _attach_csr_blocks(bdir, 4, "float64", None)
+    store = _attach_csr_blocks(bdir, 4, None)
     assert store is not None
     # a handle whose run no longer matches the on-disk manifest — e.g. a
     # concurrent run overwrote the dir after this run attached it. The
@@ -94,11 +94,10 @@ def test_attach_validates_manifest(spark, tmp_path, big_edges_df):
     res = pagerank(spark, big_edges_df, kernel="csr_block", block_dir=bdir,
                    num_partitions=4, fixed_iterations=1)
     n_edges = len(set(BIG_EDGES))
-    assert _attach_csr_blocks(bdir, 4, "float64", n_edges) is not None
-    assert _attach_csr_blocks(bdir, 8, "float64", n_edges) is None  # P
-    assert _attach_csr_blocks(bdir, 4, "float32", n_edges) is None  # dtype
-    assert _attach_csr_blocks(bdir, 4, "float64", n_edges + 1) is None
-    assert _attach_csr_blocks(str(tmp_path / "nope"), 4, "float64", None) is None
+    assert _attach_csr_blocks(bdir, 4, n_edges) is not None
+    assert _attach_csr_blocks(bdir, 8, n_edges) is None  # P
+    assert _attach_csr_blocks(bdir, 4, n_edges + 1) is None
+    assert _attach_csr_blocks(str(tmp_path / "nope"), 4, None) is None
     assert res.phases.get("block_alignment") == 1.0
     # a store written by an older format version must rebuild, not attach:
     # v2 readers expect per-source suw + narrowed dst/starts
@@ -109,10 +108,15 @@ def test_attach_validates_manifest(spark, tmp_path, big_edges_df):
     # keys this reader does not use (older builds also recorded src id
     # bounds) are ignored: such a store still attaches
     mf_path.write_text(_json.dumps({**mf, "src_bounds": [1, 11]}))
-    assert _attach_csr_blocks(str(bdir), 4, "float64", n_edges) is not None
+    assert _attach_csr_blocks(str(bdir), 4, n_edges) is not None
+    # stores are float64 only: a float32 store left by an older build
+    # must rebuild, not attach
+    assert mf["dtype"] == "float64"
+    mf_path.write_text(_json.dumps({**mf, "dtype": "float32"}))
+    assert _attach_csr_blocks(str(bdir), 4, n_edges) is None
     mf["version"] = 1
     mf_path.write_text(_json.dumps(mf))
-    assert _attach_csr_blocks(str(bdir), 4, "float64", n_edges) is None
+    assert _attach_csr_blocks(str(bdir), 4, n_edges) is None
 
 
 def test_build_weights_are_exact_inverse_out_degree(spark, tmp_path):
@@ -120,8 +124,8 @@ def test_build_weights_are_exact_inverse_out_degree(spark, tmp_path):
     (every edge of a source lands in one bucket) and stores
     suw = 1.0/deg. On a power-law graph (many degrees whose reciprocal is
     inexact) every block's suw must equal weighted_edges' Spark-computed
-    1/out-degree bit for bit, in float64 and as float32; a build whose
-    bucket counts disagree with the vertex aggregate's Σdeg must raise."""
+    1/out-degree bit for bit; a build whose bucket counts disagree with
+    the vertex aggregate's Σdeg must raise."""
     import json as _json
 
     from ps_pagerank_spark.operators.graph import weighted_edges
@@ -137,22 +141,20 @@ def test_build_weights_are_exact_inverse_out_degree(spark, tmp_path):
         .collect()
     }
     assert len(set(want.values())) > 10
-    for dtype in ("float64", "float32"):
-        bdir = tmp_path / dtype
-        _build_csr_blocks(edges, 4, str(bdir), dtype, len(pairs))
-        got = {}
-        for k in _json.loads((bdir / _MANIFEST).read_text())["pkeys"]:
-            su = np.load(bdir / f"blk{k}_su.npy")
-            suw = np.load(bdir / f"blk{k}_suw.npy")
-            assert suw.dtype == np.dtype(dtype)
-            got.update(zip(su.tolist(), suw))
-        assert got.keys() == want.keys()
-        exp = np.array([want[v] for v in sorted(want)]).astype(dtype)
-        act = np.array([got[v] for v in sorted(want)], dtype=dtype)
-        assert np.array_equal(exp.view(f"u{exp.itemsize}"),
-                              act.view(f"u{act.itemsize}"))
+    bdir = tmp_path / "blocks"
+    _build_csr_blocks(edges, 4, str(bdir), len(pairs))
+    got = {}
+    for k in _json.loads((bdir / _MANIFEST).read_text())["pkeys"]:
+        su = np.load(bdir / f"blk{k}_su.npy")
+        suw = np.load(bdir / f"blk{k}_suw.npy")
+        assert suw.dtype == np.float64
+        got.update(zip(su.tolist(), suw))
+    assert got.keys() == want.keys()
+    exp = np.array([want[v] for v in sorted(want)], dtype=np.float64)
+    act = np.array([got[v] for v in sorted(want)], dtype=np.float64)
+    assert np.array_equal(exp.view(np.uint64), act.view(np.uint64))
     with pytest.raises(RuntimeError, match="vertex aggregate"):
-        _build_csr_blocks(edges, 4, None, "float64", len(pairs) + 1)
+        _build_csr_blocks(edges, 4, None, len(pairs) + 1)
 
 
 def test_resume_csr_block_identical(spark, tmp_path, big_edges_df):
@@ -218,13 +220,12 @@ def test_attach_requires_content_fingerprint(spark, tmp_path, big_edges_df):
     assert mf["edges_fp"] is not None
     # unit level: attach honors the fingerprint
     ok = _attach_csr_blocks(
-        str(bdir), 4, "float64", mf["n_edges"], fingerprint=mf["edges_fp"]
+        str(bdir), 4, mf["n_edges"], fingerprint=mf["edges_fp"]
     )
     assert ok is not None
     assert (
         _attach_csr_blocks(
-            str(bdir), 4, "float64", mf["n_edges"],
-            fingerprint=mf["edges_fp"] ^ 1,
+            str(bdir), 4, mf["n_edges"], fingerprint=mf["edges_fp"] ^ 1
         )
         is None
     )

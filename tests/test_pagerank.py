@@ -92,21 +92,35 @@ def test_prep_job_count(spark, big_edges_df):
     """The prep is one shared vertex aggregate plus one materialization
     per kernel (weighted edges or the block build), so a one-iteration
     run costs a fixed number of Spark jobs per kernel (counted by job
-    group); an extra pass over the edges shows up here."""
+    group); an extra pass over the edges shows up here. A three-iteration
+    run pins the loop itself: the extra jobs over the one-iteration run
+    are the cost of two more iterations. The join loop is one job per
+    iteration (_iterate's fused scalar agg). The csr_block loop keeps AQE
+    on for a state this small (_loop_aqe_off), and each of its query
+    stages runs as a job of its own: 5 per iteration."""
     sc = spark.sparkContext
+    # materialize the cached fixture first: under AQE its first scan is a
+    # job of its own, which would land in whichever run reads it first
+    big_edges_df.count()
     counts = {}
     for kernel in ("join", "csr_block"):
-        group = f"prep-jobs-{kernel}"
-        sc.setJobGroup(group, group)
-        try:
-            pagerank(
-                spark, big_edges_df, kernel=kernel, fixed_iterations=1,
-                dangling_mode="redistribute", num_partitions=4,
+        for iters in (1, 3):
+            group = f"prep-jobs-{kernel}-{iters}"
+            sc.setJobGroup(group, group)
+            try:
+                pagerank(
+                    spark, big_edges_df, kernel=kernel,
+                    fixed_iterations=iters, dangling_mode="redistribute",
+                    num_partitions=4,
+                )
+            finally:
+                sc.setJobGroup("", "")
+            counts[kernel, iters] = len(
+                sc.statusTracker().getJobIdsForGroup(group)
             )
-        finally:
-            sc.setJobGroup("", "")
-        counts[kernel] = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert counts == {"join": 12, "csr_block": 13}
+    assert counts[("join", 1)] == 9 and counts[("csr_block", 1)] == 13
+    assert counts[("join", 3)] - counts[("join", 1)] == 2 * 1
+    assert counts[("csr_block", 3)] - counts[("csr_block", 1)] == 2 * 5
 
 
 def test_fixed_iterations(spark, big_edges_df):
@@ -209,33 +223,11 @@ def test_iteration_goldens_engine(spark, big_edges_df, g, mode, eps):
     assert res.iterations == GOLDEN_ITERS[(g, mode, eps)]
 
 
-def test_csr_block_float32_fixed_point(spark, big_edges_df):
-    """Float-precision variant (opencl-float/kernel_csr.cl:3-19 parity):
-    the float32 csr_block kernel reaches the same fixed point as double
-    within 1e-6, mirroring the reference's float/double agreement at the
-    same iteration counts (BASELINE.md note)."""
-    syn_edges, n = _syn_graph()
-    edges_df = spark.createDataFrame(syn_edges, "src_id long, dst_id long")
-    verts = vertices_id_range(spark, edges_df)
-    r64 = pagerank(
-        spark, edges_df, vertices=verts, eps=1e-6,
-        dangling_mode="redistribute", kernel="csr_block", num_partitions=4,
-    )
-    r32 = pagerank(
-        spark, edges_df, vertices=verts, eps=1e-6,
-        dangling_mode="redistribute", kernel="csr_block", dtype="float32",
-        num_partitions=4,
-    )
-    a, b = _ranks_np(r64, n), _ranks_np(r32, n)
-    assert np.abs(a - b).max() < 1e-6
-    assert r32.iterations == r64.iterations
-
-
 def test_blob_partials_kernel_equality(spark):
     """The csr_block kernel (blob partials: packed per-dst-range binary
     cells + dense bincount combine) must produce the join kernel's scores
-    — on dense dictionary-encoded ids (dense combine), on ids far above
-    the dense-combine cap (sort-fallback combine), and in float32 mode."""
+    — on dense dictionary-encoded ids (dense combine) and on ids far above
+    the dense-combine cap (sort-fallback combine)."""
     syn_edges, n = _syn_graph()
     edges_df = spark.createDataFrame(syn_edges, "src_id long, dst_id long")
     kw = dict(eps=1e-6, dangling_mode="redistribute", num_partitions=4)
@@ -263,13 +255,6 @@ def test_blob_partials_kernel_equality(spark):
     assert aw.keys() == bw.keys()
     for k in aw:
         assert np.isclose(aw[k], bw[k], rtol=1e-12, atol=1e-15)
-
-    # float32 mode ships float32 cell values; it must reach the float64
-    # join kernel's fixed point within the float32 contract bound
-    f_blob = pagerank(
-        spark, edges_df, kernel="csr_block", dtype="float32", **kw
-    )
-    assert np.abs(a - _ranks_np(f_blob, n)).max() < 1e-6
 
 
 def test_kernel_auto_survives_catalyst_drift(spark, big_edges_df, tmp_path,
@@ -386,3 +371,19 @@ def test_wide_id_state_stream_kernel_equality(spark):
     assert all(k >= OFF for k in a)
     for k in a:
         assert np.isclose(a[k], b[k], rtol=1e-12, atol=1e-15)
+
+
+def test_deleted_knobs_raise(spark, big_edges_df):
+    """pagerank() takes 16 keyword arguments. The deleted gather,
+    precision and loop-AQE knobs are unknown kwargs: TypeError."""
+    import inspect
+
+    from ps_pagerank_spark.operators.pagerank import _pagerank_impl
+
+    params = inspect.signature(_pagerank_impl).parameters.values()
+    assert sum(p.kind is p.KEYWORD_ONLY for p in params) == 16
+    for kw in ({"gather": "shuffle"}, {"broadcast_max_vertices": 1},
+               {"dtype": "float64"}, {"loop_aqe": "auto"}):
+        with pytest.raises(TypeError):
+            pagerank(spark, big_edges_df, kernel="join", num_partitions=4,
+                     **kw)

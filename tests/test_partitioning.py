@@ -100,8 +100,7 @@ def test_update_join_reuses_agg_exchange_at_custom_P(spark, big_edges_df):
             .repartition(P, "vertex_id")
             .localCheckpoint(eager=True)
         )
-        contribs = _gather_scatter_join(state, wedges, None,
-                                        broadcast_ranks=False)
+        contribs = _gather_scatter_join(state, wedges, None)
         new_state = state.select(
             "vertex_id", "dangling", F.col("rank").alias("_old")
         ).join(contribs, "vertex_id", "left")
@@ -127,7 +126,7 @@ def test_update_join_reuses_agg_exchange_at_custom_P(spark, big_edges_df):
 
 
 def test_loop_aqe_auto_gate_is_kernel_aware():
-    """loop_aqe="auto" policy pinned to the measured A/B (BENCH/BASELINE.md
+    """Loop-AQE policy pinned to the measured A/B (BENCH/BASELINE.md
     §4): join = always off (wins at every measured size); csr_block = off
     only when the state carries ≥ threshold rows per partition (P fixed
     tiny tasks lose on near-empty states — the round-4 sf0.1 regression)."""
@@ -136,16 +135,13 @@ def test_loop_aqe_auto_gate_is_kernel_aware():
         _loop_aqe_off,
     )
 
-    # explicit settings win regardless of kernel/size
-    assert _loop_aqe_off("off", "csr_block", 1, 32)
-    assert not _loop_aqe_off("on", "join", 10 * T * 32, 32)
-    # auto: join always off
-    assert _loop_aqe_off("auto", "join", 21_000, 32)
-    assert _loop_aqe_off("auto", "join", 10 * T * 32, 32)
-    # auto: csr_block gates on rows per partition
-    assert not _loop_aqe_off("auto", "csr_block", 21_000, 32)  # sf0.1 shape
-    assert _loop_aqe_off("auto", "csr_block", T * 32, 32)  # 64M shape
-    assert _loop_aqe_off("auto", "csr_block", T * 4, 4)
+    # join: always off
+    assert _loop_aqe_off("join", 21_000, 32)
+    assert _loop_aqe_off("join", 10 * T * 32, 32)
+    # csr_block: gates on rows per partition
+    assert not _loop_aqe_off("csr_block", 21_000, 32)  # sf0.1 shape
+    assert _loop_aqe_off("csr_block", T * 32, 32)  # 64M shape
+    assert _loop_aqe_off("csr_block", T * 4, 4)
 
 
 def test_auto_partitions_tiny_graph_floor(spark, big_edges_df, tmp_path):

@@ -1,10 +1,14 @@
-"""Worker code shipping: the package zip follows the sources."""
+"""Worker code shipping: the package zip follows the sources, and the
+worker-side import cache trim keeps zip imports working."""
 
 from __future__ import annotations
 
+import importlib
+import sys
 import zipfile
+import zipimport
 
-from ps_pagerank_spark.session import build_package_zip
+from ps_pagerank_spark.session import build_package_zip, drop_zip_importers
 
 
 def _zip_sources(zpath):
@@ -48,3 +52,34 @@ def test_package_zip_replaced_when_stale_kept_when_current(tmp_path):
     assert build_package_zip(pkg, zpath) is True
     assert "enginepkg/ops/new.py" in _zip_sources(zpath)
     assert not list(tmp_path.glob("*.tmp"))
+
+
+def _zip_finders():
+    return [
+        p for p, f in sys.path_importer_cache.items()
+        if isinstance(f, zipimport.zipimporter)
+    ]
+
+
+def test_drop_zip_importers_keeps_zip_imports_working(tmp_path, monkeypatch):
+    """After the trim no zip importer is cached, so the next
+    invalidate_caches() has no archive to re-read, and a module not yet
+    imported from the zip still imports (its importer is rebuilt)."""
+    zpath = tmp_path / "lib.zip"
+    with zipfile.ZipFile(zpath, "w") as zf:
+        zf.writestr("zpkg/__init__.py", "")
+        zf.writestr("zpkg/a.py", "A = 1\n")
+        zf.writestr("zpkg/b.py", "B = 2\n")
+    monkeypatch.syspath_prepend(str(zpath))
+    try:
+        a = importlib.import_module("zpkg.a")
+        assert a.A == 1
+        assert str(zpath) in _zip_finders()
+        drop_zip_importers()
+        assert _zip_finders() == []
+        importlib.invalidate_caches()
+        b = importlib.import_module("zpkg.b")
+        assert b.B == 2
+    finally:
+        for name in ("zpkg.b", "zpkg.a", "zpkg"):
+            sys.modules.pop(name, None)

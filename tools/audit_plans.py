@@ -32,19 +32,17 @@ audit("edges_build", edges)
 from ps_pagerank_spark.operators.graph import weighted_edges
 audit("weighted_coo", weighted_edges(edges))
 
-# 3. one pagerank gather-scatter iteration (shuffle gather)
+# 3. one pagerank gather-scatter iteration (co-partitioned shuffled-hash gather)
 from ps_pagerank_spark.operators.pagerank import _gather_scatter_join
 edgesP = weighted_edges(edges).repartition(8, "src_id").persist(); edgesP.count()
 state = edges.select(F.col("src_id").alias("vertex_id")).distinct().select(
     "vertex_id", F.lit(False).alias("dangling"), F.lit(0.1).alias("rank")
 ).repartition(8, "vertex_id").localCheckpoint()
-contribs = _gather_scatter_join(state, edgesP, None, broadcast_ranks=False)
+contribs = _gather_scatter_join(state, edgesP, None)
 p = audit("gather_scatter_shuffle", contribs)
 new_state = (state.select("vertex_id","dangling",F.col("rank").alias("_old"))
     .join(contribs, "vertex_id", "left"))
 audit("iteration_update_join", new_state)
-contribs_b = _gather_scatter_join(state, edgesP, None, broadcast_ranks=True)
-audit("gather_scatter_broadcast", contribs_b)
 
 # 4. text features: documents scan should read only (doc_id, text)
 from ps_pagerank_spark.functions.text import text_feature_columns
