@@ -6,9 +6,10 @@ Imports the engine from <checkout>, builds the input on a local[4]
 session, caches it, runs ``pagerank(spark, edges, **kwargs)`` once and
 prints one JSON line: the call's wall (including a count of the ranks),
 its phases, every iteration's seconds, the steady-iteration median
-(iteration 1 dropped), the iteration count, the kernel that ran and the
-rank sum. <input> is either a TPC-H testdata directory (read by
-``tpch_graph_edges``) or ``powerlaw:<vertices>:<edges>:<seed>`` (a
+(iteration 1 dropped), the iteration count, the kernel that ran, the
+rank sum and a sha256 of the ranks (vertex_id-sorted ids, then rank
+bits), so two arms can be checked for bit-identical ranks. <input> is
+either a TPC-H testdata directory (read by ``tpch_graph_edges``) or ``powerlaw:<vertices>:<edges>:<seed>`` (a
 deduplicated ``synth_powerlaw_edges`` graph).
 
 Alternate two checkouts across invocations for an interleaved A/B; each
@@ -23,6 +24,7 @@ rep is a fresh JVM, so no arm inherits the other's caches. Examples:
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import statistics
@@ -61,6 +63,11 @@ def main(checkout: str, spec: str, kwargs: dict) -> None:
     wall = time.perf_counter() - t0
     iter_s = [m["elapsed_s"] for m in res.metrics]
     steady = iter_s[1:] or iter_s
+    ranks = res.ranks.toPandas().sort_values("vertex_id")
+    digest = hashlib.sha256(
+        ranks["vertex_id"].to_numpy().tobytes()
+        + ranks["rank"].to_numpy().tobytes()
+    ).hexdigest()
     print(json.dumps({
         "checkout": checkout,
         "engine": os.path.dirname(sys.modules["ps_pagerank_spark"].__file__),
@@ -71,6 +78,7 @@ def main(checkout: str, spec: str, kwargs: dict) -> None:
         "steady_median_s": round(statistics.median(steady), 4),
         "iter_s": [round(s, 4) for s in iter_s],
         "rank_sum": res.ranks.agg({"rank": "sum"}).collect()[0][0],
+        "ranks_sha256": digest,
     }))
     spark.stop()
 

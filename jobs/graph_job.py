@@ -15,9 +15,10 @@ Cluster launch (same --py-files shape as jobs/pagerank_job.py):
         --edges ... --catalog ...
 
 ``--pages`` instead of ``--edges`` runs the extraction front half first
-(extract_links → dict encode), persisting vertices/edges to the catalog —
-identical pipeline to jobs/pagerank_job.py, so one crawl can feed all four
-algorithms from the same materialized edge table.
+(operators.graph.pages_to_edges: extract_links → dict encode), persisting
+vertices/edges to the catalog — the same call jobs/pagerank_job.py makes,
+so one crawl can feed all four algorithms from the same materialized edge
+table.
 """
 
 from __future__ import annotations
@@ -27,28 +28,6 @@ import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-
-def _load_edges(spark, args, cat):
-    from ps_pagerank_spark.functions.extract import extract_links, normalize_links
-    from ps_pagerank_spark.operators.graph import (
-        encode_edges,
-        encode_vertices,
-        vertices_from_links,
-    )
-
-    if args.edges:
-        return spark.read.parquet(args.edges)
-    pages = spark.read.parquet(args.pages)
-    # persisted: the vertex write and the edge write both read links, and
-    # an unpersisted frame would run the extractor once for each
-    links = normalize_links(extract_links(pages)).persist()
-    vertices = encode_vertices(vertices_from_links(links), mode="zip")
-    cat.overwrite("vertices", vertices)
-    edges = encode_edges(links, cat.read(spark, "vertices"))
-    cat.overwrite("edges", edges)
-    links.unpersist()
-    return cat.read(spark, "edges")
 
 
 def main(argv: list[str] | None = None, spark=None) -> None:
@@ -80,13 +59,17 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         ap.error("one of --pages / --edges is required")
 
     from ps_pagerank_spark import get_spark
+    from ps_pagerank_spark.operators.graph import pages_to_edges
     from ps_pagerank_spark.plans.catalog import Catalog
 
     owns_spark = spark is None
     if owns_spark:
         spark = get_spark(app_name=f"graph_job_{args.algorithm}")
     cat = Catalog(args.catalog)
-    edges = _load_edges(spark, args, cat)
+    if args.edges:
+        edges = spark.read.parquet(args.edges)
+    else:
+        edges = pages_to_edges(spark, spark.read.parquet(args.pages), cat)
     out = args.out or args.algorithm
 
     props: dict = {"algorithm": args.algorithm}

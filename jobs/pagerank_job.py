@@ -49,16 +49,15 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         "--block-dir",
         default=None,
         help="csr_block store directory (executor-visible path or "
-        "pyarrow.fs URI); a resumed csr_block run reattaches it when the "
-        "manifest matches instead of rebuilding",
+        "pyarrow.fs URI); every run, resumed runs included, clears it and "
+        "builds a fresh store there",
     )
     ap.add_argument(
         "--num-partitions",
         type=int,
         default=None,
         help="iteration-loop partition count P (default: "
-        "spark.sql.shuffle.partitions); a resumed csr_block run must use "
-        "the P its block store was built with",
+        "spark.sql.shuffle.partitions)",
     )
     ap.add_argument("--checkpoint-every", type=int, default=0)
     ap.add_argument("--resume", action="store_true")
@@ -68,12 +67,7 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         ap.error("one of --pages / --edges is required")
 
     from ps_pagerank_spark import get_spark
-    from ps_pagerank_spark.functions.extract import extract_links, normalize_links
-    from ps_pagerank_spark.operators.graph import (
-        encode_edges,
-        encode_vertices,
-        vertices_from_links,
-    )
+    from ps_pagerank_spark.operators.graph import pages_to_edges
     from ps_pagerank_spark.operators.pagerank import pagerank, resume_pagerank
     from ps_pagerank_spark.plans.catalog import Catalog
     from ps_pagerank_spark.plans.metrics import append_metrics, partition_lineage
@@ -86,16 +80,7 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     if args.edges:
         edges = spark.read.parquet(args.edges)
     else:
-        pages = spark.read.parquet(args.pages)
-        # persisted: the vertex write and the edge write both read links,
-        # and an unpersisted frame would run the extractor once for each
-        links = normalize_links(extract_links(pages)).persist()
-        vertices = encode_vertices(vertices_from_links(links), mode="zip")
-        cat.overwrite("vertices", vertices)
-        edges = encode_edges(links, cat.read(spark, "vertices"))
-        cat.overwrite("edges", edges)
-        links.unpersist()
-        edges = cat.read(spark, "edges")
+        edges = pages_to_edges(spark, spark.read.parquet(args.pages), cat)
 
     kwargs = dict(
         d=args.damping,
@@ -110,8 +95,8 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     )
     if args.resume:
         # every kernel option passes through: a --kernel csr_block job
-        # resumes as csr_block and reattaches --block-dir when the store
-        # manifest matches (pagerank.resume_pagerank → pagerank())
+        # resumes as csr_block and rebuilds its store in --block-dir
+        # (pagerank.resume_pagerank → pagerank())
         res = resume_pagerank(spark, edges, cat, **kwargs)
     else:
         res = pagerank(spark, edges, **kwargs)

@@ -10,9 +10,10 @@ mandated by BASELINE.json's ``input_hint``.
 
 Spec (stdlib-only; ``extract_links_py`` is its executable form):
   links: regex ``<a\\s[^>]*href="([^"]*)"`` over the decoded html; each href
-    resolved with ``urllib.parse.urljoin(page_url, href)``; keep http(s)
-    only; strip ``#fragment``; drop self-loops; dedupe per page preserving
-    first occurrence.
+    resolved with ``urllib.parse.urljoin(page_url, href)``, dropping an
+    href it rejects (ValueError, e.g. an unclosed IPv6 bracket); keep
+    http(s) only; strip ``#fragment``; drop self-loops; dedupe per page
+    preserving first occurrence.
   text: remove ``<script>…</script>`` and ``<style>…</style>`` blocks, strip
     all tags, collapse whitespace runs to single spaces, strip ends,
     encode UTF-8.
@@ -81,7 +82,10 @@ def extract_links_py(page_url: str, html: bytes | str) -> list[str]:
     out: list[str] = []
     seen: set[str] = set()
     for href in HREF_RE.findall(html):
-        absu = urljoin(page_url, href)
+        try:
+            absu = urljoin(page_url, href)
+        except ValueError:  # e.g. "https://[::1/x": malformed IPv6 host
+            continue
         if not (absu.startswith("http://") or absu.startswith("https://")):
             continue
         absu = absu.split("#", 1)[0]
@@ -213,7 +217,10 @@ def _scan_links(urls: pa.Array, html: pa.Array) -> tuple[pa.Array, pa.Array]:
 def _resolve(page_url: str, href: bytes) -> bytes | None:
     """One non-plain href the way ``extract_links_py`` resolves it: UTF-8
     bytes of the fragment-free absolute http(s) URL, else None."""
-    absu = urljoin(page_url, href.decode("utf-8", errors="replace"))
+    try:
+        absu = urljoin(page_url, href.decode("utf-8", errors="replace"))
+    except ValueError:
+        return None
     if not (absu.startswith("http://") or absu.startswith("https://")):
         return None
     return absu.split("#", 1)[0].encode("utf-8")

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ps_pagerank_spark.functions import extract
+
 
 def vertices_from_links(links: DataFrame) -> DataFrame:
     """Distinct url universe of a links(src_url, dst_url) table."""
@@ -126,8 +128,21 @@ def encode_edges(links: DataFrame, vertices: DataFrame) -> DataFrame:
     )
 
 
-def dedup_edges(edges: DataFrame) -> DataFrame:
-    return edges.dropDuplicates(["src_id", "dst_id"])
+def pages_to_edges(spark, pages: DataFrame, catalog) -> DataFrame:
+    """The pages → edges front half: extract links, dictionary-encode
+    them, write the "vertices" and "edges" tables to ``catalog``
+    (plans.catalog.Catalog) and return the edges read back from it."""
+    # persisted: the vertex write and the edge write both read links, and
+    # an unpersisted frame would run the extractor once for each
+    links = extract.normalize_links(extract.extract_links(pages)).persist()
+    catalog.overwrite(
+        "vertices", encode_vertices(vertices_from_links(links), mode="zip")
+    )
+    catalog.overwrite(
+        "edges", encode_edges(links, catalog.read(spark, "vertices"))
+    )
+    links.unpersist()
+    return catalog.read(spark, "edges")
 
 
 def vertices_from_edges(edges: DataFrame) -> DataFrame:

@@ -17,13 +17,13 @@ Execution design (scale-first):
     pattern, openmp/pagerank.c:341-394) and shuffle-merge (the atomics,
     opencl/kernel_coo.cl:37-60) automatically.
   * Prep is one shared pass: a single vertex aggregate, vstats(vertex_id,
-    deg, h), explodes each edge into its endpoints and yields the vertex
-    universe, out-degrees, dangling flags, |E| and the content
-    fingerprint for both kernels (one scalar agg reads them off). State0
-    is a projection of it; the join kernel's weighted edges are
-    edges ⋈ vstats(deg > 0) with w = 1/deg, hash-repartitioned on src_id
-    and persisted — the iteration-invariant side of the join never
-    reshuffles. csr_block builds no weighted edges at all (see below).
+    deg, inu), explodes each edge into its endpoints and yields the vertex
+    universe, out-degrees, dangling flags and |E| for both kernels (one
+    scalar agg reads them off). State0 is a projection of it; the join
+    kernel's weighted edges are edges ⋈ vstats(deg > 0) with w = 1/deg,
+    hash-repartitioned on src_id and persisted — the iteration-invariant
+    side of the join never reshuffles. csr_block builds no weighted edges
+    at all (see below).
   * Lineage is truncated every iteration with localCheckpoint — the Spark
     analog of the reference's two-buffer pointer swap (pagerank.c:211-213).
   * One scalar action per iteration returns (‖Δ‖², Σrank, next dangling
@@ -55,9 +55,10 @@ Execution design (scale-first):
     block_dir must be visible to all executors: a local/shared-FS path
     (mmap fast path) or any pyarrow.fs URI (`hdfs://`, `s3://`, ...) when
     executors don't share a disk — the block store is "device memory".
-    Builds write a manifest (run id, P, dtype, per-bucket inventory) that
-    every reader validates, so a stale or invisible store fails loudly
-    instead of silently corrupting ranks.
+    Every csr_block run, resumed runs included, builds its own store: the
+    build clears block_dir and writes a manifest (run id, the pkeys that
+    have blocks) that every reader validates, so a stale or invisible
+    store fails loudly instead of silently corrupting ranks.
 """
 
 from __future__ import annotations
@@ -76,6 +77,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -123,30 +125,25 @@ class PageRankResult:
 def _vertex_stats(
     edges: DataFrame, vertices: DataFrame | None, P: int
 ) -> DataFrame:
-    """vstats(vertex_id, deg, h, inu): the one shared pass over the edges
+    """vstats(vertex_id, deg, inu): the one shared pass over the edges
     that every prep question reads (the Layered Aggregate Engine idea:
     many aggregates from one scan). Each edge explodes into its two
-    endpoints — the src row carries (1, xxhash64(src_id, dst_id)), the dst
-    row (0, 0) — grouped on vertex_id and hash-partitioned on it with P.
-    So deg is the out-degree (0 = dangling), and bit_xor(h) over all rows
-    is the edge-level content fingerprint.
+    endpoints — the src row carries deg 1, the dst row deg 0 — grouped on
+    vertex_id and hash-partitioned on it with P. So deg is the out-degree
+    (0 = dangling) and Σdeg is |E|.
 
     inu marks the rank universe: every endpoint by default; with explicit
     ``vertices``, exactly those ids (unioned in with deg 0). deg still
-    counts every edge, so Σdeg and the fingerprint cover edges whose
-    endpoints fall outside the universe, as the weights do."""
+    counts every edge, so Σdeg covers edges whose endpoints fall outside
+    the universe, as the weights do."""
     rows = edges.select(
         F.inline(
             F.array(
                 F.struct(
-                    F.col("src_id").alias("vertex_id"),
-                    F.lit(1).alias("deg"),
-                    F.xxhash64("src_id", "dst_id").alias("h"),
+                    F.col("src_id").alias("vertex_id"), F.lit(1).alias("deg")
                 ),
                 F.struct(
-                    F.col("dst_id").alias("vertex_id"),
-                    F.lit(0).alias("deg"),
-                    F.lit(0).cast("long").alias("h"),
+                    F.col("dst_id").alias("vertex_id"), F.lit(0).alias("deg")
                 ),
             )
         ),
@@ -155,19 +152,12 @@ def _vertex_stats(
     if vertices is not None:
         rows = rows.unionByName(
             vertices.select(
-                "vertex_id",
-                F.lit(0).alias("deg"),
-                F.lit(0).cast("long").alias("h"),
-                F.lit(True).alias("inu"),
+                "vertex_id", F.lit(0).alias("deg"), F.lit(True).alias("inu")
             )
         )
     return (
         rows.groupBy("vertex_id")
-        .agg(
-            F.sum("deg").alias("deg"),
-            F.bit_xor("h").alias("h"),
-            F.max("inu").alias("inu"),
-        )
+        .agg(F.sum("deg").alias("deg"), F.max("inu").alias("inu"))
         .repartition(P, "vertex_id")
     )
 
@@ -283,9 +273,8 @@ def _pagerank_impl(
 
     start_state resumes from a checkpointed rank vector with IDENTICAL
     per-kernel semantics: every kernel/hub option works on a resumed run
-    (resume_pagerank routes here). A resumed csr_block run reattaches an
-    existing block_dir when its manifest matches (P, edge count, content
-    fingerprint), else rebuilds the store.
+    (resume_pagerank routes here). A resumed csr_block run builds a fresh
+    store in block_dir, as a fresh run does.
     """
     if dangling_mode not in ("none", "redistribute"):
         raise ValueError(f"unknown dangling_mode {dangling_mode!r}")
@@ -301,16 +290,12 @@ def _pagerank_impl(
     t_prep0 = time.perf_counter()
     vstats = _vertex_stats(edges, vertices, P).persist()
     inu, deg = F.col("inu"), F.col("deg")
-    # the content fingerprint — bit_xor of per-edge xxhash64, order-
-    # insensitive and ANSI-overflow-safe — lets a resumed csr_block run
-    # whose edges CHANGED but kept the same count refuse a stale store
     st = vstats.agg(
         F.count(F.when(inu, 1)).alias("n"),
         F.coalesce(F.sum(deg), F.lit(0)).alias("n_edges"),
-        F.coalesce(F.bit_xor("h"), F.lit(0)).alias("fp"),
         F.count(F.when(inu & (deg == 0), 1)).alias("dang"),
     ).collect()[0]
-    n, n_edges, edges_fp = int(st["n"]), int(st["n_edges"]), int(st["fp"])
+    n, n_edges = int(st["n"]), int(st["n_edges"])
     if n == 0:  # degenerate input: no vertices, nothing to rank
         vstats.unpersist()
         empty = spark.createDataFrame([], "vertex_id long, rank double")
@@ -322,13 +307,17 @@ def _pagerank_impl(
     if kernel == "join":
         # iteration-invariant side of the gather join: w = 1/L from vstats
         # (the same Spark division weighted_edges does), materialized once,
-        # hash-partitioned on src_id with the state's P (co-partitioned)
+        # hash-partitioned on src_id with the state's P (co-partitioned).
+        # shuffle_hash: vstats already sits on hash(vertex_id, P), so only
+        # the edges shuffle, onto the partitioning the wedges need anyway,
+        # and the repartition below is a no-op. Left to size estimates the
+        # planner may broadcast vstats instead and still shuffle the edges.
         wedges = (
             edges.select("src_id", "dst_id")
             .join(
-                vstats.filter(deg > 0).select(
-                    F.col("vertex_id").alias("src_id"), "deg"
-                ),
+                vstats.filter(deg > 0)
+                .select(F.col("vertex_id").alias("src_id"), "deg")
+                .hint("shuffle_hash"),
                 "src_id",
             )
             .select("src_id", "dst_id", (F.lit(1.0) / deg).alias("w"))
@@ -373,16 +362,7 @@ def _pagerank_impl(
     align_frac = None
     if kernel == "csr_block":
         t0 = time.perf_counter()
-        if start_state is not None and block_dir is not None:
-            # resume fast path: reattach the prior run's store if its
-            # manifest matches this graph (count AND content fingerprint)
-            store = _attach_csr_blocks(
-                block_dir, P, n_edges, fingerprint=edges_fp
-            )
-        if store is None:
-            store = _build_csr_blocks(
-                edges, P, block_dir, n_edges, fingerprint=edges_fp
-            )
+        store = _build_csr_blocks(edges, P, block_dir, n_edges)
         t_blocks = time.perf_counter() - t0
         align_frac = _alignment_fraction(state, P, n=n)
         if align_frac is not None and align_frac < 1.0:
@@ -629,99 +609,70 @@ class _BlockStore:
     """Handle to the CSR block set built by _build_csr_blocks."""
 
     path: str
-    n_edges: int
     owns_dir: bool
-    run_id: str = ""
-    num_buckets: int = 0
+    run_id: str
     # dst id bounds (from the build): they cut the blob dst ranges, and
     # when they fit int32 the packed partial cells carry 4-byte ids
-    min_dst: int = -(2**62)
-    max_dst: int = 2**62
+    min_dst: int
+    max_dst: int
 
 
-_STORE_VERSION = 2  # v2: per-src suw replaces per-edge w; narrowed dst/starts
-# stores are float64 only; the manifest still records it, so attach refuses
-# a store of any other dtype (e.g. a float32 store of an older build)
 _MANIFEST = "manifest.json"
 
 
 # --- block-store filesystem layer ------------------------------------------
-# block_dir is either a plain/`file://` local path (fast path: np.save +
-# np.load(mmap) — the OS page cache keeps blocks RAM-hot across iterations)
-# or any URI pyarrow.fs can open (`hdfs://`, `s3://`, ...), so the store
-# works when executors do NOT share a local disk. Remote blocks are read
-# fully per task (no mmap); one read per bucket per iteration.
+# block_dir is either a plain local path or any URI pyarrow.fs can open
+# (`file://`, `hdfs://`, `s3://`, ...), so the store works when executors
+# do NOT share a local disk. Every path is opened through pyarrow.fs; the
+# one fork is the block read: plain-path blocks are np.load(mmap) — the OS
+# page cache keeps them RAM-hot across iterations — while URI blocks are
+# read fully per task, one read per bucket per iteration.
 
 
-def _is_remote(path: str) -> bool:
-    # any URI (including file://) routes through pyarrow.fs; plain paths
-    # take the np.save/np.load(mmap) fast path
-    return "://" in path
-
-
-def _fs_from_uri(path: str):
-    from pyarrow import fs as pafs
-
-    return pafs.FileSystem.from_uri(path)
+def _store_fs(path: str) -> tuple[pafs.FileSystem, str]:
+    """(filesystem, path inside it): URIs by their scheme, plain paths as
+    local absolute paths."""
+    if "://" in path:
+        return pafs.FileSystem.from_uri(path)
+    return pafs.LocalFileSystem(), os.path.abspath(path)
 
 
 def _store_mkdirs(dirpath: str) -> None:
-    if _is_remote(dirpath):
-        fs, inner = _fs_from_uri(dirpath)
-        fs.create_dir(inner, recursive=True)
-    else:
-        os.makedirs(dirpath, exist_ok=True)
+    fs, inner = _store_fs(dirpath)
+    fs.create_dir(inner, recursive=True)
 
 
 def _store_list(dirpath: str) -> list[str]:
-    if _is_remote(dirpath):
-        from pyarrow import fs as pafs
-
-        fs, inner = _fs_from_uri(dirpath)
-        infos = fs.get_file_info(pafs.FileSelector(inner, allow_not_found=True))
-        return [os.path.basename(i.path) for i in infos]
-    p = dirpath
-    return os.listdir(p) if os.path.isdir(p) else []
+    fs, inner = _store_fs(dirpath)
+    infos = fs.get_file_info(pafs.FileSelector(inner, allow_not_found=True))
+    return [os.path.basename(i.path) for i in infos]
 
 
 def _store_delete(path: str) -> None:
-    if _is_remote(path):
-        fs, inner = _fs_from_uri(path)
-        fs.delete_file(inner)
-    else:
-        os.remove(path)
+    fs, inner = _store_fs(path)
+    fs.delete_file(inner)
 
 
 def _store_write_bytes(path: str, data: bytes) -> None:
-    if _is_remote(path):
-        fs, inner = _fs_from_uri(path)
-        with fs.open_output_stream(inner) as f:
-            f.write(data)
-    else:
-        with open(path, "wb") as f:
-            f.write(data)
+    fs, inner = _store_fs(path)
+    with fs.open_output_stream(inner) as f:
+        f.write(data)
 
 
 def _store_read_bytes(path: str) -> bytes:
-    if _is_remote(path):
-        fs, inner = _fs_from_uri(path)
-        with fs.open_input_stream(inner) as f:
-            return f.read()
-    with open(path, "rb") as f:
+    fs, inner = _store_fs(path)
+    with fs.open_input_stream(inner) as f:
         return f.read()
 
 
 def _store_write_npy(path: str, arr: np.ndarray) -> None:
-    if _is_remote(path):
-        buf = io.BytesIO()
-        np.save(buf, arr)
-        _store_write_bytes(path, buf.getvalue())
-    else:
-        np.save(path, arr)
+    fs, inner = _store_fs(path)
+    with fs.open_output_stream(inner) as f:
+        np.save(f, arr)
 
 
 def _store_read_npy(path: str) -> np.ndarray:
-    if _is_remote(path):
+    if "://" in path:
         return np.load(io.BytesIO(_store_read_bytes(path)))
     return np.load(path, mmap_mode="r")
 
@@ -784,7 +735,6 @@ def _build_csr_blocks(
     P: int,
     block_dir: str | None,
     n_edges: int,
-    fingerprint: int | None = None,
 ) -> _BlockStore:
     """One-time edge "upload" (S5 analog — clEnqueueWriteBuffer of the CSR
     arrays, opencl/pagerank.c:456-478): bucket edges by
@@ -802,7 +752,7 @@ def _build_csr_blocks(
     Spark's HashPartitioning placement, so these buckets line up with the
     rank state's physical partitions for the iteration loop.
 
-    Store format v2: PageRank's edge weight is purely a function of the
+    Per-source weights: PageRank's edge weight is purely a function of the
     source (w = 1/out-degree, reference openmp/pagerank.c's val[] built
     from outdeg), so one weight per UNIQUE source (suw) carries it at
     |su| ≤ |edges| elements — at 256M edges / 16M vertices that keeps
@@ -904,60 +854,11 @@ def _build_csr_blocks(
     _store_write_bytes(
         os.path.join(path, _MANIFEST),
         json.dumps(
-            {
-                "version": _STORE_VERSION,
-                "run_id": run_id,
-                "P": P,
-                "dtype": "float64",
-                "n_edges": n_edges,
-                "edges_fp": fingerprint,
-                "min_dst": min_dst,
-                "max_dst": max_dst,
-                "pkeys": sorted(int(r["pkey"]) for r in rows),
-            }
+            {"run_id": run_id, "pkeys": sorted(int(r["pkey"]) for r in rows)}
         ).encode(),
     )
     return _BlockStore(
-        path=path,
-        n_edges=n_edges,
-        owns_dir=owns,
-        run_id=run_id,
-        num_buckets=len(rows),
-        min_dst=min_dst,
-        max_dst=max_dst,
-    )
-
-
-def _attach_csr_blocks(
-    path: str,
-    P: int,
-    expected_edges: int | None = None,
-    fingerprint: int | None = None,
-) -> _BlockStore | None:
-    """Reattach an existing block store (resume path). Returns None unless
-    the manifest exists and matches (version, P, float64, and — when given —
-    edge count and content fingerprint), in which case the store is reused
-    without a rebuild. The fingerprint closes the same-count-different-
-    edges hole: a resumed run over a CHANGED graph that coincidentally
-    kept n_edges must rebuild, never silently reuse stale blocks."""
-    mf = _read_manifest(path)
-    if (
-        mf is None
-        or mf.get("version") != _STORE_VERSION
-        or mf.get("P") != P
-        or mf.get("dtype") != "float64"
-        or (expected_edges is not None and mf.get("n_edges") != expected_edges)
-        or (fingerprint is not None and mf.get("edges_fp") != fingerprint)
-    ):
-        return None
-    return _BlockStore(
-        path=path,
-        n_edges=mf["n_edges"],
-        owns_dir=False,
-        run_id=mf["run_id"],
-        num_buckets=len(mf["pkeys"]),
-        min_dst=mf.get("min_dst", -(2**62)),
-        max_dst=mf.get("max_dst", 2**62),
+        path=path, owns_dir=owns, run_id=run_id, min_dst=min_dst, max_dst=max_dst
     )
 
 
@@ -991,8 +892,8 @@ def _gather_scatter_blocks(
     only pkeys the manifest lists as blockless are skipped.
     """
     path, run_id = store.path, store.run_id
-    # int32 dst ids in the packed cells when every dst fits (bounds are
-    # recorded in the manifest at build time)
+    # int32 dst ids in the packed cells when every dst fits (bounds come
+    # from the build)
     use32 = -(2**31) <= store.min_dst and store.max_dst < 2**31
     id_np = np.int32 if use32 else np.int64
     lo_id, hi_id = store.min_dst, store.max_dst
@@ -1188,50 +1089,31 @@ def resume_pagerank(
     **kwargs,
 ) -> PageRankResult:
     """Restart PageRank from the latest catalog checkpoint: reload the rank
-    vector, continue iterating with identical semantics. Total iteration
-    count (done-before + done-after) matches an uninterrupted run because
-    the state is the exact per-iteration vector (tests/test_resume.py)."""
+    vector and continue through pagerank() with the checkpointed state, so
+    every kernel/hub option a fresh run accepts works on a resumed run (a
+    csr_block run resumes as csr_block and builds a fresh store).
+    Checkpointing continues through the resumed run: a second failure
+    resumes from the latest post-resume snapshot, not the original one.
+
+    The total iteration count (done-before + done-after) matches an
+    uninterrupted run. The ranks are bit-identical to it for the join
+    kernel. For csr_block they are close but not bit-identical:
+    differences up to 7e-18 were seen on
+    synth_powerlaw_edges(2000, 16000, seed=11), and the tests pin allclose
+    1e-12."""
     snap = catalog.latest_snapshot(checkpoint_table)
     if snap is None:
         return pagerank(spark, edges, checkpoint_table=checkpoint_table, **kwargs)
-    start_iter = snap["props"]["iter"]
-    prev_metrics = snap["props"].get("metrics", [])
     state = catalog.read(spark, checkpoint_table).select(
         "vertex_id", "dangling", "rank"
     )
-    res = _continue(
-        spark,
-        edges,
-        state,
-        start_iter,
-        prev_metrics,
-        checkpoint_table=checkpoint_table,
-        **kwargs,
-    )
-    return res
-
-
-def _continue(
-    spark: SparkSession,
-    edges: DataFrame,
-    state: DataFrame,
-    start_iter: int,
-    prev_metrics: list,
-    **kwargs,
-) -> PageRankResult:
-    """Continuation used by resume — delegates to pagerank() with the
-    checkpointed state, so EVERY kernel/hub option a fresh run
-    accepts also works on a resumed run (a csr_block run resumes as
-    csr_block, reattaching block_dir when its manifest matches).
-    Checkpointing continues through the resumed run: a second failure
-    resumes from the latest post-resume snapshot, not the original one.
-    Genuinely unknown kwargs still fail with TypeError via pagerank()."""
     return pagerank(
         spark,
         edges,
+        checkpoint_table=checkpoint_table,
         start_state=state,
-        start_iter=start_iter,
-        prev_metrics=prev_metrics,
+        start_iter=snap["props"]["iter"],
+        prev_metrics=snap["props"].get("metrics", []),
         **kwargs,
     )
 

@@ -1,9 +1,10 @@
 """csr_block block-store hardening: manifest validation, stale-store
-clearing, URI (pyarrow.fs) storage layer, resume-as-csr_block, and the
-bucket↔task alignment probe."""
+clearing, URI (pyarrow.fs) storage layer, resume-as-csr_block (every run
+builds its own store), and the bucket↔task alignment probe."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import numpy as np
@@ -13,7 +14,8 @@ from pyspark.sql import functions as F
 from ps_pagerank_spark.operators.pagerank import (
     _MANIFEST,
     _alignment_fraction,
-    _attach_csr_blocks,
+    _build_csr_blocks,
+    _gather_scatter_blocks,
     pagerank,
     resume_pagerank,
 )
@@ -23,6 +25,18 @@ from tests.conftest import BIG_EDGES, SMALL_EDGES
 
 def _ranks(res):
     return {r["vertex_id"]: r["rank"] for r in res.ranks.collect()}
+
+
+def _run_id(bdir) -> str:
+    return json.loads((bdir / _MANIFEST).read_text())["run_id"]
+
+
+def _allclose(got: dict, want: dict) -> bool:
+    assert got.keys() == want.keys()
+    return np.allclose(
+        [got[v] for v in sorted(got)], [want[v] for v in sorted(want)],
+        atol=1e-12,
+    )
 
 
 def test_csr_block_uri_store_matches_join(spark, big_edges_df, tmp_path):
@@ -49,8 +63,9 @@ def test_stale_blocks_cleared_on_rebuild(spark, tmp_path, big_edges_df,
     graph into the next run: bucket files with no counterpart in the new
     graph are cleared, so scores equal a fresh join-kernel run."""
     bdir = str(tmp_path / "blocks")
-    pagerank(spark, big_edges_df, kernel="csr_block", block_dir=bdir,
-             num_partitions=4, fixed_iterations=1)
+    res = pagerank(spark, big_edges_df, kernel="csr_block", block_dir=bdir,
+                   num_partitions=4, fixed_iterations=1)
+    assert res.phases.get("block_alignment") == 1.0
     n_files_big = len(os.listdir(bdir))
     assert n_files_big > 1
     want = _ranks(pagerank(spark, small_edges_df, num_partitions=4))
@@ -65,20 +80,16 @@ def test_stale_blocks_cleared_on_rebuild(spark, tmp_path, big_edges_df,
 def test_stale_manifest_fails_loudly(spark, tmp_path, big_edges_df):
     """A manifest from a different run id (stale / overwritten store) must
     abort the job, not silently contribute phantom edges."""
-    bdir = str(tmp_path / "blocks")
-    pagerank(spark, big_edges_df, kernel="csr_block", block_dir=bdir,
-             num_partitions=4, fixed_iterations=1)
     import dataclasses
 
-    store = _attach_csr_blocks(bdir, 4, None)
-    assert store is not None
+    store = _build_csr_blocks(
+        big_edges_df, 4, str(tmp_path / "blocks"), len(set(BIG_EDGES))
+    )
     # a handle whose run no longer matches the on-disk manifest — e.g. a
-    # concurrent run overwrote the dir after this run attached it. The
+    # concurrent run overwrote the dir after this run built it. The
     # per-worker validation cache has never seen this run id, so every
     # worker re-reads the manifest and must refuse.
     store = dataclasses.replace(store, run_id="deadbeef")
-    from ps_pagerank_spark.operators.pagerank import _gather_scatter_blocks
-
     state = (
         big_edges_df.select(F.col("src_id").alias("vertex_id"))
         .distinct()
@@ -89,36 +100,6 @@ def test_stale_manifest_fails_loudly(spark, tmp_path, big_edges_df):
         _gather_scatter_blocks(state, store, 4).collect()
 
 
-def test_attach_validates_manifest(spark, tmp_path, big_edges_df):
-    bdir = str(tmp_path / "blocks")
-    res = pagerank(spark, big_edges_df, kernel="csr_block", block_dir=bdir,
-                   num_partitions=4, fixed_iterations=1)
-    n_edges = len(set(BIG_EDGES))
-    assert _attach_csr_blocks(bdir, 4, n_edges) is not None
-    assert _attach_csr_blocks(bdir, 8, n_edges) is None  # P
-    assert _attach_csr_blocks(bdir, 4, n_edges + 1) is None
-    assert _attach_csr_blocks(str(tmp_path / "nope"), 4, None) is None
-    assert res.phases.get("block_alignment") == 1.0
-    # a store written by an older format version must rebuild, not attach:
-    # v2 readers expect per-source suw + narrowed dst/starts
-    import json as _json
-
-    mf_path = tmp_path / "blocks" / _MANIFEST
-    mf = _json.loads(mf_path.read_text())
-    # keys this reader does not use (older builds also recorded src id
-    # bounds) are ignored: such a store still attaches
-    mf_path.write_text(_json.dumps({**mf, "src_bounds": [1, 11]}))
-    assert _attach_csr_blocks(str(bdir), 4, n_edges) is not None
-    # stores are float64 only: a float32 store left by an older build
-    # must rebuild, not attach
-    assert mf["dtype"] == "float64"
-    mf_path.write_text(_json.dumps({**mf, "dtype": "float32"}))
-    assert _attach_csr_blocks(str(bdir), 4, n_edges) is None
-    mf["version"] = 1
-    mf_path.write_text(_json.dumps(mf))
-    assert _attach_csr_blocks(str(bdir), 4, n_edges) is None
-
-
 def test_build_weights_are_exact_inverse_out_degree(spark, tmp_path):
     """The build counts each source's out-degree inside its bucket
     (every edge of a source lands in one bucket) and stores
@@ -126,10 +107,7 @@ def test_build_weights_are_exact_inverse_out_degree(spark, tmp_path):
     inexact) every block's suw must equal weighted_edges' Spark-computed
     1/out-degree bit for bit; a build whose bucket counts disagree with
     the vertex aggregate's Σdeg must raise."""
-    import json as _json
-
     from ps_pagerank_spark.operators.graph import weighted_edges
-    from ps_pagerank_spark.operators.pagerank import _build_csr_blocks
     from ps_pagerank_spark.sources.pages import synth_powerlaw_edges
 
     pairs = sorted({(int(s), int(d)) for s, d in
@@ -144,7 +122,7 @@ def test_build_weights_are_exact_inverse_out_degree(spark, tmp_path):
     bdir = tmp_path / "blocks"
     _build_csr_blocks(edges, 4, str(bdir), len(pairs))
     got = {}
-    for k in _json.loads((bdir / _MANIFEST).read_text())["pkeys"]:
+    for k in json.loads((bdir / _MANIFEST).read_text())["pkeys"]:
         su = np.load(bdir / f"blk{k}_su.npy")
         suw = np.load(bdir / f"blk{k}_suw.npy")
         assert suw.dtype == np.float64
@@ -159,8 +137,9 @@ def test_build_weights_are_exact_inverse_out_degree(spark, tmp_path):
 
 def test_resume_csr_block_identical(spark, tmp_path, big_edges_df):
     """Kill a csr_block run after k iterations, resume with the SAME
-    kernel kwargs (previously a TypeError): identical scores and total
-    iteration count, reusing the block store via its manifest."""
+    kernel kwargs (previously a TypeError): the same scores (allclose
+    1e-12) and total iteration count. The resume rebuilds the store in the
+    same block_dir (a new run id); it does not reuse the old one."""
     full = pagerank(
         spark, big_edges_df, dangling_mode="redistribute", num_partitions=4,
         kernel="csr_block", block_dir=str(tmp_path / "b_full"),
@@ -168,22 +147,20 @@ def test_resume_csr_block_identical(spark, tmp_path, big_edges_df):
     want = _ranks(full)
 
     cat = Catalog(str(tmp_path / "ckpt"))
-    bdir = str(tmp_path / "b_resume")
+    bdir = tmp_path / "b_resume"
     pagerank(
         spark, big_edges_df, dangling_mode="redistribute", num_partitions=4,
-        kernel="csr_block", block_dir=bdir, fixed_iterations=5,
+        kernel="csr_block", block_dir=str(bdir), fixed_iterations=5,
         checkpoint=cat, checkpoint_every=1,
     )
+    first_run = _run_id(bdir)
     resumed = resume_pagerank(
         spark, big_edges_df, cat, dangling_mode="redistribute",
-        num_partitions=4, kernel="csr_block", block_dir=bdir,
+        num_partitions=4, kernel="csr_block", block_dir=str(bdir),
     )
-    got = _ranks(resumed)
+    assert _run_id(bdir) != first_run
     assert resumed.iterations == full.iterations
-    assert np.allclose(
-        [got[v] for v in sorted(got)], [want[v] for v in sorted(want)],
-        atol=1e-12,
-    )
+    assert _allclose(_ranks(resumed), want)
 
 
 def test_alignment_probe(spark, big_edges_df):
@@ -199,15 +176,12 @@ def test_alignment_probe(spark, big_edges_df):
     assert _alignment_fraction(misaligned, 4) < 1.0
 
 
-def test_attach_requires_content_fingerprint(spark, tmp_path, big_edges_df):
-    """The manifest's edge COUNT alone cannot detect a changed graph with
-    the same number of edges; the content fingerprint (bit_xor of per-edge
-    xxhash64) must: a resumed run over same-count-different-edges REBUILDS
-    the store instead of silently reusing stale blocks."""
-    import json as _json
-
+def test_resume_over_changed_graph_rebuilds_store(spark, tmp_path,
+                                                 big_edges_df):
+    """A block_dir left by a run over a DIFFERENT graph with the same edge
+    count is never read: resuming into it gives the same scores as
+    resuming into an empty dir, and its run id changes."""
     from ps_pagerank_spark.sources.edgelist import edges_from_pairs
-    from tests.conftest import BIG_EDGES
 
     bdir = tmp_path / "blocks"
     cat = Catalog(str(tmp_path / "ckpt"))
@@ -216,36 +190,21 @@ def test_attach_requires_content_fingerprint(spark, tmp_path, big_edges_df):
         kernel="csr_block", block_dir=str(bdir), fixed_iterations=3,
         checkpoint=cat, checkpoint_every=1,
     )
-    mf = _json.loads((bdir / _MANIFEST).read_text())
-    assert mf["edges_fp"] is not None
-    # unit level: attach honors the fingerprint
-    ok = _attach_csr_blocks(
-        str(bdir), 4, mf["n_edges"], fingerprint=mf["edges_fp"]
-    )
-    assert ok is not None
-    assert (
-        _attach_csr_blocks(
-            str(bdir), 4, mf["n_edges"], fingerprint=mf["edges_fp"] ^ 1
-        )
-        is None
-    )
-
-    # behavioral: same edges → reattach (run_id unchanged); same COUNT but
-    # one changed edge → rebuild (run_id rotates)
-    resume_pagerank(
-        spark, big_edges_df, cat, dangling_mode="redistribute",
-        num_partitions=4, kernel="csr_block", block_dir=str(bdir),
-    )
-    assert _json.loads((bdir / _MANIFEST).read_text())["run_id"] == mf["run_id"]
-
+    first_run = _run_id(bdir)
     changed = [(3, 2) if e == (1, 2) else e for e in BIG_EDGES]
-    assert len(changed) == len(BIG_EDGES)
+    assert len(set(changed)) == len(set(BIG_EDGES))
     changed_df = edges_from_pairs(spark, changed)
-    resume_pagerank(
-        spark, changed_df, cat, dangling_mode="redistribute",
-        num_partitions=4, kernel="csr_block", block_dir=str(bdir),
+    kw = dict(
+        dangling_mode="redistribute", num_partitions=4, kernel="csr_block",
+        fixed_iterations=4,
     )
-    assert _json.loads((bdir / _MANIFEST).read_text())["run_id"] != mf["run_id"]
+    reused = resume_pagerank(spark, changed_df, cat, block_dir=str(bdir), **kw)
+    assert _run_id(bdir) != first_run
+    fresh = resume_pagerank(
+        spark, changed_df, cat, block_dir=str(tmp_path / "empty"), **kw
+    )
+    assert reused.iterations == fresh.iterations == 7
+    assert _allclose(_ranks(reused), _ranks(fresh))
 
 
 def test_cli_resume_keeps_csr_block_kernel(spark, tmp_path, big_edges_df,
@@ -253,7 +212,8 @@ def test_cli_resume_keeps_csr_block_kernel(spark, tmp_path, big_edges_df,
     """--resume must pass --kernel/--block-dir/--num-partitions through to
     resume_pagerank (a stale workaround used to strip them, silently
     restarting on the join kernel): drive the real CLI dispatch and check
-    the store is REATTACHED plus identical scores and total iterations."""
+    the resume builds a csr_block store in --block-dir, plus the same
+    scores (allclose 1e-12) and total iterations."""
     import ps_pagerank_spark.operators.pagerank as pr
     from jobs.pagerank_job import main
 
@@ -261,7 +221,7 @@ def test_cli_resume_keeps_csr_block_kernel(spark, tmp_path, big_edges_df,
     big_edges_df.write.parquet(edges_path)
     cat_dir = str(tmp_path / "cat")
     cat = Catalog(cat_dir)
-    bdir = str(tmp_path / "blocks")
+    bdir = tmp_path / "blocks"
 
     # eps=1e-6 matches the CLI's --eps default (library default is 1e-8)
     full = pagerank(
@@ -273,34 +233,32 @@ def test_cli_resume_keeps_csr_block_kernel(spark, tmp_path, big_edges_df,
     # interrupted run: csr_block with a persistent store + checkpoints
     pagerank(
         spark, spark.read.parquet(edges_path), dangling_mode="redistribute",
-        num_partitions=4, kernel="csr_block", block_dir=bdir, eps=1e-6,
+        num_partitions=4, kernel="csr_block", block_dir=str(bdir), eps=1e-6,
         fixed_iterations=5, checkpoint=cat, checkpoint_every=1,
     )
+    first_run = _run_id(bdir)
 
-    attached = {}
-    orig = pr._attach_csr_blocks
+    built = []
+    orig = pr._build_csr_blocks
 
-    def spy(*a, **k):
-        store = orig(*a, **k)
-        attached["ok"] = store is not None
-        return store
+    def spy(edges, P, block_dir, n_edges):
+        built.append((P, block_dir))
+        return orig(edges, P, block_dir, n_edges)
 
-    monkeypatch.setattr(pr, "_attach_csr_blocks", spy)
+    monkeypatch.setattr(pr, "_build_csr_blocks", spy)
     main(
         [
             "--edges", edges_path, "--catalog", cat_dir, "--out", "ranks",
             "--dangling", "redistribute", "--kernel", "csr_block",
-            "--block-dir", bdir, "--num-partitions", "4", "--resume",
+            "--block-dir", str(bdir), "--num-partitions", "4", "--resume",
         ],
         spark=spark,
     )
-    assert attached.get("ok") is True  # resumed AS csr_block, store reused
+    assert built == [(4, str(bdir))]  # resumed AS csr_block, in --block-dir
+    assert _run_id(bdir) != first_run
     got = {
         r["vertex_id"]: r["rank"] for r in cat.read(spark, "ranks").collect()
     }
     props = cat.latest_snapshot("ranks")["props"]
     assert props["iterations"] == full.iterations  # same TOTAL count
-    assert np.allclose(
-        [got[v] for v in sorted(got)], [want[v] for v in sorted(want)],
-        atol=1e-12,
-    )
+    assert _allclose(got, want)

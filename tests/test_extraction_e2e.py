@@ -216,7 +216,7 @@ _HTML_FRAGS = [
     "https://x.example/a\tb", "https://x.example/a\nb", " https://lead",
     "mailto:a@b", "javascript:void(0)", "ftp://x/y", "HTTPS://X.example/Up",
     "https:///nohost", "https://x.example/self", "http://x.example/p",
-    "\xe9", "\xe9\u4e2d", "\udcff",
+    "\xe9", "\xe9\u4e2d", "\udcff", "https://[::1/x", "http://[",
 ]
 _PAGE_URLS = [
     "https://x.example/self", "http://x.example/p", "https://x.example/d/e.html",
@@ -298,12 +298,13 @@ def test_arrow_scan_edge_cases():
     want = [(base, d) for h in cases for d in extract_links_py(base, h)]
     src, dst = _scan_links(pa.array([base] * len(cases)), pa.array(cases, pa.binary()))
     assert list(zip(src.to_pylist(), dst.to_pylist())) == want
-    # an href urljoin rejects fails the scan the way it fails the oracle
-    bad = b'<a href="https://[::1/x">'
-    with pytest.raises(ValueError):
-        extract_links_py(base, bad)
-    with pytest.raises(ValueError):
-        _scan_links(pa.array([base]), pa.array([bad], pa.binary()))
+    # an href urljoin rejects is dropped by scan and oracle alike; the
+    # page's other links survive
+    bad = b'<a href="https://[::1/x"><a href="https://e.example/ok">'
+    assert extract_links_py(base, bad) == ["https://e.example/ok"]
+    src, dst = _scan_links(pa.array([base]), pa.array([bad], pa.binary()))
+    assert dst.to_pylist() == ["https://e.example/ok"]
+    assert src.to_pylist() == [base]
 
 
 def test_extract_links_udf_matches_oracle_in_order(spark):
