@@ -9,8 +9,12 @@ its phases, every iteration's seconds, the steady-iteration median
 (iteration 1 dropped), the iteration count, the kernel that ran, the
 rank sum and a sha256 of the ranks (vertex_id-sorted ids, then rank
 bits), so two arms can be checked for bit-identical ranks. <input> is
-either a TPC-H testdata directory (read by ``tpch_graph_edges``) or ``powerlaw:<vertices>:<edges>:<seed>`` (a
-deduplicated ``synth_powerlaw_edges`` graph).
+a TPC-H testdata directory (read by ``tpch_graph_edges``),
+``powerlaw:<vertices>:<edges>:<seed>`` (a deduplicated
+``synth_powerlaw_edges`` graph) or ``hub:<edges>:<vertices>:<hub_degree>``
+(uniform ``xxhash64`` edges over ``spark.range`` plus vertex 0 with
+``hub_degree`` distinct out-edges, deduplicated; needs
+``hub_degree < vertices``). ``jobs`` counts the Spark jobs of the call.
 
 Alternate two checkouts across invocations for an interleaved A/B; each
 rep is a fresh JVM, so no arm inherits the other's caches. Examples:
@@ -44,6 +48,18 @@ def _edges(spark, spec: str):
         return spark.createDataFrame(
             pd.DataFrame(pairs, columns=["src_id", "dst_id"])
         )
+    if spec.startswith("hub:"):
+        from pyspark.sql import functions as F
+
+        n_e, n_v, hub_deg = (int(x) for x in spec.split(":")[1:])
+        uniform = spark.range(n_e - hub_deg).select(
+            F.pmod(F.xxhash64("id", F.lit(1)), F.lit(n_v)).alias("src_id"),
+            F.pmod(F.xxhash64("id", F.lit(2)), F.lit(n_v)).alias("dst_id"),
+        )
+        hub = spark.range(1, hub_deg + 1).select(
+            F.lit(0).cast("long").alias("src_id"), F.col("id").alias("dst_id")
+        )
+        return uniform.unionByName(hub).distinct()
     from ps_pagerank_spark.sources.edgelist import tpch_graph_edges
 
     return tpch_graph_edges(spark, spec)
@@ -57,10 +73,14 @@ def main(checkout: str, spec: str, kwargs: dict) -> None:
     spark = get_spark(master="local[4]", app_name="ab_pagerank")
     edges = _edges(spark, spec).persist()
     n_edges = edges.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("ab_pagerank", "ab_pagerank")
     t0 = time.perf_counter()
     res = pagerank(spark, edges, **kwargs)
     res.ranks.count()
     wall = time.perf_counter() - t0
+    sc.setJobGroup("", "")
+    jobs = len(sc.statusTracker().getJobIdsForGroup("ab_pagerank"))
     iter_s = [m["elapsed_s"] for m in res.metrics]
     steady = iter_s[1:] or iter_s
     ranks = res.ranks.toPandas().sort_values("vertex_id")
@@ -73,7 +93,7 @@ def main(checkout: str, spec: str, kwargs: dict) -> None:
         "engine": os.path.dirname(sys.modules["ps_pagerank_spark"].__file__),
         "input": spec, "kwargs": kwargs,
         "n_edges": n_edges, "kernel": res.kernel,
-        "iterations": res.iterations, "wall_s": round(wall, 3),
+        "iterations": res.iterations, "jobs": jobs, "wall_s": round(wall, 3),
         "phases": res.phases,
         "steady_median_s": round(statistics.median(steady), 4),
         "iter_s": [round(s, 4) for s in iter_s],

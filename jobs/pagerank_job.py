@@ -5,14 +5,14 @@ Cluster launch (north_rule launch shape):
     spark-submit --py-files engine.zip jobs/pagerank_job.py \
         --pages /iceberg/pages --catalog /iceberg/warehouse \
         --out ranks --eps 1e-6 --dangling redistribute \
-        [--resume] [--checkpoint-every 5] [--hub-threshold 100000]
+        [--resume] [--checkpoint-every 5] [--kernel csr_block --block-dir /shared/blocks]
 
 Build engine.zip with ``python -m zipfile -c engine.zip ps_pagerank_spark``
 (session.get_spark does this automatically for local runs).
 
 Pipeline (SURVEY.md §3.4):
     pages ──extract_links──▶ links ──dict encode──▶ edges  [catalog]
-    edges ──pagerank (auto kernel: join or csr_block, hub split)──▶ ranks
+    edges ──pagerank (auto kernel: join or csr_block)──▶ ranks
     per-iteration metrics + lineage → catalog "metrics" table
 """
 
@@ -44,7 +44,6 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         help="'auto' picks join for provably-small inputs, csr_block "
         "otherwise (measured crossover, BENCH/BASELINE.md §4)",
     )
-    ap.add_argument("--hub-threshold", type=int, default=None)
     ap.add_argument(
         "--block-dir",
         default=None,
@@ -87,7 +86,6 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         eps=args.eps,
         dangling_mode=args.dangling,
         kernel=args.kernel,
-        hub_threshold=args.hub_threshold,
         block_dir=args.block_dir,
         num_partitions=args.num_partitions,
         checkpoint=cat if args.checkpoint_every else None,

@@ -11,7 +11,8 @@ mandated by BASELINE.json's ``input_hint``.
 Spec (stdlib-only; ``extract_links_py`` is its executable form):
   links: regex ``<a\\s[^>]*href="([^"]*)"`` over the decoded html; each href
     resolved with ``urllib.parse.urljoin(page_url, href)``, dropping an
-    href it rejects (ValueError, e.g. an unclosed IPv6 bracket); keep
+    href it rejects (ValueError, e.g. an unclosed IPv6 bracket in the
+    href, or in the page url, whose page then yields no links); keep
     http(s) only; strip ``#fragment``; drop self-loops; dedupe per page
     preserving first occurrence.
   text: remove ``<script>…</script>`` and ``<style>…</style>`` blocks, strip
@@ -70,6 +71,8 @@ _PLAIN_RE2 = (
     r"[^\x00-\x20\x7f-\xff\\\[\];]*$"
 )
 _IRREGULAR_RE2 = r"/\.\.?(?:[/?#]|$)|\?(?:#|$)"
+# page urls urljoin may reject as a base (see _scan_links)
+_ODD_BASE_RE2 = r"[\[\]]|[^\x00-\x7f]"
 
 
 def extract_links_py(page_url: str, html: bytes | str) -> list[str]:
@@ -181,6 +184,14 @@ def _scan_links(urls: pa.Array, html: pa.Array) -> tuple[pa.Array, pa.Array]:
         pc.match_substring_regex(hrefs, pattern=_PLAIN_RE2),
         pc.match_substring_regex(hrefs, pattern=_IRREGULAR_RE2),
     )
+    # urljoin parses the page url even for an absolute href and may reject
+    # it (bracketed or non-ASCII hosts): a page whose url has a bracket or
+    # a non-ASCII character resolves every href in _resolve, which drops
+    # what urljoin rejects
+    odd_base = pc.fill_null(
+        pc.match_substring_regex(urls, pattern=_ODD_BASE_RE2), False
+    ).to_numpy(zero_copy_only=False)
+    plain = pc.and_(plain, pa.array(~odd_base[page]))
     # plain hrefs lose their fragment; the rest are resolved in Python
     dst = pc.replace_substring_regex(hrefs, pattern="#.*", replacement="")
     other = np.flatnonzero(~plain.to_numpy(zero_copy_only=False))

@@ -14,10 +14,10 @@ Maps SURVEY.md §1.2 / §2.4:
 Scale notes: the dictionary join is a plain equi-join on url; `vertices`
 is only broadcast-sized in tests — production keeps it a shuffle join and
 relies on AQE. row_number over a single ordered window is a serial
-bottleneck at 10^12 rows; `encode_vertices` therefore offers
-mode="zip" (zipWithIndex-style: partition-local row_number + offset by
-partition prefix counts) which is fully parallel and still deterministic
-given a deterministic sort key.
+bottleneck at 10^12 rows, so `encode_vertices` assigns ids zipWithIndex-
+style (partition-local row_number + offset by partition prefix counts),
+which is fully parallel and still deterministic given a deterministic
+sort key.
 """
 
 from __future__ import annotations
@@ -39,20 +39,10 @@ def vertices_from_links(links: DataFrame) -> DataFrame:
 
 def encode_vertices(urls: DataFrame, mode: str = "zip") -> DataFrame:
     """urls(url) → vertices(vertex_id long, url string), dense 0..N−1,
-    deterministic (ordered by url).
-
-    mode="window": single global window row_number (exact spec; serial
-      final stage — fine to ~10^8).
-    mode="zip": sort by url, then partition-local index + exclusive prefix
-      sum of partition sizes (the classic zipWithIndex trick, expressed with
-      DataFrame ops + one tiny driver-side prefix sum). Same output, scales.
-    """
-    if mode == "window":
-        w = Window.orderBy("url")
-        return urls.select(
-            (F.row_number().over(w) - 1).cast("long").alias("vertex_id"),
-            "url",
-        )
+    deterministic (ordered by url), via ``zip_index``. "zip" is the only
+    mode; any other raises ValueError."""
+    if mode != "zip":
+        raise ValueError(f"unknown encode_vertices mode {mode!r}")
     return zip_index(urls)
 
 

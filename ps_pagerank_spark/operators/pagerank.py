@@ -29,9 +29,13 @@ Execution design (scale-first):
   * One scalar action per iteration returns (‖Δ‖², Σrank, next dangling
     mass) fused, mirroring the fused SpMV+norm GPU kernel
     (opencl/kernel_csr.cl:24-36).
-  * Skew: sources with out-degree > hub_threshold are split out of the
-    shuffle join and handled by a broadcast join of their (few) rank rows —
-    the role of the reference's hybrid ELL+COO split (README.md:80-88).
+  * Skew: in-degree hubs are absorbed by the scatter's map-side partial
+    aggregation (each task ships one partial per dst it touches), and
+    prep keeps AQE's skew-join splitting. An out-degree hub's edges stay
+    in its src hash partition: the reference's split of heavy rows into
+    the COO part of its hybrid ELL+COO format (README.md:80-88) is
+    planned as a range cut of csr_block's buckets by edge mass
+    (ROADMAP.md), not built yet.
   * kernel="csr_block": per-bucket CSR gather-scatter in a vectorized
     Arrow UDF with a one-time edge "upload" — the Spark analog of the
     reference keeping the CSR matrix resident in device memory across
@@ -63,6 +67,7 @@ Execution design (scale-first):
 
 from __future__ import annotations
 
+import inspect
 import io
 import json
 import math
@@ -162,65 +167,71 @@ def _vertex_stats(
     )
 
 
-def _split_hubs(wedges: DataFrame, vstats: DataFrame, hub_threshold: int):
-    """Split edges whose SOURCE is a super-emitter out of the shuffle join.
+@dataclass
+class _Resume:
+    """A catalog checkpoint as resume_pagerank hands it to the run."""
 
-    hub rank rows are few (vertices with out-degree > threshold), so their
-    ranks broadcast; everything else takes the normal co-partitioned path.
-    """
-    hubs = vstats.filter(F.col("deg") > hub_threshold).select(
-        F.col("vertex_id").alias("src_id")
-    )
-    hubs.persist()
-    n_hubs = hubs.count()
-    if n_hubs == 0:
-        hubs.unpersist()
-        return wedges, None
-    w_hub = wedges.join(F.broadcast(hubs), "src_id").persist()
-    w_rest = wedges.join(F.broadcast(hubs), "src_id", "left_anti").persist()
-    w_hub.count(), w_rest.count()
-    return w_rest, (w_hub, hubs)
+    state: DataFrame
+    iterations: int
+    metrics: list[dict]
 
 
-def pagerank(spark: SparkSession, edges: DataFrame, **kwargs) -> PageRankResult:
-    """Run PageRank over edges(src_id, dst_id) — see _pagerank_impl for the
-    full parameter list and semantics (this wrapper forwards everything;
-    unknown kwargs still raise TypeError).
+def pagerank(
+    spark: SparkSession,
+    edges: DataFrame,
+    *,
+    vertices: DataFrame | None = None,
+    d: float = D_DEFAULT,
+    eps: float = EPS_DEFAULT,
+    max_iter: int = 1000,
+    fixed_iterations: int | None = None,
+    dangling_mode: str = "none",
+    kernel: str = "auto",
+    num_partitions: int | None = None,
+    checkpoint: "object | None" = None,  # plans.catalog.Catalog
+    checkpoint_every: int = 0,
+    checkpoint_table: str = "pagerank_ranks",
+    block_dir: str | None = None,
+) -> PageRankResult:
+    """Run PageRank over edges(src_id, dst_id) [deduplicated upstream].
+
+    Returns the ranks plus per-iteration metrics. See the module docstring
+    for semantics and physical design.
+
+    vertices (vertex_id) is the rank universe, by default every edge
+    endpoint. fixed_iterations runs exactly that many iterations,
+    ignoring eps. Every checkpoint_every iterations the rank state and
+    metrics go to the plans.catalog.Catalog ``checkpoint`` as table
+    checkpoint_table, which resume_pagerank restarts from. block_dir
+    holds csr_block's store (default a temp dir; executor-visible).
 
     kernel defaults to "auto": the join kernel when the input is PROVABLY
-    small (the conservative Catalyst-stats probe partition_scope runs
-    for the partition floor), the csr_block kernel otherwise. Measured crossover
-    (BENCH/BASELINE.md §4): below the block-store amortization point the
-    join kernel wins outright (sf0.1: 0.19 vs 0.36 s/iter, plus csr_block
-    pays a 1-3 s store build the short loop never recoups), while at and
-    beyond benchmark scale csr_block is the flagship (256M edges local[32]:
-    14.9 vs 17.8 s/iter, and zero edge bytes move per iteration — the
-    property that holds on a 1000-executor cluster). Unknown-size inputs
-    resolve to csr_block: at 100 TB "unknown" is never small.
+    small (the conservative Catalyst-stats probe partition_scope runs for
+    the partition floor), the csr_block kernel otherwise. Measured
+    crossover (BENCH/BASELINE.md §4): below the block-store amortization
+    point the join kernel wins outright (sf0.1: 0.19 vs 0.36 s/iter, plus
+    csr_block pays a 1-3 s store build the short loop never recoups),
+    while at and beyond benchmark scale csr_block is the flagship (256M
+    edges local[32]: 14.9 vs 17.8 s/iter, and zero edge bytes move per
+    iteration — the property that holds on a 1000-executor cluster).
+    Unknown-size inputs resolve to csr_block: at 100 TB "unknown" is
+    never small.
 
     P comes from operators.partitioning.partition_scope, the sizing rule
     every graph operator shares: the session's shuffle-partition count,
     floored to ceil(n_edges / LOOP_EDGES_PER_BUCKET) when the input is
     provably tiny (explicit ``num_partitions`` always wins), pinned as
     ``spark.sql.shuffle.partitions`` for the duration of the run and
-    restored after, even on failure. The contribs aggregation then lands on hash(dst_id, P), the same partitioning the
-    rank state carries, so the per-iteration update join streams BOTH
-    sides with no re-exchange of the rank vector. With a mismatched conf
-    the planner inserts an extra full Exchange of (vertex_id, rank) every
-    iteration (plan-asserted in tests/test_partitioning.py).
+    restored after, even on failure. The contribs aggregation then lands
+    on hash(dst_id, P), the same partitioning the rank state carries, so
+    the per-iteration update join streams BOTH sides with no re-exchange
+    of the rank vector. With a mismatched conf the planner inserts an
+    extra full Exchange of (vertex_id, rank) every iteration
+    (plan-asserted in tests/test_partitioning.py).
 
-    AQE is additionally disabled around the ITERATION LOOP ONLY (see
-    _iterate's caller): AQE wraps each iteration's fixed-shape query in
-    query stages and re-exchanges the localCheckpoint'd state (its
-    LogicalRDD partitioning no longer satisfies the join requirement
-    under AQE), adding two rank-vector shuffles per iteration that the
-    static planner proves unnecessary. The loop needs none of AQE's
-    strengths: its plan is identical every iteration and skew is handled
-    explicitly (hub split + salting). PREP — the vertex aggregate, the
-    1/L weight join, the block build — keeps AQE: those are exactly the
-    one-shot skew/size-sensitive shuffles AQE is for, and measured A/B
-    (16M edges, local[8]) shows AQE-off prep is ~2x slower for both
-    kernels while loop speed is unaffected by prep's setting.
+    AQE is off around the iteration loop only, gated by kernel and state
+    size (see the comment at that call in _pagerank_impl); prep keeps the
+    session's AQE.
 
     Session contract — SINGLE-TENANT for the duration of the run: both
     pins mutate session-wide SQLConf and restore it in ``finally``, so a
@@ -234,14 +245,35 @@ def pagerank(spark: SparkSession, edges: DataFrame, **kwargs) -> PageRankResult:
     graph operator that enters partition_scope — are rejected loudly
     (RuntimeError) instead of silently corrupting each other's conf.
     """
-    kernel = kwargs.get("kernel", "auto")
+    return _run(
+        spark, edges, None, vertices=vertices, d=d, eps=eps,
+        max_iter=max_iter, fixed_iterations=fixed_iterations,
+        dangling_mode=dangling_mode, kernel=kernel,
+        num_partitions=num_partitions, checkpoint=checkpoint,
+        checkpoint_every=checkpoint_every, checkpoint_table=checkpoint_table,
+        block_dir=block_dir,
+    )
+
+
+def _run(
+    spark: SparkSession,
+    edges: DataFrame,
+    resume: _Resume | None,
+    *,
+    kernel: str,
+    num_partitions: int | None,
+    **params,
+) -> PageRankResult:
+    """The path pagerank() and resume_pagerank() share: size P and
+    resolve kernel="auto" inside one partition_scope, then run."""
     with partition_scope(
-        spark, edges, kwargs.get("num_partitions"), probe=kernel == "auto"
+        spark, edges, num_partitions, probe=kernel == "auto"
     ) as (P, small_n):
         if kernel == "auto":
             kernel = "join" if small_n is not None else "csr_block"
         return _pagerank_impl(
-            spark, edges, **{**kwargs, "kernel": kernel, "num_partitions": P}
+            spark, edges, kernel=kernel, num_partitions=P, resume=resume,
+            **params,
         )
 
 
@@ -249,38 +281,29 @@ def _pagerank_impl(
     spark: SparkSession,
     edges: DataFrame,
     *,
-    vertices: DataFrame | None = None,
-    d: float = D_DEFAULT,
-    eps: float = EPS_DEFAULT,
-    max_iter: int = 1000,
-    fixed_iterations: int | None = None,
-    dangling_mode: str = "none",
-    kernel: str = "join",
-    num_partitions: int | None = None,
-    hub_threshold: int | None = None,
-    checkpoint: "object | None" = None,  # plans.catalog.Catalog
-    checkpoint_every: int = 0,
-    checkpoint_table: str = "pagerank_ranks",
-    block_dir: str | None = None,  # csr_block store (must be executor-visible)
-    start_state: DataFrame | None = None,  # resume: (vertex_id,dangling,rank)
-    start_iter: int = 0,  # resume: iterations already done
-    prev_metrics: list | None = None,  # resume: metrics of the prior run
+    vertices: DataFrame | None,
+    d: float,
+    eps: float,
+    max_iter: int,
+    fixed_iterations: int | None,
+    dangling_mode: str,
+    kernel: str,
+    num_partitions: int,
+    checkpoint,
+    checkpoint_every: int,
+    checkpoint_table: str,
+    block_dir: str | None,
+    resume: _Resume | None,
 ) -> PageRankResult:
-    """Run PageRank over edges(src_id, dst_id) [deduplicated upstream].
-
-    Returns converged ranks plus per-iteration metrics. See module
-    docstring for semantics and physical design.
-
-    start_state resumes from a checkpointed rank vector with IDENTICAL
-    per-kernel semantics: every kernel/hub option works on a resumed run
-    (resume_pagerank routes here). A resumed csr_block run builds a fresh
-    store in block_dir, as a fresh run does.
-    """
+    """One run at a resolved kernel and P. A resumed run (``resume``)
+    takes its state, iteration count, metrics and redistribute mass from
+    the checkpoint and otherwise runs as a fresh one: same prep, and a
+    csr_block run builds its own store in block_dir."""
     if dangling_mode not in ("none", "redistribute"):
         raise ValueError(f"unknown dangling_mode {dangling_mode!r}")
     if kernel not in ("join", "csr_block"):
         raise ValueError(f"unknown kernel {kernel!r}")
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = num_partitions
     # setup cost discipline — ONE shared pass over the edges answers every
     # prep question: vstats (see _vertex_stats) plus one scalar agg over it
     # that also materializes it. The only other action before the loop is
@@ -325,36 +348,24 @@ def _pagerank_impl(
             .persist()
         )
         wedges.count()
-    if start_state is not None:
-        # resume: the checkpointed vector already carries the dangling flag;
-        # _iterate reseeds the redistribute mass from Σ rank over dangling
-        # (init_dang_mass=None), matching an uninterrupted run exactly
-        state = (
-            start_state.select("vertex_id", "dangling", "rank")
-            .repartition(P, "vertex_id")
-            .localCheckpoint(eager=True)
-        )
-        init_dang_mass = None
+    # A resumed run reads the checkpointed vector, which carries the
+    # dangling flag, and seeds the redistribute mass from the checkpoint's
+    # last metrics row: the exact value the uninterrupted run fed into its
+    # next iteration. A fresh run seeds (#dangling)/N — the exact numeric
+    # path of the contract's unrolled oracle (dm0 in _pagerank_sql).
+    if resume is not None:
+        state = resume.state.select("vertex_id", "dangling", "rank")
+        dang_mass = resume.metrics[-1]["dangling_mass"]
     else:
-        state = (
-            vstats.filter(inu)
-            .select(
-                "vertex_id",
-                (deg == 0).alias("dangling"),
-                (F.lit(1.0) / F.lit(float(n))).alias("rank"),
-            )
-            .repartition(P, "vertex_id")
-            .localCheckpoint(eager=False)
+        state = vstats.filter(inu).select(
+            "vertex_id",
+            (deg == 0).alias("dangling"),
+            (F.lit(1.0) / F.lit(float(n))).alias("rank"),
         )
-        # seed mass = (#dangling)/N — the exact numeric path of the
-        # contract's unrolled oracle (dm0 in _pagerank_sql)
-        init_dang_mass = 0.0
-        if dangling_mode == "redistribute":
-            init_dang_mass = int(st["dang"]) / float(n)
-
-    hub_part = None
-    if hub_threshold is not None and kernel == "join":
-        wedges, hub_part = _split_hubs(wedges, vstats, hub_threshold)
+        dang_mass = int(st["dang"]) / float(n)
+    state = state.repartition(P, "vertex_id").localCheckpoint(eager=False)
+    if dangling_mode != "redistribute":
+        dang_mass = 0.0
     t_prep = time.perf_counter() - t_prep0
 
     store = None
@@ -377,11 +388,13 @@ def _pagerank_impl(
             )
 
     t_conv0 = time.perf_counter()
-    # AQE off for the LOOP only (restored after): every localCheckpoint
-    # compiled inside _iterate then exposes its hash(vertex_id, P)
-    # partitioning to the static planner, so no iteration re-exchanges
-    # the rank vector. Prep above keeps the session's AQE — its one-shot
-    # joins/aggs are what AQE is good at (measured ~2x prep win).
+    # AQE off for the LOOP only (restored after): under AQE a
+    # localCheckpoint'd state's LogicalRDD partitioning no longer
+    # satisfies the update join, so every iteration re-exchanges the rank
+    # vector twice; the static planner sees its hash(vertex_id, P)
+    # partitioning and adds no exchange. Prep above keeps the session's
+    # AQE — its one-shot joins/aggs are what AQE is good at (AQE-off prep
+    # measured ~2x slower for both kernels, 16M edges, local[8]).
     #
     # The gate is kernel-aware (measured A/B, BENCH/BASELINE.md §4):
     # the JOIN kernel's loop is shuffle-bound (gather join + contrib agg +
@@ -401,7 +414,6 @@ def _pagerank_impl(
         state, it, converged, metrics = _iterate(
             state,
             wedges,
-            hub_part,
             store,
             n=n,
             P=P,
@@ -410,9 +422,9 @@ def _pagerank_impl(
             max_iter=max_iter,
             fixed_iterations=fixed_iterations,
             dangling_mode=dangling_mode,
-            start_iter=start_iter,
-            metrics=list(prev_metrics or []),
-            init_dang_mass=init_dang_mass,
+            start_iter=resume.iterations if resume else 0,
+            metrics=list(resume.metrics) if resume else [],
+            dang_mass=dang_mass,
             checkpoint=checkpoint,
             checkpoint_every=checkpoint_every,
             checkpoint_table=checkpoint_table,
@@ -426,9 +438,6 @@ def _pagerank_impl(
     if store is not None and store.owns_dir:
         # best-effort: driver sees the store on local/shared FS only
         shutil.rmtree(store.path, ignore_errors=True)
-    if hub_part is not None:
-        hub_part[0].unpersist()
-        hub_part[1].unpersist()
     phases = {
         "prep_s": round(t_prep, 3),
         "blocks_s": round(t_blocks, 3),
@@ -449,7 +458,6 @@ def _pagerank_impl(
 def _iterate(
     state: DataFrame,
     wedges: DataFrame | None,
-    hub_part,
     store: "_BlockStore | None",
     *,
     n: int,
@@ -461,12 +469,13 @@ def _iterate(
     dangling_mode: str,
     start_iter: int,
     metrics: list[dict],
-    init_dang_mass: float | None = None,
+    dang_mass: float,
     checkpoint=None,
     checkpoint_every: int = 0,
     checkpoint_table: str = "pagerank_ranks",
 ):
-    """Shared power-method loop (fresh runs and resumed runs).
+    """Shared power-method loop (fresh runs and resumed runs). dang_mass
+    is the redistribute mass of the incoming state (0.0 in mode "none").
 
     Per-iteration cost discipline: ONE action. new_state is
     localCheckpoint(eager=False) — Dataset.checkpoint builds the
@@ -484,17 +493,6 @@ def _iterate(
     eager checkpointing per iteration, round 1's design, pays a second job
     per iteration for the same truncation.)
     """
-    # dangling mass of the incoming state; callers pass the exact seed
-    # (fresh run: (#dangling)/N — the contract's numeric path; resume:
-    # checkpointed Σrank over dangling) or let us recompute it
-    dang_mass = 0.0
-    if dangling_mode == "redistribute":
-        dang_mass = (
-            init_dang_mass
-            if init_dang_mass is not None
-            else state.filter("dangling").agg(F.sum("rank")).collect()[0][0] or 0.0
-        )
-
     it = start_iter
     converged = False
     target_iters = (
@@ -520,7 +518,7 @@ def _iterate(
         if store is not None:
             contribs = _gather_scatter_blocks(state, store, P)
         else:
-            contribs = _gather_scatter_join(state, wedges, hub_part, gather_cols)
+            contribs = _gather_scatter_join(state, wedges, gather_cols)
 
         new_state = (
             state.select(*old_cols)
@@ -577,7 +575,7 @@ def _join_gather_cols() -> tuple:
 
 
 def _gather_scatter_join(
-    state: DataFrame, wedges: DataFrame, hub_part, cols: tuple | None = None
+    state: DataFrame, wedges: DataFrame, cols: tuple | None = None
 ) -> DataFrame:
     """J1-J6 analog: gather = equi-join on src, scatter = hash agg on dst.
     Returns (vertex_id, _c) where _c = Σ w·rank over in-edges. ``cols``
@@ -588,10 +586,6 @@ def _gather_scatter_join(
     # same P), so SHJ probes without re-sorting the edges every iteration
     ranks = state.select(src_id, "rank").hint("shuffle_hash")
     joined = wedges.join(ranks, "src_id")
-    if hub_part is not None:
-        w_hub, hubs = hub_part
-        hub_ranks = ranks.join(F.broadcast(hubs), "src_id")
-        joined = joined.unionByName(w_hub.join(F.broadcast(hub_ranks), "src_id"))
     # shuffle_hash: the contribs already sit on hash(dst_id, P), the rank
     # state's partitioning, so the update join streams both sides. Without
     # the hint a small size estimate makes it broadcast the contribs — one
@@ -1088,34 +1082,36 @@ def resume_pagerank(
     checkpoint_table: str = "pagerank_ranks",
     **kwargs,
 ) -> PageRankResult:
-    """Restart PageRank from the latest catalog checkpoint: reload the rank
-    vector and continue through pagerank() with the checkpointed state, so
-    every kernel/hub option a fresh run accepts works on a resumed run (a
-    csr_block run resumes as csr_block and builds a fresh store).
+    """Restart PageRank from the latest catalog checkpoint. ``kwargs`` are
+    pagerank()'s, so every kernel option a fresh run accepts works on a
+    resumed run (a csr_block run resumes as csr_block and builds a fresh
+    store); with no checkpoint this is a fresh pagerank() call.
     Checkpointing continues through the resumed run: a second failure
     resumes from the latest post-resume snapshot, not the original one.
 
-    The total iteration count (done-before + done-after) matches an
-    uninterrupted run. The ranks are bit-identical to it for the join
-    kernel. For csr_block they are close but not bit-identical:
-    differences up to 7e-18 were seen on
-    synth_powerlaw_edges(2000, 16000, seed=11), and the tests pin allclose
-    1e-12."""
+    The rank state, iteration count and metrics come from the snapshot,
+    and the redistribute mass from its last metrics row. The total
+    iteration count (done-before + done-after) and the ranks are
+    bit-identical to an uninterrupted run, for both kernels. The state is
+    read lazily by iteration 1: a snapshot's data dir stays on disk when
+    later checkpoints overwrite the table."""
     snap = catalog.latest_snapshot(checkpoint_table)
     if snap is None:
         return pagerank(spark, edges, checkpoint_table=checkpoint_table, **kwargs)
-    state = catalog.read(spark, checkpoint_table).select(
-        "vertex_id", "dangling", "rank"
+    it, metrics = snap["props"]["iter"], snap["props"].get("metrics")
+    if not metrics or metrics[-1]["iter"] != it:
+        raise ValueError(
+            f"checkpoint {checkpoint_table!r} (iteration {it}) has no "
+            "metrics for its last iteration, so its redistribute mass is "
+            "unknown"
+        )
+    resume = _Resume(catalog.read(spark, checkpoint_table), it, metrics)
+    # pagerank()'s signature supplies the defaults and rejects unknown kwargs
+    args = inspect.signature(pagerank).bind(
+        spark, edges, checkpoint_table=checkpoint_table, **kwargs
     )
-    return pagerank(
-        spark,
-        edges,
-        checkpoint_table=checkpoint_table,
-        start_state=state,
-        start_iter=snap["props"]["iter"],
-        prev_metrics=snap["props"].get("metrics", []),
-        **kwargs,
-    )
+    args.apply_defaults()
+    return _run(spark, edges, resume, **args.kwargs)
 
 
 def top_k_ranks(ranks: DataFrame, k: int = 100) -> DataFrame:

@@ -10,9 +10,13 @@ format split (README.md:80-88). In Spark the equivalents are:
   * **salted repartition** (here) — plan-time fix: spread one heavy hash
     bucket across ``salt`` sub-partitions so no single task owns a hub's
     whole edge list;
-  * **hub split** (operators/pagerank._split_hubs) — algebraic fix: route
-    high-out-degree sources through a broadcast join so their fan-out
-    never concentrates in one shuffle partition.
+  * map-side partial aggregation — the scatter's groupBy(dst) sums each
+    task's contributions before the shuffle, so an in-degree hub ships
+    one partial per task, not one row per edge.
+
+Out-degree hubs are not split: the reference's ELL+COO split of heavy
+rows is planned as a range cut of csr_block's buckets by edge mass
+(ROADMAP.md).
 
 Salting trades one extra shuffle column for bounded task size; the
 aggregation side is unaffected because groupBy(dst) re-shuffles anyway
@@ -179,13 +183,13 @@ class SkewStats:
 
 
 def skew_stats(edges: DataFrame, *, hub_quantile: float = 0.999) -> SkewStats:
-    """Degree-skew diagnostics feeding the hub-split threshold (the Spark
-    analog of the reference's ELL-width tuning, matrix-formats.c:164-165).
+    """Out-degree skew diagnostics (the Spark analog of the reference's
+    ELL-width tuning, matrix-formats.c:164-165, and of its overflow count
+    for the COO part).
 
     Hubs = sources with out-degree ≥ the `hub_quantile` quantile;
-    `hub_threshold` is reported as (quantile − 1) so that passing it to
-    ``pagerank(hub_threshold=...)`` (which splits strictly-greater) selects
-    exactly this hub set.
+    `hub_threshold` is reported as (quantile − 1), so the hubs are the
+    sources with out-degree strictly greater than it.
     """
     deg = edges.groupBy("src_id").agg(F.count("*").alias("deg")).persist()
     try:
@@ -211,10 +215,11 @@ def skew_stats(edges: DataFrame, *, hub_quantile: float = 0.999) -> SkewStats:
 
 
 def partition_sizes(df: DataFrame) -> DataFrame:
-    """(partition_id, n_rows) — direct evidence of balance for tests and
-    the metrics table's per-partition lineage."""
+    """(pid, n_rows): rows per physical partition — direct evidence of
+    balance, and the metrics table's per-partition lineage
+    (plans.metrics.partition_lineage)."""
     return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
+        df.select(F.spark_partition_id().alias("pid"))
+        .groupBy("pid")
         .agg(F.count("*").alias("n_rows"))
     )

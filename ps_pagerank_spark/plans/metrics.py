@@ -11,8 +11,8 @@ produced what and to resume from any checkpoint.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from ps_pagerank_spark.operators.partitioning import partition_sizes
 from ps_pagerank_spark.plans.catalog import Catalog
 
 METRICS_SCHEMA = (
@@ -24,14 +24,11 @@ METRICS_SCHEMA = (
 
 def partition_lineage(df: DataFrame) -> list[dict]:
     """Per-partition row counts of a (checkpointed) DataFrame — cheap audit
-    lineage; one narrow job, no shuffle."""
-    rows = (
-        df.select(F.spark_partition_id().alias("pid"))
-        .groupBy("pid")
-        .agg(F.count("*").alias("rows"))
-        .collect()
-    )
-    return [{"pid": int(r["pid"]), "rows": int(r["rows"])} for r in rows]
+    lineage (operators.partitioning.partition_sizes)."""
+    return [
+        {"pid": int(r["pid"]), "rows": int(r["n_rows"])}
+        for r in partition_sizes(df).collect()
+    ]
 
 
 def append_metrics(

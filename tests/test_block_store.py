@@ -39,6 +39,14 @@ def _allclose(got: dict, want: dict) -> bool:
     )
 
 
+def _bit_equal(got: dict, want: dict) -> bool:
+    assert got.keys() == want.keys()
+    return np.array_equal(
+        np.array([got[v] for v in sorted(got)]).view(np.uint64),
+        np.array([want[v] for v in sorted(want)]).view(np.uint64),
+    )
+
+
 def test_csr_block_uri_store_matches_join(spark, big_edges_df, tmp_path):
     """block_dir as a file:// URI goes through the pyarrow.fs layer (the
     non-local store path: streamed writes, full reads, no mmap) and must
@@ -137,30 +145,30 @@ def test_build_weights_are_exact_inverse_out_degree(spark, tmp_path):
 
 def test_resume_csr_block_identical(spark, tmp_path, big_edges_df):
     """Kill a csr_block run after k iterations, resume with the SAME
-    kernel kwargs (previously a TypeError): the same scores (allclose
-    1e-12) and total iteration count. The resume rebuilds the store in the
+    kernel kwargs: bit-identical scores and the same total iteration
+    count, on the reference's big graph and on a power-law graph with
+    many dangling vertices, where a resume seeded with any other
+    redistribute mass would show. The resume rebuilds the store in the
     same block_dir (a new run id); it does not reuse the old one."""
-    full = pagerank(
-        spark, big_edges_df, dangling_mode="redistribute", num_partitions=4,
-        kernel="csr_block", block_dir=str(tmp_path / "b_full"),
-    )
-    want = _ranks(full)
+    from ps_pagerank_spark.sources.pages import synth_powerlaw_edges
 
-    cat = Catalog(str(tmp_path / "ckpt"))
-    bdir = tmp_path / "b_resume"
-    pagerank(
-        spark, big_edges_df, dangling_mode="redistribute", num_partitions=4,
-        kernel="csr_block", block_dir=str(bdir), fixed_iterations=5,
-        checkpoint=cat, checkpoint_every=1,
-    )
-    first_run = _run_id(bdir)
-    resumed = resume_pagerank(
-        spark, big_edges_df, cat, dangling_mode="redistribute",
-        num_partitions=4, kernel="csr_block", block_dir=str(bdir),
-    )
-    assert _run_id(bdir) != first_run
-    assert resumed.iterations == full.iterations
-    assert _allclose(_ranks(resumed), want)
+    pairs = sorted({(int(s), int(d)) for s, d in
+                    synth_powerlaw_edges(2000, 16000, seed=11)})
+    powerlaw = spark.createDataFrame(pairs, "src_id long, dst_id long")
+    for name, edges in (("big", big_edges_df), ("powerlaw", powerlaw)):
+        kw = dict(dangling_mode="redistribute", num_partitions=4,
+                  kernel="csr_block")
+        full = pagerank(spark, edges, block_dir=str(tmp_path / f"{name}_full"),
+                        **kw)
+        cat = Catalog(str(tmp_path / f"{name}_ckpt"))
+        bdir = tmp_path / f"{name}_resume"
+        pagerank(spark, edges, block_dir=str(bdir), fixed_iterations=5,
+                 checkpoint=cat, checkpoint_every=1, **kw)
+        first_run = _run_id(bdir)
+        resumed = resume_pagerank(spark, edges, cat, block_dir=str(bdir), **kw)
+        assert _run_id(bdir) != first_run
+        assert resumed.iterations == full.iterations, name
+        assert _bit_equal(_ranks(resumed), _ranks(full)), name
 
 
 def test_alignment_probe(spark, big_edges_df):

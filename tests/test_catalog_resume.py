@@ -52,11 +52,30 @@ def test_pagerank_resume_identical(spark, tmp_path, big_edges_df):
     )
     got = {r["vertex_id"]: r["rank"] for r in resumed.ranks.collect()}
     assert resumed.iterations == full.iterations  # same TOTAL count
-    assert np.allclose(
-        [got[v] for v in sorted(got)], [want[v] for v in sorted(want)], atol=1e-12
+    assert got.keys() == want.keys()
+    # bit-identical: the resumed loop is seeded with the exact state and
+    # redistribute mass the uninterrupted run carried into iteration 6
+    assert np.array_equal(
+        np.array([got[v] for v in sorted(got)]).view(np.uint64),
+        np.array([want[v] for v in sorted(want)]).view(np.uint64),
     )
     ref, _ = pagerank_ref(BIG_EDGES, BIG_N, dangling_mode="redistribute")
     assert np.allclose([got[v] for v in sorted(got)], ref, atol=1e-6)
+
+
+def test_resume_without_metrics_raises(spark, tmp_path, big_edges_df):
+    """Resume seeds the redistribute mass from the checkpoint's last
+    metrics row; a snapshot without one raises instead of guessing."""
+    import pytest
+
+    cat = Catalog(str(tmp_path / "bare"))
+    state = spark.createDataFrame(
+        [(3, 1, False, 0.5)],
+        "iter int, vertex_id long, dangling boolean, rank double",
+    )
+    cat.overwrite("pagerank_ranks", state, props={"iter": 3})
+    with pytest.raises(ValueError, match="no metrics"):
+        resume_pagerank(spark, big_edges_df, cat, num_partitions=4)
 
 
 def test_metrics_lineage(spark, tmp_path, big_edges_df):

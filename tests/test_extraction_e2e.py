@@ -218,8 +218,11 @@ _HTML_FRAGS = [
     "https:///nohost", "https://x.example/self", "http://x.example/p",
     "\xe9", "\xe9\u4e2d", "\udcff", "https://[::1/x", "http://[",
 ]
+# the last two are page urls urljoin rejects as a base (an unclosed IPv6
+# bracket; a host that NFKC-normalizes to contain '#'): no links at all
 _PAGE_URLS = [
     "https://x.example/self", "http://x.example/p", "https://x.example/d/e.html",
+    "https://[::1/p", "https://a\uff03b/p",
 ]
 
 

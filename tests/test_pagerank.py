@@ -123,6 +123,33 @@ def test_prep_job_count(spark, big_edges_df):
     assert counts[("csr_block", 3)] - counts[("csr_block", 1)] == 2 * 5
 
 
+def test_resume_job_count(spark, big_edges_df, tmp_path):
+    """A resumed join run reads its state lazily (iteration 1's job
+    materializes the checkpoint of the catalog read) and takes its
+    redistribute mass from the checkpoint's last metrics row, so it runs
+    no job of its own before the loop: 11 jobs here, where an eager
+    checkpoint plus a Spark recompute of the mass ran 13. Counted by job
+    group, like test_prep_job_count."""
+    from ps_pagerank_spark.operators.pagerank import resume_pagerank
+    from ps_pagerank_spark.plans.catalog import Catalog
+
+    sc = spark.sparkContext
+    big_edges_df.count()
+    cat = Catalog(str(tmp_path / "ckpt"))
+    kw = dict(kernel="join", dangling_mode="redistribute", num_partitions=4)
+    pagerank(spark, big_edges_df, fixed_iterations=2, checkpoint=cat,
+             checkpoint_every=1, **kw)
+    group = "resume-jobs-join"
+    sc.setJobGroup(group, group)
+    try:
+        res = resume_pagerank(spark, big_edges_df, cat, fixed_iterations=1,
+                              **kw)
+    finally:
+        sc.setJobGroup("", "")
+    assert res.iterations == 3
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 11
+
+
 def test_fixed_iterations(spark, big_edges_df):
     verts = vertices_id_range(spark, big_edges_df)
     res = pagerank(
@@ -132,16 +159,6 @@ def test_fixed_iterations(spark, big_edges_df):
     want, _ = pagerank_ref(BIG_EDGES, BIG_N, fixed_iterations=7)
     assert res.iterations == 7
     assert np.allclose(got, want, atol=1e-12)
-
-
-def test_hub_split_same_scores(spark, big_edges_df):
-    verts = vertices_id_range(spark, big_edges_df)
-    res = pagerank(
-        spark, big_edges_df, vertices=verts, hub_threshold=2, num_partitions=4
-    )
-    got = _ranks_np(res, BIG_N)
-    want, _ = pagerank_ref(BIG_EDGES, BIG_N)
-    assert np.allclose(got, want, atol=1e-6)
 
 
 def test_topk(spark, big_edges_df):
@@ -374,16 +391,27 @@ def test_wide_id_state_stream_kernel_equality(spark):
 
 
 def test_deleted_knobs_raise(spark, big_edges_df):
-    """pagerank() takes 16 keyword arguments. The deleted gather,
-    precision and loop-AQE knobs are unknown kwargs: TypeError."""
+    """pagerank() takes exactly these 12 keyword arguments. The deleted
+    gather, precision, loop-AQE and hub-split knobs, and the resume-only
+    values that only resume_pagerank hands to a run, are unknown kwargs:
+    TypeError."""
     import inspect
 
-    from ps_pagerank_spark.operators.pagerank import _pagerank_impl
-
-    params = inspect.signature(_pagerank_impl).parameters.values()
-    assert sum(p.kind is p.KEYWORD_ONLY for p in params) == 16
+    assert [
+        p.name for p in inspect.signature(pagerank).parameters.values()
+        if p.kind is p.KEYWORD_ONLY
+    ] == [
+        "vertices", "d", "eps", "max_iter", "fixed_iterations",
+        "dangling_mode", "kernel", "num_partitions", "checkpoint",
+        "checkpoint_every", "checkpoint_table", "block_dir",
+    ]
+    state = spark.createDataFrame(
+        [(1, False, 0.5)], "vertex_id long, dangling boolean, rank double"
+    )
     for kw in ({"gather": "shuffle"}, {"broadcast_max_vertices": 1},
-               {"dtype": "float64"}, {"loop_aqe": "auto"}):
+               {"dtype": "float64"}, {"loop_aqe": "auto"},
+               {"hub_threshold": 2}, {"start_state": state},
+               {"start_iter": 5}, {"prev_metrics": []}):
         with pytest.raises(TypeError):
             pagerank(spark, big_edges_df, kernel="join", num_partitions=4,
                      **kw)

@@ -1,13 +1,11 @@
-"""Skew handling: salted repartition balance, skew stats, hub-split
-equivalence (hub path must not change PageRank scores)."""
+"""Skew handling and partition sizing: salted repartition balance, skew
+stats, the loop's per-iteration exchanges at a custom P, the loop-AQE
+gate, the tiny-graph partition floor and the single-tenant guard."""
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import functions as F
 
-from ps_pagerank_spark.operators.pagerank import pagerank
 from ps_pagerank_spark.operators.partitioning import (
     partition_sizes,
     salted_repartition,
@@ -45,28 +43,6 @@ def test_skew_stats(spark):
     assert 0 < st.hub_edge_fraction <= 1
 
 
-def test_hub_split_matches_plain_pagerank(spark):
-    edges = hub_graph(spark)
-    # kernel pinned: hub split is a join-kernel feature, and kernel="auto"
-    # would route this RDD-backed (unknown-size) input to csr_block,
-    # silently comparing csr_block to itself
-    base = pagerank(spark, edges, fixed_iterations=10,
-                    dangling_mode="redistribute", kernel="join")
-    split = pagerank(
-        spark,
-        edges,
-        fixed_iterations=10,
-        dangling_mode="redistribute",
-        hub_threshold=100,
-        kernel="join",
-    )
-    a = {r["vertex_id"]: r["rank"] for r in base.ranks.collect()}
-    b = {r["vertex_id"]: r["rank"] for r in split.ranks.collect()}
-    assert a.keys() == b.keys()
-    for k in a:
-        assert math.isclose(a[k], b[k], rel_tol=1e-12, abs_tol=1e-15)
-
-
 def test_update_join_reuses_agg_exchange_at_custom_P(spark, big_edges_df):
     """Plan audit for the per-iteration physical shape: with
     spark.sql.shuffle.partitions pinned to P and AQE off — exactly what
@@ -100,7 +76,7 @@ def test_update_join_reuses_agg_exchange_at_custom_P(spark, big_edges_df):
             .repartition(P, "vertex_id")
             .localCheckpoint(eager=True)
         )
-        contribs = _gather_scatter_join(state, wedges, None)
+        contribs = _gather_scatter_join(state, wedges)
         new_state = state.select(
             "vertex_id", "dangling", F.col("rank").alias("_old")
         ).join(contribs, "vertex_id", "left")
@@ -221,8 +197,8 @@ def test_overlapping_pagerank_on_one_session_rejected(spark, big_edges_df):
     finally:
         pr._pagerank_impl = real_impl
 
-    # guard is released after a failed run too
-    with _pytest.raises(TypeError):
-        pr.pagerank(spark, big_edges_df, not_a_kwarg=True)
+    # guard is released after a run that fails inside the scope too
+    with _pytest.raises(ValueError, match="dangling_mode"):
+        pr.pagerank(spark, big_edges_df, dangling_mode="bogus")
     res2 = pr.pagerank(spark, big_edges_df, fixed_iterations=1)
     assert res2.iterations == 1
