@@ -15,6 +15,9 @@ a TPC-H testdata directory (read by ``tpch_graph_edges``),
 (uniform ``xxhash64`` edges over ``spark.range`` plus vertex 0 with
 ``hub_degree`` distinct out-edges, deduplicated; needs
 ``hub_degree < vertices``). ``jobs`` counts the Spark jobs of the call.
+``store_bytes`` is the total size of the csr_block store's ``blk*`` files
+when the kwargs name a ``block_dir`` (a path or a ``file://``-style URI;
+the run leaves that store in place), else null.
 
 Alternate two checkouts across invocations for an interleaved A/B; each
 rep is a fresh JVM, so no arm inherits the other's caches. Examples:
@@ -65,6 +68,18 @@ def _edges(spark, spec: str):
     return tpch_graph_edges(spark, spec)
 
 
+def _store_bytes(block_dir: str | None) -> int | None:
+    if block_dir is None:
+        return None
+    from pyarrow import fs as pafs
+
+    from ps_pagerank_spark.operators.pagerank import _store_fs
+
+    fs, inner = _store_fs(block_dir)
+    infos = fs.get_file_info(pafs.FileSelector(inner, allow_not_found=True))
+    return sum(i.size for i in infos if i.base_name.startswith("blk"))
+
+
 def main(checkout: str, spec: str, kwargs: dict) -> None:
     sys.path.insert(0, os.path.abspath(checkout))
     from ps_pagerank_spark import get_spark
@@ -99,6 +114,7 @@ def main(checkout: str, spec: str, kwargs: dict) -> None:
         "iter_s": [round(s, 4) for s in iter_s],
         "rank_sum": res.ranks.agg({"rank": "sum"}).collect()[0][0],
         "ranks_sha256": digest,
+        "store_bytes": _store_bytes(kwargs.get("block_dir")),
     }))
     spark.stop()
 

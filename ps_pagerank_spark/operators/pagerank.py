@@ -42,34 +42,34 @@ Execution design (scale-first):
     iterations (opencl/pagerank.c:456-531 uploads buffers once, then loops).
     Setup partitions the raw edges by pkey = pmod(hash(src_id), P) and
     writes one pre-digested CSR block per bucket to a block store
-    (np.save: sorted unique srcs, their 1/L weights counted in the bucket,
-    int32 gather indices, dst-run boundaries for np.add.reduceat). Per
-    iteration ONLY the rank state (V rows) crosses JVM→Python: state is
-    hash-partitioned on vertex_id with the same P, and
-    pmod(hash(v), P) IS the physical partition id, so each mapInArrow task
-    holds exactly the ranks its block gathers — no per-iteration edge
-    shuffle, no O(V) driver transfer, no broadcast. Blocks are mmap-loaded
-    (OS page cache keeps them RAM-hot across iterations). Correctness does
-    NOT depend on the alignment: missing ranks gather as 0 and every state
-    row is seen exactly once, so per-task partials always SUM to the exact
-    contribution (any repartitioning only costs extra block reads). The
-    partials leave Python as ≤P packed binary cells per bucket keyed by
-    dst range and are summed by a second Arrow stage (dense bincount, sort
+    (one Arrow IPC file per bucket: sorted unique srcs, their 1/L weights
+    counted in the bucket, int32 gather indices, dst-run boundaries for
+    np.add.reduceat). Per iteration ONLY the rank state (V rows) crosses
+    JVM→Python: state is hash-partitioned on vertex_id with the same P,
+    and pmod(hash(v), P) IS the physical partition id, so each mapInArrow
+    task holds exactly the ranks its block gathers — no per-iteration edge
+    shuffle, no O(V) driver transfer, no broadcast. Local blocks are read
+    memory-mapped, without a copy (the OS page cache keeps them RAM-hot
+    across iterations). Correctness does NOT depend on the alignment:
+    missing ranks gather as 0 and every state row is seen exactly once,
+    so per-task partials always SUM to the exact contribution (any
+    repartitioning only costs extra block reads). The partials leave
+    Python as ≤P packed binary cells per bucket keyed by dst range and
+    are summed by a second Arrow stage (dense bincount, sort
     fallback for sparse ids) — never as per-(bucket, dst) JVM rows.
     block_dir must be visible to all executors: a local/shared-FS path
-    (mmap fast path) or any pyarrow.fs URI (`hdfs://`, `s3://`, ...) when
+    (memory-mapped) or any pyarrow.fs URI (`hdfs://`, `s3://`, ...) when
     executors don't share a disk — the block store is "device memory".
     Every csr_block run, resumed runs included, builds its own store: the
-    build clears block_dir and writes a manifest (run id, the pkeys that
-    have blocks) that every reader validates, so a stale or invisible
-    store fails loudly instead of silently corrupting ranks.
+    build clears block_dir and stamps every block file with a fresh run
+    id; readers open only the buckets the build listed and check each
+    file's run id, so a stale, deleted or invisible block fails loudly
+    instead of silently corrupting ranks.
 """
 
 from __future__ import annotations
 
 import inspect
-import io
-import json
 import math
 import os
 import shutil
@@ -605,123 +605,71 @@ class _BlockStore:
     path: str
     owns_dir: bool
     run_id: str
+    # the buckets the build wrote a block file for (≤ P ids); a bucket
+    # outside this set has vertices but no out-edges
+    pkeys: frozenset[int]
     # dst id bounds (from the build): they cut the blob dst ranges, and
     # when they fit int32 the packed partial cells carry 4-byte ids
     min_dst: int
     max_dst: int
 
 
-_MANIFEST = "manifest.json"
-
-
-# --- block-store filesystem layer ------------------------------------------
-# block_dir is either a plain local path or any URI pyarrow.fs can open
-# (`file://`, `hdfs://`, `s3://`, ...), so the store works when executors
-# do NOT share a local disk. Every path is opened through pyarrow.fs; the
-# one fork is the block read: plain-path blocks are np.load(mmap) — the OS
-# page cache keeps them RAM-hot across iterations — while URI blocks are
-# read fully per task, one read per bucket per iteration.
+# --- block files -------------------------------------------------------------
+# One Arrow IPC file per bucket, blk<pkey>.arrow: one row of five
+# large_list columns (_BLOCK_COLS) and the build's run id in the schema
+# metadata. block_dir is either a plain local path or any URI pyarrow.fs
+# can open (`file://`, `hdfs://`, `s3://`, ...), so the store works when
+# executors do NOT share a local disk. Plain paths open memory-mapped: a
+# read allocates nothing and the OS page cache keeps blocks RAM-hot
+# across iterations; URI blocks are read fully, once per bucket per
+# iteration.
+_BLOCK_COLS = ("su", "sidx", "suw", "dst", "starts")
 
 
 def _store_fs(path: str) -> tuple[pafs.FileSystem, str]:
     """(filesystem, path inside it): URIs by their scheme, plain paths as
-    local absolute paths."""
+    memory-mapped local absolute paths."""
     if "://" in path:
         return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), os.path.abspath(path)
+    return pafs.LocalFileSystem(use_mmap=True), os.path.abspath(path)
 
 
-def _store_mkdirs(dirpath: str) -> None:
-    fs, inner = _store_fs(dirpath)
-    fs.create_dir(inner, recursive=True)
-
-
-def _store_list(dirpath: str) -> list[str]:
-    fs, inner = _store_fs(dirpath)
-    infos = fs.get_file_info(pafs.FileSelector(inner, allow_not_found=True))
-    return [os.path.basename(i.path) for i in infos]
-
-
-def _store_delete(path: str) -> None:
+def _write_block(
+    path: str, pkey: int, run_id: str, arrays: list[np.ndarray]
+) -> None:
     fs, inner = _store_fs(path)
-    fs.delete_file(inner)
+    tbl = pa.table(
+        {
+            name: pa.LargeListArray.from_arrays([0, len(a)], pa.array(a))
+            for name, a in zip(_BLOCK_COLS, arrays)
+        }
+    ).replace_schema_metadata({"run_id": run_id})
+    with fs.open_output_stream(f"{inner}/blk{pkey}.arrow") as f:
+        with pa.ipc.new_file(f, tbl.schema) as w:
+            w.write_table(tbl)
 
 
-def _store_write_bytes(path: str, data: bytes) -> None:
+def _read_block(path: str, pkey: int, run_id: str) -> list[np.ndarray]:
+    """The bucket's five arrays (views of the mapped file on plain paths),
+    or raise if the file is missing or was written by another build."""
     fs, inner = _store_fs(path)
-    with fs.open_output_stream(inner) as f:
-        f.write(data)
-
-
-def _store_read_bytes(path: str) -> bytes:
-    fs, inner = _store_fs(path)
-    with fs.open_input_stream(inner) as f:
-        return f.read()
-
-
-def _store_write_npy(path: str, arr: np.ndarray) -> None:
-    fs, inner = _store_fs(path)
-    with fs.open_output_stream(inner) as f:
-        np.save(f, arr)
-
-
-def _store_read_npy(path: str) -> np.ndarray:
-    if "://" in path:
-        return np.load(io.BytesIO(_store_read_bytes(path)))
-    return np.load(path, mmap_mode="r")
-
-
-def _clear_store(dirpath: str) -> None:
-    """Remove block files + manifest left by a previous build. A caller-
-    supplied block_dir may hold blocks of a DIFFERENT graph: a bucket with
-    edges last run but empty this run would otherwise keep its stale file
-    and silently add phantom contributions."""
-    for name in _store_list(dirpath):
-        if name == _MANIFEST or (name.startswith("blk") and name.endswith(".npy")):
-            _store_delete(os.path.join(dirpath, name))
-
-
-def _block_files(path: str, pkey: int) -> dict[str, str]:
-    return {
-        name: os.path.join(path, f"blk{pkey}_{name}.npy")
-        for name in ("su", "sidx", "suw", "dst", "starts")
-    }
-
-
-def _read_manifest(path: str) -> dict | None:
     try:
-        return json.loads(_store_read_bytes(os.path.join(path, _MANIFEST)))
-    except (OSError, ValueError):
-        return None
-
-
-# per-worker manifest cache: (path, run_id) → set of pkeys that have blocks.
-# Python workers are long-lived, so each worker validates the store once
-# per run instead of once per iteration.
-_MANIFEST_CACHE: dict = {}
-
-
-def _bucket_set(path: str, run_id: str) -> set:
-    key = (path, run_id)
-    got = _MANIFEST_CACHE.get(key)
-    if got is None:
-        mf = _read_manifest(path)
-        if mf is None:
-            raise RuntimeError(
-                f"csr_block store at {path!r} has no readable {_MANIFEST} — "
-                "the block_dir is not visible from this executor (use a "
-                "shared filesystem or an hdfs://-style URI) or the store "
-                "was deleted"
-            )
-        if mf.get("run_id") != run_id:
-            raise RuntimeError(
-                f"csr_block store at {path!r} belongs to a different run "
-                f"(found {mf.get('run_id')!r}, expected {run_id!r}) — stale "
-                "or concurrently-overwritten block store"
-            )
-        got = set(mf["pkeys"])
-        _MANIFEST_CACHE[key] = got
-    return got
+        with fs.open_input_file(f"{inner}/blk{pkey}.arrow") as f:
+            tbl = pa.ipc.open_file(f).read_all()
+    except OSError:
+        raise RuntimeError(
+            f"csr_block store at {path!r} has no readable blk{pkey}.arrow — "
+            "the block_dir is not visible from this executor (use a shared "
+            "filesystem or an hdfs://-style URI) or the store was deleted"
+        ) from None
+    found = (tbl.schema.metadata or {}).get(b"run_id", b"").decode()
+    if found != run_id:
+        raise RuntimeError(
+            f"csr_block store at {path!r} belongs to a different run "
+            f"(blk{pkey}.arrow has {found!r}, expected {run_id!r}) — stale "
+            "or concurrently-overwritten block store"
+        )
+    return [tbl.column(c).chunk(0).values.to_numpy() for c in _BLOCK_COLS]
 
 
 def _build_csr_blocks(
@@ -733,7 +681,8 @@ def _build_csr_blocks(
     """One-time edge "upload" (S5 analog — clEnqueueWriteBuffer of the CSR
     arrays, opencl/pagerank.c:456-478): bucket edges by
     pkey = pmod(hash(src_id), P) and write per-bucket pre-digested CSR
-    arrays to the block store:
+    arrays to the block store, one blk<pkey>.arrow file per bucket
+    (_write_block) stamped with this build's run id:
 
       su     — sorted unique src ids in the bucket
       sidx   — per-edge gather index into su (int32 when it fits)
@@ -761,10 +710,14 @@ def _build_csr_blocks(
     """
     owns = block_dir is None
     path = block_dir or tempfile.mkdtemp(prefix="ps_pagerank_csr_store_")
-    _store_mkdirs(path)
-    # a reused dir may hold blocks of a previous (different) graph; stale
-    # files would silently contribute phantom edges — clear, then manifest
-    _clear_store(path)
+    # a reused dir may hold blocks of a previous (different) graph: clear
+    # them, and stamp every new block with a fresh run id that readers check
+    fs, inner = _store_fs(path)
+    fs.create_dir(inner, recursive=True)
+    for info in fs.get_file_info(pafs.FileSelector(inner)):
+        name = info.base_name
+        if name.startswith("blk") and name.endswith(".arrow"):
+            fs.delete_file(info.path)
     run_id = uuid.uuid4().hex
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -798,12 +751,7 @@ def _build_csr_blocks(
                 starts = starts.astype(np.int32)
             if rdst.size and i32.min <= rdst[0] and rdst[-1] <= i32.max:
                 rdst = rdst.astype(np.int32)  # dst-sorted: [0]/[-1] = min/max
-            files = _block_files(path, int(key))
-            _store_write_npy(files["su"], su)
-            _store_write_npy(files["sidx"], sidx)
-            _store_write_npy(files["suw"], suw)
-            _store_write_npy(files["dst"], rdst)
-            _store_write_npy(files["starts"], starts)
+            _write_block(path, int(key), run_id, [su, sidx, suw, rdst, starts])
             out_k.append(int(key))
             out_n.append(int(len(s)))
             out_lo.append(int(t[0]))  # dst-sorted: [0] is the min
@@ -843,16 +791,13 @@ def _build_csr_blocks(
         )
     min_dst = min((r["min_dst"] for r in rows), default=0)
     max_dst = max((r["max_dst"] for r in rows), default=0)
-    # the manifest makes stale/missing stores fail LOUDLY: readers validate
-    # run_id and only skip pkeys the manifest says have no block
-    _store_write_bytes(
-        os.path.join(path, _MANIFEST),
-        json.dumps(
-            {"run_id": run_id, "pkeys": sorted(int(r["pkey"]) for r in rows)}
-        ).encode(),
-    )
     return _BlockStore(
-        path=path, owns_dir=owns, run_id=run_id, min_dst=min_dst, max_dst=max_dst
+        path=path,
+        owns_dir=owns,
+        run_id=run_id,
+        pkeys=frozenset(int(r["pkey"]) for r in rows),
+        min_dst=min_dst,
+        max_dst=max_dst,
     )
 
 
@@ -863,13 +808,13 @@ def _gather_scatter_blocks(
     over the resident block store — only the rank state moves per iteration.
 
     Stage 1 (gather): each mapInArrow task groups its state rows by pkey,
-    mmap-loads the bucket's block, fills su_rank by binary-searching the
-    incoming (vertex_id, rank) rows and reduces each dst run to one
-    partial. Ranks absent from the task gather as 0, and every state row
-    exists in exactly one task, so summing partials across tasks is exact
-    regardless of how the state is physically partitioned — alignment with
-    the block buckets (the default, via hash partitioning) only removes
-    duplicate block reads.
+    opens the bucket's block file (_read_block), fills su_rank by
+    binary-searching the incoming (vertex_id, rank) rows and reduces each
+    dst run to one partial. Ranks absent from the task gather as 0, and
+    every state row exists in exactly one task, so summing partials across
+    tasks is exact regardless of how the state is physically partitioned
+    — alignment with the block buckets (the default, via hash
+    partitioning) only removes duplicate block reads.
 
     Blob partials (V5, BENCH/BASELINE.md §5): the Σ_b unique-dst(b)
     partials never materialize as JVM rows. Each bucket splits its
@@ -881,11 +826,11 @@ def _gather_scatter_blocks(
     |V|-row contrib exchange into the update join, instead of a wide
     shuffle + two-level hash agg of per-(bucket, dst) rows.
 
-    Each task validates the store manifest (cached per worker): a missing
-    or stale store raises instead of silently dropping contributions, and
-    only pkeys the manifest lists as blockless are skipped.
+    Tasks skip only the pkeys the build wrote no block for (store.pkeys);
+    every other block file is read and checked, so a missing or stale one
+    raises instead of silently dropping contributions.
     """
-    path, run_id = store.path, store.run_id
+    path, run_id, pkeys = store.path, store.run_id, store.pkeys
     # int32 dst ids in the packed cells when every dst fits (bounds come
     # from the build)
     use32 = -(2**31) <= store.min_dst and store.max_dst < 2**31
@@ -902,20 +847,14 @@ def _gather_scatter_blocks(
         tbl = pa.Table.from_batches(got)
         if tbl.num_rows == 0:
             return
-        have = _bucket_set(path, run_id)
         cuts = lo_id + qwidth * np.arange(1, P, dtype=np.int64)
         pk = tbl.column("pkey").to_numpy()
         vid = tbl.column("vertex_id").to_numpy()
         rank = tbl.column("rank").to_numpy()
         for key in np.unique(pk):
-            if int(key) not in have:
+            if int(key) not in pkeys:
                 continue  # bucket has vertices but no out-edges
-            files = _block_files(path, int(key))
-            su = _store_read_npy(files["su"])
-            sidx = _store_read_npy(files["sidx"])
-            suw = _store_read_npy(files["suw"])
-            dst = _store_read_npy(files["dst"])
-            starts = _store_read_npy(files["starts"])
+            su, sidx, suw, dst, starts = _read_block(path, int(key), run_id)
             m = pk == key
             ids, rk = vid[m], rank[m]
             order = np.argsort(ids, kind="stable")

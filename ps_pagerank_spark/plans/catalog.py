@@ -13,9 +13,8 @@ append/overwrite, time-travel reads, snapshot properties — as a thin layer:
 Each snapshot manifest records the list of data directories visible at that
 version (append = previous dirs + new dir; overwrite = new dir only) and a
 JSON ``props`` payload (e.g. PageRank iteration number + per-iteration
-metrics) — that payload is what makes runs resumable. On a real cluster the
-same call sites switch to ``df.writeTo(...)`` against an Iceberg catalog
-(``use_iceberg=True``), keeping engine code identical.
+metrics) — that payload is what makes runs resumable. Each snapshot also
+stores its schema, so a read never infers one from the files.
 
 Snapshot ids are a deterministic counter (no wall clock): repeated runs of
 the test suite produce byte-identical metadata apart from parquet
@@ -50,14 +49,9 @@ class ConcurrentWriteError(RuntimeError):
 
 
 class Catalog:
-    def __init__(self, root: str, use_iceberg: bool = False):
+    def __init__(self, root: str):
         self.root = Path(root)
         self.root.mkdir(parents=True, exist_ok=True)
-        if use_iceberg:
-            raise NotImplementedError(
-                "Iceberg runtime jar not available in this sandbox; "
-                "parquet+manifest mode provides the same semantics"
-            )
 
     # -- metadata ----------------------------------------------------------
     def _meta_path(self, table: str) -> Path:
@@ -254,31 +248,22 @@ class Catalog:
         if sid is None:
             raise KeyError(f"table {table!r} has no snapshots")
         snap = self._snapshot(meta, sid)
-        dirs = [
-            str(self.root / table / d)
-            for d in snap["data_dirs"]
-            # defensive vs legacy metadata: a dir with zero parquet files
-            # (pre-fix empty partitioned append) would fail schema inference
-            if any((self.root / table / d).rglob("*.parquet"))
-        ]
+        schema = StructType.fromJson(snap["schema"])
+        dirs = [str(self.root / table / d) for d in snap["data_dirs"]]
         if not dirs:
-            schema = snap.get("schema")
-            if schema is None:
-                raise KeyError(
-                    f"table {table!r} snapshot {sid} has no data files and "
-                    "no recorded schema"
-                )
-            return spark.createDataFrame([], StructType.fromJson(schema))
+            return spark.createDataFrame([], schema)
+        # the stored schema spares the read a schema-inference job
+        reader = spark.read.schema(schema)
         if meta.get("partition_by") and len(dirs) > 1:
             # each snapshot dir is its own hive-partitioned root; reading
             # them separately keeps per-dir partition discovery (and thus
             # directory pruning), and Catalyst pushes filters through the
             # union into every child scan
-            out = spark.read.parquet(dirs[0])
+            out = reader.parquet(dirs[0])
             for d in dirs[1:]:
-                out = out.unionByName(spark.read.parquet(d))
+                out = out.unionByName(reader.parquet(d))
             return out
-        return spark.read.parquet(*dirs)
+        return reader.parquet(*dirs)
 
     def latest_snapshot(self, table: str) -> dict | None:
         meta = self._load_meta(table)

@@ -1,21 +1,24 @@
-"""csr_block block-store hardening: manifest validation, stale-store
-clearing, URI (pyarrow.fs) storage layer, resume-as-csr_block (every run
-builds its own store), and the bucket↔task alignment probe."""
+"""csr_block block-store hardening: per-file run-id and presence checks,
+stale-store clearing, URI (pyarrow.fs) storage layer, zero-copy local
+reads, resume-as-csr_block (every run builds its own store), and the
+bucket↔task alignment probe."""
 
 from __future__ import annotations
 
-import json
+import dataclasses
 import os
+import re
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from ps_pagerank_spark.operators.pagerank import (
-    _MANIFEST,
     _alignment_fraction,
     _build_csr_blocks,
     _gather_scatter_blocks,
+    _read_block,
     pagerank,
     resume_pagerank,
 )
@@ -28,7 +31,22 @@ def _ranks(res):
 
 
 def _run_id(bdir) -> str:
-    return json.loads((bdir / _MANIFEST).read_text())["run_id"]
+    """The run id stamped on the store's block files (all must agree)."""
+    ids = {
+        pa.ipc.open_file(str(f)).schema.metadata[b"run_id"].decode()
+        for f in bdir.glob("blk*.arrow")
+    }
+    assert len(ids) == 1, ids
+    return ids.pop()
+
+
+def _src_state(edges_df):
+    return (
+        edges_df.select(F.col("src_id").alias("vertex_id"))
+        .distinct()
+        .withColumn("rank", F.lit(0.1))
+        .repartition(4, "vertex_id")
+    )
 
 
 def _allclose(got: dict, want: dict) -> bool:
@@ -49,8 +67,8 @@ def _bit_equal(got: dict, want: dict) -> bool:
 
 def test_csr_block_uri_store_matches_join(spark, big_edges_df, tmp_path):
     """block_dir as a file:// URI goes through the pyarrow.fs layer (the
-    non-local store path: streamed writes, full reads, no mmap) and must
-    produce the exact join-kernel scores."""
+    non-local store path: full reads, no mmap) and must produce the exact
+    join-kernel scores."""
     want = _ranks(pagerank(spark, big_edges_df, num_partitions=4))
     uri = "file://" + str(tmp_path / "blocks_uri")
     got = _ranks(
@@ -61,8 +79,10 @@ def test_csr_block_uri_store_matches_join(spark, big_edges_df, tmp_path):
     )
     assert got.keys() == want.keys()
     assert all(got[v] == want[v] for v in want)  # same fp path → exact
-    # the store (incl. manifest) landed where the URI points
-    assert (tmp_path / "blocks_uri" / _MANIFEST).exists()
+    # the store landed where the URI points, as Arrow block files only
+    names = os.listdir(tmp_path / "blocks_uri")
+    assert names and all(re.fullmatch(r"blk\d+\.arrow", n) for n in names)
+    _run_id(tmp_path / "blocks_uri")
 
 
 def test_stale_blocks_cleared_on_rebuild(spark, tmp_path, big_edges_df,
@@ -85,27 +105,44 @@ def test_stale_blocks_cleared_on_rebuild(spark, tmp_path, big_edges_df,
     assert all(abs(got[v] - want[v]) < 1e-15 for v in want)
 
 
-def test_stale_manifest_fails_loudly(spark, tmp_path, big_edges_df):
-    """A manifest from a different run id (stale / overwritten store) must
-    abort the job, not silently contribute phantom edges."""
-    import dataclasses
-
+def test_stale_block_fails_loudly(spark, tmp_path, big_edges_df):
+    """Block files from a different run id (stale / overwritten store)
+    must abort the job, not silently contribute phantom edges."""
     store = _build_csr_blocks(
         big_edges_df, 4, str(tmp_path / "blocks"), len(set(BIG_EDGES))
     )
-    # a handle whose run no longer matches the on-disk manifest — e.g. a
-    # concurrent run overwrote the dir after this run built it. The
-    # per-worker validation cache has never seen this run id, so every
-    # worker re-reads the manifest and must refuse.
+    # a handle whose run no longer matches the files on disk — e.g. a
+    # concurrent run overwrote the dir after this run built it
     store = dataclasses.replace(store, run_id="deadbeef")
-    state = (
-        big_edges_df.select(F.col("src_id").alias("vertex_id"))
-        .distinct()
-        .withColumn("rank", F.lit(0.1))
-        .repartition(4, "vertex_id")
-    )
     with pytest.raises(Exception, match="different run|stale"):
-        _gather_scatter_blocks(state, store, 4).collect()
+        _gather_scatter_blocks(_src_state(big_edges_df), store, 4).collect()
+
+
+def test_deleted_block_fails_loudly(spark, tmp_path, big_edges_df):
+    """Deleting one block file the build listed must make the gather raise
+    a RuntimeError naming the store, not skip that bucket's edges."""
+    bdir = tmp_path / "blocks"
+    store = _build_csr_blocks(big_edges_df, 4, str(bdir), len(set(BIG_EDGES)))
+    assert len(store.pkeys) > 1
+    (bdir / f"blk{min(store.pkeys)}.arrow").unlink()
+    named = re.escape(f"RuntimeError: csr_block store at {str(bdir)!r}")
+    with pytest.raises(Exception, match=named):
+        _gather_scatter_blocks(_src_state(big_edges_df), store, 4).collect()
+
+
+def test_local_block_reads_are_zero_copy(spark, tmp_path, big_edges_df):
+    """A plain-path block read maps the file: pyarrow allocates nothing.
+    The same store read as a file:// URI is copied into Arrow memory."""
+    bdir = tmp_path / "blocks"
+    store = _build_csr_blocks(big_edges_df, 4, str(bdir), len(set(BIG_EDGES)))
+    key = min(store.pkeys)
+    before = pa.total_allocated_bytes()
+    arrays = _read_block(str(bdir), key, store.run_id)
+    assert pa.total_allocated_bytes() == before
+    copied = _read_block("file://" + str(bdir), key, store.run_id)
+    assert pa.total_allocated_bytes() > before
+    for a, b in zip(arrays, copied):
+        assert np.array_equal(a, b)
 
 
 def test_build_weights_are_exact_inverse_out_degree(spark, tmp_path):
@@ -128,11 +165,10 @@ def test_build_weights_are_exact_inverse_out_degree(spark, tmp_path):
     }
     assert len(set(want.values())) > 10
     bdir = tmp_path / "blocks"
-    _build_csr_blocks(edges, 4, str(bdir), len(pairs))
+    store = _build_csr_blocks(edges, 4, str(bdir), len(pairs))
     got = {}
-    for k in json.loads((bdir / _MANIFEST).read_text())["pkeys"]:
-        su = np.load(bdir / f"blk{k}_su.npy")
-        suw = np.load(bdir / f"blk{k}_suw.npy")
+    for k in store.pkeys:
+        su, _, suw, _, _ = _read_block(str(bdir), k, store.run_id)
         assert suw.dtype == np.float64
         got.update(zip(su.tolist(), suw))
     assert got.keys() == want.keys()

@@ -125,11 +125,12 @@ def test_prep_job_count(spark, big_edges_df):
 
 def test_resume_job_count(spark, big_edges_df, tmp_path):
     """A resumed join run reads its state lazily (iteration 1's job
-    materializes the checkpoint of the catalog read) and takes its
+    materializes the checkpoint of the catalog read), reads it with the
+    snapshot's stored schema (no schema-inference job) and takes its
     redistribute mass from the checkpoint's last metrics row, so it runs
-    no job of its own before the loop: 11 jobs here, where an eager
-    checkpoint plus a Spark recompute of the mass ran 13. Counted by job
-    group, like test_prep_job_count."""
+    no job of its own before the loop: 10 jobs here, where inferring the
+    schema ran 11 and an eager checkpoint plus a Spark recompute of the
+    mass ran 13. Counted by job group, like test_prep_job_count."""
     from ps_pagerank_spark.operators.pagerank import resume_pagerank
     from ps_pagerank_spark.plans.catalog import Catalog
 
@@ -147,7 +148,7 @@ def test_resume_job_count(spark, big_edges_df, tmp_path):
     finally:
         sc.setJobGroup("", "")
     assert res.iterations == 3
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 11
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 10
 
 
 def test_fixed_iterations(spark, big_edges_df):
