@@ -19,6 +19,14 @@ a TPC-H testdata directory (read by ``tpch_graph_edges``),
 when the kwargs name a ``block_dir`` (a path or a ``file://``-style URI;
 the run leaves that store in place), else null.
 
+The harness changes into <checkout> before Spark starts: Python workers
+put the driver's working directory first on ``sys.path``, so started
+anywhere else they would import that directory's engine. Relative paths
+in <input> and the kwargs therefore resolve against <checkout>.
+``worker_engine`` is the directory ``ps_pagerank_spark`` was imported from
+inside one mapInArrow task; when it is not under <checkout> the harness
+prints it and exits with status 1.
+
 Alternate two checkouts across invocations for an interleaved A/B; each
 rep is a fresh JVM, so no arm inherits the other's caches. Examples:
 
@@ -80,12 +88,39 @@ def _store_bytes(block_dir: str | None) -> int | None:
     return sum(i.size for i in infos if i.base_name.startswith("blk"))
 
 
+def _worker_engine(spark) -> str:
+    """The directory ps_pagerank_spark is imported from inside one
+    mapInArrow task."""
+
+    def where(batches):
+        import pyarrow as pa
+
+        import ps_pagerank_spark
+
+        for _ in batches:
+            pass
+        path = os.path.dirname(os.path.abspath(ps_pagerank_spark.__file__))
+        yield pa.RecordBatch.from_pydict({"path": [path]})
+
+    return spark.range(1, numPartitions=1).mapInArrow(
+        where, "path string"
+    ).first()["path"]
+
+
 def main(checkout: str, spec: str, kwargs: dict) -> None:
-    sys.path.insert(0, os.path.abspath(checkout))
+    checkout = os.path.abspath(checkout)
+    os.chdir(checkout)
+    sys.path.insert(0, checkout)
     from ps_pagerank_spark import get_spark
     from ps_pagerank_spark.operators.pagerank import pagerank
 
     spark = get_spark(master="local[4]", app_name="ab_pagerank")
+    worker_engine = _worker_engine(spark)
+    if not worker_engine.startswith(checkout + os.sep):
+        print(f"workers import ps_pagerank_spark from {worker_engine}, "
+              f"not from {checkout}", file=sys.stderr)
+        spark.stop()
+        sys.exit(1)
     edges = _edges(spark, spec).persist()
     n_edges = edges.count()
     sc = spark.sparkContext
@@ -106,6 +141,7 @@ def main(checkout: str, spec: str, kwargs: dict) -> None:
     print(json.dumps({
         "checkout": checkout,
         "engine": os.path.dirname(sys.modules["ps_pagerank_spark"].__file__),
+        "worker_engine": worker_engine,
         "input": spec, "kwargs": kwargs,
         "n_edges": n_edges, "kernel": res.kernel,
         "iterations": res.iterations, "jobs": jobs, "wall_s": round(wall, 3),

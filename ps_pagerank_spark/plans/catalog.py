@@ -16,6 +16,12 @@ JSON ``props`` payload (e.g. PageRank iteration number + per-iteration
 metrics) — that payload is what makes runs resumable. Each snapshot also
 stores its schema, so a read never infers one from the files.
 
+Partition spec: ``partition_by`` (hive partition columns) and ``layout``
+(how their values are derived, e.g. bucket key + modulus) are per table.
+``overwrite`` replaces every data dir, so it writes exactly the spec it is
+given — ``None`` means unpartitioned with no layout. ``append`` inherits
+the stored spec and rejects a different one.
+
 Snapshot ids are a deterministic counter (no wall clock): repeated runs of
 the test suite produce byte-identical metadata apart from parquet
 internals.
@@ -139,34 +145,18 @@ class Catalog:
         layout: dict | None = None,
     ) -> int:
         meta = self._load_meta(table)
-        existing_part = meta.get("partition_by")
-        if meta["snapshots"]:
-            if partition_by is not None and partition_by != existing_part:
-                if mode != "overwrite":
+        if mode == "append" and meta["snapshots"]:
+            # an append adds files to the stored layout, so it inherits it;
+            # a different one would mix two layouts in one table
+            for key, given in (("partition_by", partition_by),
+                               ("layout", layout)):
+                if given is not None and given != meta.get(key):
                     raise ValueError(
-                        f"table {table!r} is partitioned by {existing_part}; "
-                        f"got {partition_by} — appends cannot change the "
-                        "partition spec (overwrite can: spec evolution)"
+                        f"table {table!r} has {key} {meta.get(key)}; got "
+                        f"{given} — an append cannot change it (an "
+                        "overwrite can)"
                     )
-                # overwrite replaces every data dir, so a new spec is safe —
-                # the Iceberg partition-spec-evolution analog
-            else:
-                partition_by = existing_part
-            # layout = how the partition value is DERIVED (e.g. bucket
-            # column + modulus). Same evolution rules as partition_by:
-            # appends inherit/must-match, overwrite may change it. Stored
-            # in table meta so writers can't silently change the bucket
-            # modulus (that would break bucket-pruned anti-joins).
-            existing_layout = meta.get("layout")
-            if layout is not None and layout != existing_layout:
-                if mode != "overwrite":
-                    raise ValueError(
-                        f"table {table!r} has layout {existing_layout}; "
-                        f"got {layout} — appends cannot change the layout "
-                        "(overwrite/migrate can)"
-                    )
-            elif layout is None:
-                layout = existing_layout
+            partition_by, layout = meta.get("partition_by"), meta.get("layout")
         snap_id = (meta["snapshots"][-1]["id"] + 1) if meta["snapshots"] else 1
         data_dir = self.root / table / f"snap-{snap_id:06d}"
         writer = df.write.mode("overwrite")

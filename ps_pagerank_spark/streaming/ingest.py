@@ -9,19 +9,28 @@ is the streaming face of the same extraction/encoding operators:
     (each micro-batch = newly arrived page files). ``maxFilesPerTrigger``
     bounds batch size; schema is the BASELINE.json ``input_hint`` pages
     schema.
-  * ``stream_links``    — the SAME ``functions.extract.extract_links``
-    Arrow UDF applied to the stream (mapInArrow is streaming-capable),
-    so batch and streaming extraction can never diverge.
-  * ``run_edge_ingest`` — ``foreachBatch`` sink: per micro-batch,
-    links are normalized, the url dictionary is extended incrementally
-    (new urls get ids after the current max — existing ids never change),
-    and encoded edges are appended to the catalog. Exactly-once:
-    the catalog snapshot records the stream batch_id; a replayed batch
-    (restart after failure mid-commit) is detected and skipped, making
-    the append idempotent.
+  * ``run_edge_ingest`` — ``foreachBatch`` sink over the SAME
+    ``functions.extract.extract_links`` Arrow UDF as batch (mapInArrow is
+    streaming-capable, so batch and streaming extraction can never
+    diverge): per micro-batch, links are normalized, the url dictionary is
+    extended incrementally (new urls get ids after the current max —
+    existing ids never change), and encoded edges are appended to the
+    catalog. Exactly-once: the catalog snapshot records the stream
+    batch_id; a replayed batch (restart after failure mid-commit) is
+    detected and skipped, making the append idempotent.
+  * ``compact_table``   — the one rewrite of a graph table: folds its
+    snapshot dirs into one and (re)derives its bucket layout.
   * ``page_stats_stream`` — watermarked sliding-window aggregation
     (pages per lang per window) — the monitoring stream; late pages
     beyond the watermark are dropped deterministically.
+
+Layout: each graph table has one bucketed layout with a fixed key —
+``vertices`` is hive-partitioned by ``_bucket = pmod(hash(url), B)`` and
+``edges`` by ``_bucket = pmod(hash(src_id), B)``. B is chosen when the table
+is bucketed and stored in its catalog layout. A table without a stored
+layout (written by ``graph.pages_to_edges``, older code or by hand) is
+bucketed once by ``compact_table`` when an ingest run starts, so every
+micro-batch sees bucketed tables only.
 
 Scale notes: the dictionary extension is a left-anti join + offset
 assignment per micro-batch — O(batch) work, not O(table); edge appends are
@@ -35,11 +44,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ps_pagerank_spark.functions.extract import extract_links, normalize_links
+from ps_pagerank_spark.operators.graph import (
+    encode_edges,
+    vertices_from_links,
+    zip_index,
+)
 from ps_pagerank_spark.plans.catalog import Catalog
 from ps_pagerank_spark.sources.pages import PAGES_SCHEMA
 
 VERTICES_TABLE = "vertices"
 EDGES_TABLE = "edges"
+# the fixed bucket key of each graph table, and its columns before bucketing
+_BUCKET_KEY = {VERTICES_TABLE: "url", EDGES_TABLE: "src_id"}
+_SCHEMA = {
+    VERTICES_TABLE: "vertex_id long, url string",
+    EDGES_TABLE: "src_id long, dst_id long",
+}
+DEFAULT_BUCKETS = 64  # suits tests; raise to 2^14 at crawl scale
 
 
 def stream_pages(
@@ -52,152 +73,71 @@ def stream_pages(
     )
 
 
-def stream_links(pages: DataFrame) -> DataFrame:
-    """Streaming link extraction — identical code path to batch."""
-    return extract_links(pages)
+def _with_bucket(df: DataFrame, table: str, buckets: int) -> DataFrame:
+    """``df`` plus ``_bucket = pmod(hash(key), buckets)`` on the table's
+    fixed key."""
+    return df.withColumn(
+        "_bucket",
+        F.pmod(F.hash(_BUCKET_KEY[table]), F.lit(buckets)).cast("int"),
+    )
 
 
-def _url_bucket(col: str, buckets: int):
-    return F.pmod(F.hash(col), F.lit(buckets)).cast("int")
+def _probe(spark: SparkSession, catalog: Catalog, table: str,
+           batch: DataFrame) -> DataFrame:
+    """The stored rows of ``table`` in the buckets ``batch`` touches.
 
-
-DEFAULT_BUCKETS = 64  # suits tests; raise to 2^14 at crawl scale
-
-
-def _resolve_buckets(
-    catalog: Catalog, table: str, param: int | None, bucket_on: str
-) -> tuple[int, dict | None]:
-    """Source-of-truth bucket modulus for a bucketed table.
-
-    The stored table layout WINS: `_bucket = pmod(hash(col), buckets)`
-    values on disk were computed under the creation-time modulus, so a
-    sink probing with a different one computes `touched` buckets that
-    miss existing rows — the same url would silently get a second
-    vertex_id and duplicate edges would append. Hence: the parameter is
-    only honored at table creation; afterwards an explicit parameter
-    that disagrees with the stored layout raises loudly (run
-    ``migrate_edges_layout`` to actually change the modulus). Returns
-    ``(buckets, layout_to_record)`` — the layout dict is passed to the
-    append for creation and for upgrading a pre-layout bucketed table
-    (recorded from the parameter once, trusted thereafter).
-    """
-    stored = catalog.layout(table)
-    if stored is not None:
-        if param is not None and param != stored["buckets"]:
-            raise ValueError(
-                f"table {table!r} was bucketed with "
-                f"buckets={stored['buckets']} on {stored['bucket_on']!r}; "
-                f"got buckets={param} — the stored layout wins (a "
-                "different modulus would break bucket pruning and "
-                "deduplication); pass None or run migrate_edges_layout"
-            )
-        return int(stored["buckets"]), None
-    b = param if param is not None else DEFAULT_BUCKETS
-    return b, {"bucket_on": bucket_on, "buckets": b}
+    The buckets are a few tiny ints; the isin filter becomes a
+    PartitionFilter on every snapshot scan, so untouched bucket dirs are
+    never read — the probe reads O(touched buckets / B) of the table."""
+    touched = [
+        r["_bucket"] for r in batch.select("_bucket").distinct().collect()
+    ]
+    return catalog.read(spark, table).filter(F.col("_bucket").isin(touched))
 
 
 def _extend_dictionary(
-    spark: SparkSession, catalog: Catalog, links: DataFrame,
-    *, url_buckets: int | None = None,
+    spark: SparkSession, catalog: Catalog, links: DataFrame
 ) -> DataFrame:
     """Add unseen urls to the vertices table; return a dictionary slice
     sufficient to encode THIS batch (every batch url is covered).
 
     New ids continue from ``next_vertex_id`` carried in the snapshot
-    props, assigned by url order within the batch (deterministic given
-    batch content). Existing assignments are immutable — downstream edge
-    ids never need re-encoding.
-
-    Scale shape (mirrors the edges-table fix): the vertices table is
-    hive-partitioned by ``_bucket = pmod(hash(url), url_buckets)``; the
-    per-batch unseen-url anti-join AND the dictionary slice handed to
-    ``encode_edges`` filter to the buckets the batch touches, which
-    becomes a PartitionFilter on every snapshot scan — the probe reads
-    O(touched buckets / url_buckets) of the accumulated dictionary, not
-    all of it. ``next_vertex_id`` in props replaces the per-batch
-    ``max(vertex_id)`` full-table aggregation. A legacy table created
-    before bucketing (no ``partition_by`` in its meta) falls back to the
-    full-table probe and unpartitioned appends — and still gets
-    ``next_vertex_id`` recorded, so only its first post-upgrade batch
-    pays the max() agg.
+    props (0 for a new table), assigned by url order within the batch
+    (deterministic given batch content). Existing assignments are
+    immutable — downstream edge ids never need re-encoding. The unseen-url
+    anti-join and the returned slice both read only the buckets the batch
+    touches (``_probe``).
 
     Id assignment is the zip-style prefix encoding shared with batch
     ``encode_vertices`` (operators/graph.zip_index) — partition-local
     row_number + tiny driver prefix sum, no single-partition global window
     serializing the stage.
     """
-    from ps_pagerank_spark.operators.graph import zip_index
-
-    batch_urls = (
-        links.select(F.col("src_url").alias("url"))
-        .union(links.select(F.col("dst_url").alias("url")))
-        .distinct()
+    buckets = catalog.layout(VERTICES_TABLE)["buckets"]
+    batch_urls = _with_bucket(
+        vertices_from_links(links), VERTICES_TABLE, buckets
     )
-    last = catalog.latest_snapshot(VERTICES_TABLE)
-    ub, record_layout = _resolve_buckets(
-        catalog, VERTICES_TABLE, url_buckets, "url"
-    )
-    if last is None:
-        # eager localCheckpoint: id assignment is computed ONCE — the
-        # count, the append, and the returned dictionary all read the
-        # same materialized rows (no re-derivation of ids per consumer)
-        new_vertices = (
-            zip_index(batch_urls, base_id=0)
-            .withColumn("_bucket", _url_bucket("url", ub))
-            .localCheckpoint(eager=True)
-        )
-        n_new = new_vertices.count()
-        catalog.append(
-            VERTICES_TABLE,
-            new_vertices,
-            props={"next_vertex_id": n_new},
-            partition_by=["_bucket"],
-            layout=record_layout,
-        )
-        return new_vertices.select("vertex_id", "url")
-
-    part = catalog._load_meta(VERTICES_TABLE).get("partition_by")
-    existing = catalog.read(spark, VERTICES_TABLE)
-    next_id = last["props"].get("next_vertex_id")
-    if next_id is None:
-        # legacy table without the props marker: one max() agg now, then
-        # our append records next_vertex_id and later batches skip this
-        m = existing.agg(F.max("vertex_id")).collect()[0][0]
-        next_id = int(m) + 1 if m is not None else 0
-    if part:
-        batch_urls = batch_urls.withColumn(
-            "_bucket", _url_bucket("url", ub)
-        )
-        touched = [
-            r["_bucket"]
-            for r in batch_urls.select("_bucket").distinct().collect()
-        ]
-        # PartitionFilter: untouched bucket dirs are never read — this
-        # prunes both the unseen-url probe and the encode join's build side
-        existing = existing.filter(F.col("_bucket").isin(touched))
+    existing = _probe(spark, catalog, VERTICES_TABLE, batch_urls)
+    next_id = catalog.latest_snapshot(VERTICES_TABLE)["props"][
+        "next_vertex_id"
+    ]
     new_urls = batch_urls.join(existing.select("url"), "url", "left_anti")
     # eager localCheckpoint: the anti-join + zip_index run ONCE; the
     # count, the append, and the returned dictionary slice consume the
     # same materialized id assignment instead of re-executing the lineage
     # (determinism is then locally evident, and the per-batch probe isn't
     # paid three times)
-    new_vertices = zip_index(
-        new_urls.select("url"), base_id=int(next_id)
+    new_vertices = _with_bucket(
+        zip_index(new_urls.select("url"), base_id=next_id),
+        VERTICES_TABLE,
+        buckets,
     ).localCheckpoint(eager=True)
     n_new = new_vertices.count()
     dictionary = existing.select("vertex_id", "url")
     if n_new == 0:
         return dictionary
-    if part:
-        new_vertices = new_vertices.withColumn(
-            "_bucket", _url_bucket("url", ub)
-        )
     catalog.append(
-        VERTICES_TABLE,
-        new_vertices,
-        props={"next_vertex_id": int(next_id) + n_new},
-        partition_by=part,
-        layout=record_layout if part else None,
+        VERTICES_TABLE, new_vertices, props={"next_vertex_id": next_id + n_new}
     )
     return dictionary.unionByName(new_vertices.select("vertex_id", "url"))
 
@@ -210,9 +150,8 @@ def run_edge_ingest(
     checkpoint_dir: str,
     available_now: bool = True,
     max_files_per_trigger: int = 16,
-    edge_buckets: int | None = None,
-    url_buckets: int | None = None,
-    compact_after: int | None = 32,
+    buckets: int | None = None,
+    compact_after: int = 32,
 ):
     """Start (and for available_now=True, run to completion) the ingest
     stream: pages → links → incremental dictionary → edges appends.
@@ -230,108 +169,75 @@ def run_edge_ingest(
         pages, repeated links across segments, and replays from a different
         checkpoint all append zero duplicate rows.
 
-    Bounding the anti-join scan: the edges table is hive-partitioned by
-    ``_bucket = pmod(hash(src_id), edge_buckets)``, and the anti-join's
-    build side filters to the buckets the BATCH actually touches — the
-    parquet scan prunes whole bucket directories (PartitionFilters), so
-    the per-batch probe reads O(touched buckets / edge_buckets) of the
-    accumulated table, not all of it. A micro-batch's src ids are the
-    batch's own pages (few thousand), so with edge_buckets sized well
-    above the per-batch distinct-src count (e.g. 2^14 at crawl scale; the
-    default 64 suits tests) most of a 10^11-edge table never gets read.
-    Each append writes ≤ edge_buckets files; compaction
-    (catalog.overwrite of the same partitioned layout) folds small files.
+    Bounding the anti-join scan: ``vertices`` is bucketed on ``url`` and
+    ``edges`` on ``src_id`` (module docstring), and both per-batch probes
+    read only the buckets the BATCH touches — the parquet scan prunes
+    whole bucket directories (PartitionFilters). A micro-batch's src ids
+    are the batch's own pages (few thousand), so with ``buckets`` sized
+    well above the per-batch distinct-src count (e.g. 2^14 at crawl
+    scale; the default 64 suits tests) most of a 10^11-edge table never
+    gets read. Each append writes ≤ buckets files per table.
 
-    ``edge_buckets``/``url_buckets`` are CREATION-TIME parameters: once a
-    table exists, its stored layout (catalog meta, recorded at creation/
-    migration) is the source of truth for the bucket modulus, and an
-    explicit parameter that disagrees raises ValueError — probing with a
-    different modulus than the one the ``_bucket`` values were written
-    under would miss existing rows and silently duplicate urls/edges. To
-    actually change the modulus, run ``migrate_edges_layout`` (a full
-    rewrite that re-derives ``_bucket``).
-
-    Tables created before the bucket layouts existed (no ``partition_by``
-    in their catalog meta) keep working: the sink falls back to the
-    full-table anti-join and unpartitioned appends for that table. Run
-    ``migrate_edges_layout`` once to rewrite a legacy table into the
-    bucketed layout.
+    ``buckets`` is a bucketing-time parameter. Before the stream starts,
+    each table without a stored layout (missing, or written by
+    ``pages_to_edges``, older code or by hand) is bucketed once by
+    ``compact_table`` under ``buckets`` (default ``DEFAULT_BUCKETS``).
+    Once a table is bucketed, its stored layout is the source of truth for
+    the modulus, and an explicit ``buckets`` that disagrees raises
+    ValueError — probing with a different modulus than the one the
+    ``_bucket`` values were written under would miss existing rows and
+    silently duplicate urls/edges. To change the modulus, run
+    ``compact_table(..., buckets=n)``.
 
     Compaction is automatic: Catalog.read unions one scan per appended
     snapshot dir, so an uncompacted table's read plan grows one scan per
     micro-batch. When a table's current snapshot accumulates more than
     ``compact_after`` data dirs, the sink folds it back to ONE dir
     (O(table) work every compact_after batches = amortized O(table /
-    compact_after) per batch — the standard LSM trade). ``None`` disables.
+    compact_after) per batch — the standard LSM trade).
     """
-    # fail fast on a bucket-modulus mismatch BEFORE the stream starts —
-    # per-batch resolution alone would silently accept a bad parameter on
-    # a run that happens to process zero batches
-    _resolve_buckets(catalog, EDGES_TABLE, edge_buckets, "src_id")
-    _resolve_buckets(catalog, VERTICES_TABLE, url_buckets, "url")
+    # before the stream starts: bucket each table that lacks its fixed
+    # layout (so the sink never meets another one), and fail fast on a
+    # modulus mismatch
+    for table in (VERTICES_TABLE, EDGES_TABLE):
+        stored = catalog.layout(table)
+        if stored is None or stored.get("key") != _BUCKET_KEY[table]:
+            compact_table(spark, catalog, table, buckets=buckets)
+        elif buckets is not None and buckets != stored["buckets"]:
+            raise ValueError(
+                f"table {table!r} was bucketed with "
+                f"buckets={stored['buckets']} on {stored['key']!r}; "
+                f"got buckets={buckets} — the stored layout wins (a "
+                "different modulus would break bucket pruning and "
+                "deduplication); pass None or run compact_table"
+            )
 
-    links = stream_links(stream_pages(spark, landing_dir,
-                                      max_files_per_trigger=max_files_per_trigger))
+    links = extract_links(stream_pages(
+        spark, landing_dir, max_files_per_trigger=max_files_per_trigger
+    ))
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        last = catalog.latest_snapshot(EDGES_TABLE)
+        props = catalog.latest_snapshot(EDGES_TABLE)["props"]
         if (
-            last is not None
-            and last["props"].get("stream_batch_id") == batch_id
-            and last["props"].get("stream_ckpt") == checkpoint_dir
+            props.get("stream_batch_id") == batch_id
+            and props.get("stream_ckpt") == checkpoint_dir
         ):
             return  # replay of a committed batch — idempotent skip
-        from ps_pagerank_spark.operators.graph import encode_edges
-
-        # legacy = edges table written before the bucket layout: probe the
-        # whole table and append unpartitioned (migrate_edges_layout
-        # upgrades it in one shot)
-        legacy = (
-            last is not None
-            and not catalog._load_meta(EDGES_TABLE).get("partition_by")
-        )
-        # bucket modulus: the STORED table layout wins over the parameter
-        # (a mismatched modulus would compute `touched` under the new
-        # modulus against _bucket values written under the old one — the
-        # pruned anti-joins would miss rows and silently duplicate edges)
-        eb, record_edge_layout = _resolve_buckets(
-            catalog, EDGES_TABLE, edge_buckets, "src_id"
-        )
         batch_links = normalize_links(batch_df).persist()
         batch_edges = None
         try:
-            vertices = _extend_dictionary(
-                spark, catalog, batch_links, url_buckets=url_buckets
+            vertices = _extend_dictionary(spark, catalog, batch_links)
+            batch_edges = _with_bucket(
+                encode_edges(batch_links, vertices),
+                EDGES_TABLE,
+                catalog.layout(EDGES_TABLE)["buckets"],
+            ).persist()
+            existing = _probe(spark, catalog, EDGES_TABLE, batch_edges)
+            edges = batch_edges.join(
+                existing.select("src_id", "dst_id"),
+                ["src_id", "dst_id"],
+                "left_anti",
             )
-            batch_edges = encode_edges(batch_links, vertices)
-            if not legacy:
-                batch_edges = batch_edges.withColumn(
-                    "_bucket",
-                    F.pmod(F.hash("src_id"), F.lit(eb)).cast("int"),
-                )
-            batch_edges = batch_edges.persist()
-            edges = batch_edges
-            if last is not None:
-                existing = catalog.read(spark, EDGES_TABLE)
-                if not legacy:
-                    # buckets this batch touches (≤ edge_buckets tiny
-                    # ints); the isin filter becomes a PartitionFilter on
-                    # the bucket-partitioned table — untouched dirs never
-                    # read
-                    touched = [
-                        r["_bucket"]
-                        for r in batch_edges.select("_bucket")
-                        .distinct()
-                        .collect()
-                    ]
-                    existing = existing.filter(
-                        F.col("_bucket").isin(touched)
-                    )
-                edges = edges.join(
-                    existing.select("src_id", "dst_id"),
-                    ["src_id", "dst_id"],
-                    "left_anti",
-                )
             catalog.append(
                 EDGES_TABLE,
                 edges,
@@ -339,14 +245,11 @@ def run_edge_ingest(
                     "stream_batch_id": batch_id,
                     "stream_ckpt": checkpoint_dir,
                 },
-                partition_by=None if legacy else ["_bucket"],
-                layout=None if legacy else record_edge_layout,
             )
-            if compact_after:
-                for table in (EDGES_TABLE, VERTICES_TABLE):
-                    snap = catalog.latest_snapshot(table)
-                    if snap and len(snap["data_dirs"]) > compact_after:
-                        compact_edges(spark, catalog, table=table)
+            for table in (EDGES_TABLE, VERTICES_TABLE):
+                snap = catalog.latest_snapshot(table)
+                if len(snap["data_dirs"]) > compact_after:
+                    compact_table(spark, catalog, table)
         finally:
             batch_links.unpersist()
             if batch_edges is not None:
@@ -364,60 +267,46 @@ def run_edge_ingest(
     return writer.start()
 
 
-def compact_edges(
-    spark: SparkSession, catalog: Catalog, *, table: str = EDGES_TABLE
-) -> int:
-    """Fold the accumulated per-batch files into ONE snapshot (the LSM
-    compaction step): every append writes ≤ edge_buckets small files, so
-    after many micro-batches the table is file-count-bound. Readers never
-    observe a partial state — catalog.overwrite is an atomic manifest
-    swap, and the partition layout (and thus anti-join pruning) is
-    preserved. Returns the new snapshot id; props carry the exactly-once
-    stream markers forward so replay detection survives compaction."""
-    last = catalog.latest_snapshot(table)
-    if last is None:
-        raise KeyError(f"table {table!r} has no snapshots to compact")
-    df = catalog.read(spark, table)
-    part = catalog._load_meta(table).get("partition_by")
-    if part:
-        # one file per partition dir: coalesce rows of each bucket
-        df = df.repartition(*[F.col(c) for c in part])
-    return catalog.overwrite(table, df, props=dict(last["props"]))
-
-
-def migrate_edges_layout(
+def compact_table(
     spark: SparkSession,
     catalog: Catalog,
+    table: str,
     *,
-    table: str = EDGES_TABLE,
-    bucket_on: str = "src_id",
-    buckets: int = 64,
+    buckets: int | None = None,
 ) -> int:
-    """One-shot upgrade of a legacy unpartitioned table to the bucketed
-    hive layout (``_bucket = pmod(hash(bucket_on), buckets)``), after
-    which the streaming sink's pruned anti-join applies. Uses catalog
-    partition-spec evolution: overwrite replaces every data dir, so the
-    spec change is atomic for readers. Also works for the vertices table
-    (``table=VERTICES_TABLE, bucket_on="url"``)."""
+    """Rewrite a graph table as ONE snapshot dir in its bucketed layout
+    (``_bucket = pmod(hash(key), buckets)`` on the table's fixed key).
+
+    The modulus is ``buckets``, else the stored one, else
+    ``DEFAULT_BUCKETS``; ``_bucket`` is always re-derived, so stale values
+    under another modulus or key never survive. This one rewrite serves
+    three ends:
+      * compaction (the LSM step): every append writes ≤ buckets small
+        files, so after many micro-batches the table is file-count-bound;
+      * bucketing a table written without a layout (``pages_to_edges``,
+        older code, by hand), or creating a missing table empty;
+      * changing the modulus.
+    Readers never observe a partial state — catalog.overwrite is an
+    atomic manifest swap. Props carry forward, so the exactly-once stream
+    markers survive; for ``vertices``, ``next_vertex_id = max + 1`` is
+    recorded when the props lack it. Returns the new snapshot id."""
     last = catalog.latest_snapshot(table)
+    stored = catalog.layout(table)
+    b = buckets or (stored and stored["buckets"]) or DEFAULT_BUCKETS
     if last is None:
-        raise KeyError(f"table {table!r} has no snapshots to migrate")
-    df = catalog.read(spark, table)
-    if "_bucket" in df.columns:
-        # re-derive under the NEW modulus — stale _bucket values under a
-        # different modulus are exactly the corruption the stored-layout
-        # contract prevents
-        df = df.drop("_bucket")
-    df = df.withColumn(
-        "_bucket", F.pmod(F.hash(bucket_on), F.lit(buckets)).cast("int")
-    )
-    df = df.repartition(F.col("_bucket"))
+        df, props = spark.createDataFrame([], _SCHEMA[table]), {}
+    else:
+        df = catalog.read(spark, table).drop("_bucket")
+        props = dict(last["props"])
+    if table == VERTICES_TABLE and "next_vertex_id" not in props:
+        m = df.agg(F.max("vertex_id")).first()[0]
+        props["next_vertex_id"] = 0 if m is None else int(m) + 1
     return catalog.overwrite(
         table,
-        df,
-        props=dict(last["props"]),
+        _with_bucket(df, table, b).repartition("_bucket"),
+        props=props,
         partition_by=["_bucket"],
-        layout={"bucket_on": bucket_on, "buckets": buckets},
+        layout={"key": _BUCKET_KEY[table], "buckets": b},
     )
 
 

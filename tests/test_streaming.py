@@ -13,10 +13,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from ps_pagerank_spark.operators.graph import pages_to_edges
 from ps_pagerank_spark.plans.catalog import Catalog
-from ps_pagerank_spark.sources.pages import pages_df_from_edges
+from ps_pagerank_spark.sources.pages import pages_df_from_edges, url_of
 from ps_pagerank_spark.streaming.ingest import (
     PAGES_SCHEMA,
+    compact_table,
     page_stats_stream,
     run_edge_ingest,
     stream_pages,
@@ -31,8 +33,6 @@ def _write_pages(spark, edges, out_dir, *, only_vertices=None):
     n = max(v for e in edges for v in e) + 1
     pages = pages_df_from_edges(spark, n, edges)
     if only_vertices is not None:
-        from ps_pagerank_spark.sources.pages import url_of
-
         keep = [url_of(v) for v in only_vertices]
         pages = pages.filter(F.col("url").isin(keep))
     pages.coalesce(1).write.mode("append").parquet(out_dir)
@@ -142,11 +142,11 @@ def test_bucketed_antijoin_prunes_scan(spark, dirs):
     cat = Catalog(dirs["catalog"])
     _write_pages(spark, [(0, 1), (1, 2), (2, 0)], dirs["landing"])
     run_edge_ingest(spark, dirs["landing"], cat, checkpoint_dir=dirs["ckpt"],
-                    edge_buckets=8)
+                    buckets=8)
     _write_pages(spark, [(3, 0), (3, 4)], dirs["landing"],
                  only_vertices=[3, 4])
     run_edge_ingest(spark, dirs["landing"], cat, checkpoint_dir=dirs["ckpt"],
-                    edge_buckets=8)
+                    buckets=8)
     edges = cat.read(spark, "edges")
     # same ingested edge set as the unbucketed path
     assert edges.count() == 5
@@ -184,22 +184,20 @@ def test_bucketed_antijoin_prunes_scan(spark, dirs):
 
 
 def test_compact_edges_preserves_set_and_pruning(spark, dirs):
-    from ps_pagerank_spark.streaming.ingest import compact_edges
-
     cat = Catalog(dirs["catalog"])
     _write_pages(spark, [(0, 1), (1, 2), (2, 0)], dirs["landing"])
     run_edge_ingest(spark, dirs["landing"], cat, checkpoint_dir=dirs["ckpt"],
-                    edge_buckets=8)
+                    buckets=8)
     _write_pages(spark, [(3, 0), (3, 4)], dirs["landing"],
                  only_vertices=[3, 4])
     run_edge_ingest(spark, dirs["landing"], cat, checkpoint_dir=dirs["ckpt"],
-                    edge_buckets=8)
+                    buckets=8)
     before = {(r["src_id"], r["dst_id"])
               for r in cat.read(spark, "edges").collect()}
     props_before = dict(cat.latest_snapshot("edges")["props"])
     assert len(cat.latest_snapshot("edges")["data_dirs"]) == 2
 
-    compact_edges(spark, cat)
+    compact_table(spark, cat, "edges")
     snap = cat.latest_snapshot("edges")
     assert len(snap["data_dirs"]) == 1  # folded into one snapshot dir
     assert snap["props"] == props_before  # replay markers survive
@@ -265,18 +263,13 @@ def test_all_duplicate_batch_keeps_table_readable(spark, dirs, tmp_path):
     assert cat.read(spark, "edges").count() == 4
 
 
-def test_legacy_unbucketed_table_fallback_and_migration(spark, dirs):
-    """Ingest over edges/vertices tables created BEFORE the bucket layout
-    (no partition_by in catalog meta) must fall back to the full-table
-    anti-join + unpartitioned appends instead of crashing on the missing
-    _bucket column; migrate_edges_layout then upgrades the table in one
-    atomic overwrite."""
-    from ps_pagerank_spark.streaming.ingest import migrate_edges_layout
-
+def test_unbucketed_tables_bucketed_once_at_stream_start(spark, dirs):
+    """Ingest over edges/vertices tables written without a bucket layout
+    (no partition_by in catalog meta, no next_vertex_id in props) buckets
+    each table once before the stream starts; the micro-batches then run
+    the pruned probes, and the dedup and id continuation still hold."""
     cat = Catalog(dirs["catalog"])
-    # legacy layout: unpartitioned edges + vertices without next_vertex_id
-    from ps_pagerank_spark.sources.pages import url_of
-
+    # unbucketed edges + vertices without next_vertex_id
     cat.append(
         "vertices",
         spark.createDataFrame(
@@ -291,27 +284,61 @@ def test_legacy_unbucketed_table_fallback_and_migration(spark, dirs):
     # new segment: re-links 0→1 (duplicate) and adds 2→0 and page 3
     _write_pages(spark, [(0, 1), (2, 0), (3, 0)], dirs["landing"],
                  only_vertices=[0, 2, 3])
-    run_edge_ingest(spark, dirs["landing"], cat, checkpoint_dir=dirs["ckpt"])
+    run_edge_ingest(spark, dirs["landing"], cat, checkpoint_dir=dirs["ckpt"],
+                    buckets=8)
     edges = cat.read(spark, "edges")
     got = {(r["src_id"], r["dst_id"]) for r in edges.collect()}
     assert got == {(0, 1), (1, 2), (2, 0), (3, 0)}  # no dup 0→1
-    assert "_bucket" not in edges.columns  # layout unchanged (legacy)
+    assert "_bucket" in edges.columns  # bucketed at stream start
     v = cat.read(spark, "vertices")
     vmap = {r["url"]: r["vertex_id"] for r in v.collect()}
-    assert vmap[url_of(3)] == 3  # max+1 continuation on the legacy table
-    # the legacy probe recorded next_vertex_id for later batches
+    assert vmap[url_of(3)] == 3  # max+1 continuation on the unbucketed table
+    # bucketing recorded next_vertex_id; the batch advanced it
     assert cat.latest_snapshot("vertices")["props"]["next_vertex_id"] == 4
+    assert cat.layout("edges") == {"key": "src_id", "buckets": 8}
 
-    # one-shot migration → bucketed layout with directory pruning
-    migrate_edges_layout(spark, cat, buckets=8)
-    migrated = cat.read(spark, "edges")
-    assert {(r["src_id"], r["dst_id"]) for r in migrated.collect()} == got
-    one = migrated.select("_bucket").first()["_bucket"]
+    # the bucketed layout prunes directories
+    one = edges.select("_bucket").first()["_bucket"]
     plan = (
-        migrated.filter(F.col("_bucket") == one)
+        edges.filter(F.col("_bucket") == one)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "PartitionFilters" in plan
+
+
+def test_ingest_after_batch_front_half(spark, dirs):
+    """Ingest, then the batch front half (pages_to_edges) on the same
+    catalog, then a further ingest batch. The batch overwrite writes its
+    tables unbucketed (it must not inherit the stream's partition spec,
+    whose _bucket column its frames lack); the next ingest buckets them
+    once and continues vertex ids after the batch dictionary's max."""
+    cat = Catalog(dirs["catalog"])
+    _write_pages(spark, [(0, 1), (1, 2)], dirs["landing"])
+    run_edge_ingest(spark, dirs["landing"], cat, checkpoint_dir=dirs["ckpt"])
+
+    seg = [(0, 1), (1, 2), (2, 0), (2, 3)]
+    pages_to_edges(spark, pages_df_from_edges(spark, 4, seg), cat)
+    assert cat.layout("edges") is None and cat.layout("vertices") is None
+    batch_vmap = {
+        r["url"]: r["vertex_id"] for r in cat.read(spark, "vertices").collect()
+    }
+    assert sorted(batch_vmap.values()) == [0, 1, 2, 3]
+
+    _write_pages(spark, [(3, 5), (5, 0)], dirs["landing"],
+                 only_vertices=[3, 5])
+    run_edge_ingest(spark, dirs["landing"], cat, checkpoint_dir=dirs["ckpt"])
+    assert cat.layout("edges")["key"] == "src_id"
+    assert cat.layout("vertices")["key"] == "url"
+    vmap = {
+        r["url"]: r["vertex_id"] for r in cat.read(spark, "vertices").collect()
+    }
+    assert {u: vmap[u] for u in batch_vmap} == batch_vmap
+    assert vmap[url_of(5)] == 4  # after the batch dictionary's max
+    assert cat.latest_snapshot("vertices")["props"]["next_vertex_id"] == 5
+    edges = cat.read(spark, "edges")
+    got = {(r["src_id"], r["dst_id"]) for r in edges.collect()}
+    assert edges.count() == len(got)
+    assert got == {(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 0)}
 
 
 def test_bucketed_dictionary_prunes_scan(spark, dirs):
@@ -323,7 +350,7 @@ def test_bucketed_dictionary_prunes_scan(spark, dirs):
     cat = Catalog(dirs["catalog"])
     _write_pages(spark, [(0, 1), (1, 2), (2, 0)], dirs["landing"])
     run_edge_ingest(spark, dirs["landing"], cat, checkpoint_dir=dirs["ckpt"],
-                    url_buckets=8)
+                    buckets=8)
     v = cat.read(spark, "vertices")
     assert v.count() == 3
     assert cat.latest_snapshot("vertices")["props"]["next_vertex_id"] == 3
@@ -357,26 +384,24 @@ def test_bucketed_dictionary_prunes_scan(spark, dirs):
 
 def test_bucket_modulus_is_stored_not_trusted(spark, dirs):
     """The bucket modulus is recorded in the table layout at creation and
-    WINS thereafter: a later ingest run passing a different edge_buckets/
-    url_buckets raises loudly instead of probing with the wrong modulus
-    (which would miss existing rows in the pruned anti-joins and silently
-    duplicate urls/edges); passing None (the default) picks up the stored
-    layout, and migrate_edges_layout is the sanctioned way to change it."""
-    from ps_pagerank_spark.streaming.ingest import migrate_edges_layout
-
+    WINS thereafter: a later ingest run passing a different buckets
+    raises loudly instead of probing with the wrong modulus (which would
+    miss existing rows in the pruned anti-joins and silently duplicate
+    urls/edges); passing None (the default) picks up the stored layout,
+    and compact_table is the sanctioned way to change it."""
     cat = Catalog(dirs["catalog"])
     _write_pages(spark, [(0, 1), (1, 2), (2, 0)], dirs["landing"])
     run_edge_ingest(spark, dirs["landing"], cat, checkpoint_dir=dirs["ckpt"],
-                    edge_buckets=8, url_buckets=8)
-    assert cat.layout("edges") == {"bucket_on": "src_id", "buckets": 8}
-    assert cat.layout("vertices") == {"bucket_on": "url", "buckets": 8}
+                    buckets=8)
+    assert cat.layout("edges") == {"key": "src_id", "buckets": 8}
+    assert cat.layout("vertices") == {"key": "url", "buckets": 8}
 
     # a mismatched explicit modulus must raise, not silently corrupt
     _write_pages(spark, [(3, 0), (3, 4)], dirs["landing"],
                  only_vertices=[3, 4])
     with pytest.raises(Exception, match="stored layout wins"):
         run_edge_ingest(spark, dirs["landing"], cat,
-                        checkpoint_dir=dirs["ckpt"], edge_buckets=16)
+                        checkpoint_dir=dirs["ckpt"], buckets=16)
 
     # default (None) follows the stored layout; ingest works and dedups
     run_edge_ingest(spark, dirs["landing"], cat, checkpoint_dir=dirs["ckpt"])
@@ -386,9 +411,9 @@ def test_bucket_modulus_is_stored_not_trusted(spark, dirs):
     v = cat.read(spark, "vertices")
     assert v.count() == v.select("url").distinct().count() == 5
 
-    # migration re-derives _bucket under the new modulus and re-records it
-    migrate_edges_layout(spark, cat, buckets=16)
-    assert cat.layout("edges") == {"bucket_on": "src_id", "buckets": 16}
+    # compaction re-derives _bucket under the new modulus and re-records it
+    compact_table(spark, cat, "edges", buckets=16)
+    assert cat.layout("edges") == {"key": "src_id", "buckets": 16}
     _write_pages(spark, [(4, 1)], dirs["landing"], only_vertices=[4])
     run_edge_ingest(spark, dirs["landing"], cat, checkpoint_dir=dirs["ckpt"])
     migrated = cat.read(spark, "edges")
@@ -398,6 +423,13 @@ def test_bucket_modulus_is_stored_not_trusted(spark, dirs):
         F.col("_bucket") != F.pmod(F.hash("src_id"), F.lit(16)).cast("int")
     )
     assert bad.count() == 0
+
+    # a re-crawl of a page after the modulus change appends no duplicates
+    _write_pages(spark, [(0, 1)], dirs["landing"], only_vertices=[0])
+    run_edge_ingest(spark, dirs["landing"], cat, checkpoint_dir=dirs["ckpt"])
+    recrawled = cat.read(spark, "edges")
+    assert recrawled.count() == 6
+    assert recrawled.distinct().count() == 6
 
 
 def test_auto_compaction_bounds_reader_plan(spark, dirs):
@@ -415,7 +447,7 @@ def test_auto_compaction_bounds_reader_plan(spark, dirs):
         all_edges.add((src, dst))
     cat = Catalog(dirs["catalog"])
     run_edge_ingest(spark, dirs["landing"], cat, checkpoint_dir=dirs["ckpt"],
-                    max_files_per_trigger=1, edge_buckets=8, url_buckets=8,
+                    max_files_per_trigger=1, buckets=8,
                     compact_after=4)
     for table in ("edges", "vertices"):
         assert len(cat.latest_snapshot(table)["data_dirs"]) <= 5
@@ -423,8 +455,6 @@ def test_auto_compaction_bounds_reader_plan(spark, dirs):
     v = cat.read(spark, "vertices")
     vmap = {r["vertex_id"]: r["url"] for r in v.collect()}
     got = {(vmap[r["src_id"]], vmap[r["dst_id"]]) for r in edges.collect()}
-    from ps_pagerank_spark.sources.pages import url_of
-
     assert got == {(url_of(s), url_of(d)) for s, d in all_edges}
     # next_vertex_id survives compaction (props carried forward)
     assert cat.latest_snapshot("vertices")["props"]["next_vertex_id"] == 24

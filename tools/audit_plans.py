@@ -1,5 +1,6 @@
 import sys, re
-sys.path.insert(0, "/root/repo")
+from pathlib import Path
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from ps_pagerank_spark import get_spark
 from pyspark.sql import functions as F
 
