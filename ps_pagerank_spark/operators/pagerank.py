@@ -91,6 +91,8 @@ from ps_pagerank_spark.session import drop_zip_importers
 
 D_DEFAULT = 0.85
 EPS_DEFAULT = 1e-8  # c-single-threaded/pagerank.c:19
+# the catalog table checkpoints go to and resume_pagerank restarts from
+CHECKPOINT_TABLE = "pagerank_ranks"
 
 # csr_block kernel: disable AQE inside the iteration loop only when the
 # rank state carries at least this many rows per partition — below it the
@@ -190,7 +192,6 @@ def pagerank(
     num_partitions: int | None = None,
     checkpoint: "object | None" = None,  # plans.catalog.Catalog
     checkpoint_every: int = 0,
-    checkpoint_table: str = "pagerank_ranks",
     block_dir: str | None = None,
 ) -> PageRankResult:
     """Run PageRank over edges(src_id, dst_id) [deduplicated upstream].
@@ -202,7 +203,7 @@ def pagerank(
     endpoint. fixed_iterations runs exactly that many iterations,
     ignoring eps. Every checkpoint_every iterations the rank state and
     metrics go to the plans.catalog.Catalog ``checkpoint`` as table
-    checkpoint_table, which resume_pagerank restarts from. block_dir
+    CHECKPOINT_TABLE, which resume_pagerank restarts from. block_dir
     holds csr_block's store (default a temp dir; executor-visible).
 
     kernel defaults to "auto": the join kernel when the input is PROVABLY
@@ -250,8 +251,7 @@ def pagerank(
         max_iter=max_iter, fixed_iterations=fixed_iterations,
         dangling_mode=dangling_mode, kernel=kernel,
         num_partitions=num_partitions, checkpoint=checkpoint,
-        checkpoint_every=checkpoint_every, checkpoint_table=checkpoint_table,
-        block_dir=block_dir,
+        checkpoint_every=checkpoint_every, block_dir=block_dir,
     )
 
 
@@ -291,7 +291,6 @@ def _pagerank_impl(
     num_partitions: int,
     checkpoint,
     checkpoint_every: int,
-    checkpoint_table: str,
     block_dir: str | None,
     resume: _Resume | None,
 ) -> PageRankResult:
@@ -427,7 +426,6 @@ def _pagerank_impl(
             dang_mass=dang_mass,
             checkpoint=checkpoint,
             checkpoint_every=checkpoint_every,
-            checkpoint_table=checkpoint_table,
         )
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
@@ -472,7 +470,6 @@ def _iterate(
     dang_mass: float,
     checkpoint=None,
     checkpoint_every: int = 0,
-    checkpoint_table: str = "pagerank_ranks",
 ):
     """Shared power-method loop (fresh runs and resumed runs). dang_mass
     is the redistribute mass of the incoming state (0.0 in mode "none").
@@ -555,7 +552,7 @@ def _iterate(
             }
         )
         if checkpoint is not None and checkpoint_every and it % checkpoint_every == 0:
-            _write_checkpoint(checkpoint, checkpoint_table, state, it, metrics)
+            _write_checkpoint(checkpoint, state, it, metrics)
         if fixed_iterations is None and delta <= eps:
             converged = True
             break
@@ -575,12 +572,12 @@ def _join_gather_cols() -> tuple:
 
 
 def _gather_scatter_join(
-    state: DataFrame, wedges: DataFrame, cols: tuple | None = None
+    state: DataFrame, wedges: DataFrame, cols: tuple
 ) -> DataFrame:
     """J1-J6 analog: gather = equi-join on src, scatter = hash agg on dst.
     Returns (vertex_id, _c) where _c = Σ w·rank over in-edges. ``cols``
-    is ``_join_gather_cols()``, passed in by loops that reuse it."""
-    src_id, contrib, vertex_id = cols or _join_gather_cols()
+    is ``_join_gather_cols()``, built once by the caller."""
+    src_id, contrib, vertex_id = cols
     # shuffled-hash, not sort-merge: both sides are already hash
     # co-partitioned (wedges persisted on src_id, state on vertex_id,
     # same P), so SHJ probes without re-sorting the edges every iteration
@@ -1002,10 +999,10 @@ def _alignment_fraction(state: DataFrame, P: int, n: int | None = None) -> float
     return float(row["f"]) if row["f"] is not None else 1.0
 
 
-def _write_checkpoint(catalog, table: str, state: DataFrame, it: int, metrics):
+def _write_checkpoint(catalog, state: DataFrame, it: int, metrics):
     """Persist the rank vector + metrics for resume (plans.catalog)."""
     catalog.overwrite(
-        table,
+        CHECKPOINT_TABLE,
         state.select(
             F.lit(it).alias("iter"), "vertex_id", "dangling", "rank"
         ),
@@ -1017,8 +1014,6 @@ def resume_pagerank(
     spark: SparkSession,
     edges: DataFrame,
     catalog,
-    *,
-    checkpoint_table: str = "pagerank_ranks",
     **kwargs,
 ) -> PageRankResult:
     """Restart PageRank from the latest catalog checkpoint. ``kwargs`` are
@@ -1034,21 +1029,19 @@ def resume_pagerank(
     bit-identical to an uninterrupted run, for both kernels. The state is
     read lazily by iteration 1: a snapshot's data dir stays on disk when
     later checkpoints overwrite the table."""
-    snap = catalog.latest_snapshot(checkpoint_table)
+    snap = catalog.latest_snapshot(CHECKPOINT_TABLE)
     if snap is None:
-        return pagerank(spark, edges, checkpoint_table=checkpoint_table, **kwargs)
+        return pagerank(spark, edges, **kwargs)
     it, metrics = snap["props"]["iter"], snap["props"].get("metrics")
     if not metrics or metrics[-1]["iter"] != it:
         raise ValueError(
-            f"checkpoint {checkpoint_table!r} (iteration {it}) has no "
+            f"checkpoint {CHECKPOINT_TABLE!r} (iteration {it}) has no "
             "metrics for its last iteration, so its redistribute mass is "
             "unknown"
         )
-    resume = _Resume(catalog.read(spark, checkpoint_table), it, metrics)
+    resume = _Resume(catalog.read(spark, CHECKPOINT_TABLE), it, metrics)
     # pagerank()'s signature supplies the defaults and rejects unknown kwargs
-    args = inspect.signature(pagerank).bind(
-        spark, edges, checkpoint_table=checkpoint_table, **kwargs
-    )
+    args = inspect.signature(pagerank).bind(spark, edges, **kwargs)
     args.apply_defaults()
     return _run(spark, edges, resume, **args.kwargs)
 

@@ -244,16 +244,15 @@ class Catalog:
             return spark.createDataFrame([], schema)
         # the stored schema spares the read a schema-inference job
         reader = spark.read.schema(schema)
-        if meta.get("partition_by") and len(dirs) > 1:
-            # each snapshot dir is its own hive-partitioned root; reading
-            # them separately keeps per-dir partition discovery (and thus
-            # directory pruning), and Catalyst pushes filters through the
-            # union into every child scan
-            out = reader.parquet(dirs[0])
-            for d in dirs[1:]:
-                out = out.unionByName(reader.parquet(d))
-            return out
-        return reader.parquet(*dirs)
+        # each snapshot dir is its own root, hive-partitioned when it was
+        # written under a spec; reading them separately keeps per-dir
+        # partition discovery (and thus directory pruning) whatever spec
+        # the table has now, and Catalyst pushes filters through the
+        # union into every child scan
+        out = reader.parquet(dirs[0])
+        for d in dirs[1:]:
+            out = out.unionByName(reader.parquet(d))
+        return out
 
     def latest_snapshot(self, table: str) -> dict | None:
         meta = self._load_meta(table)

@@ -145,8 +145,8 @@ def test_url_expr_no_truncation_above_1m(spark):
 
 def test_synth_pages_distributed_extracts_generator_edges(spark):
     """synth_pages_distributed → extract_links must reproduce EXACTLY the
-    generator's distinct (src, dst) pairs (the expected-count contract the
-    large-scale E2E benchmark asserts, BENCH/e2e_pages.py)."""
+    generator's distinct (src, dst) pairs (the expected-count contract
+    BENCH/ab_pagerank.py asserts on its ``pages:`` inputs at scale)."""
     from ps_pagerank_spark.sources.pages import (
         synth_edges_distributed,
         synth_pages_distributed,

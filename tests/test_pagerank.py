@@ -392,10 +392,10 @@ def test_wide_id_state_stream_kernel_equality(spark):
 
 
 def test_deleted_knobs_raise(spark, big_edges_df):
-    """pagerank() takes exactly these 12 keyword arguments. The deleted
-    gather, precision, loop-AQE and hub-split knobs, and the resume-only
-    values that only resume_pagerank hands to a run, are unknown kwargs:
-    TypeError."""
+    """pagerank() takes exactly these 11 keyword arguments. The deleted
+    gather, precision, loop-AQE, hub-split and checkpoint-table knobs, and
+    the resume-only values that only resume_pagerank hands to a run, are
+    unknown kwargs: TypeError."""
     import inspect
 
     assert [
@@ -404,7 +404,7 @@ def test_deleted_knobs_raise(spark, big_edges_df):
     ] == [
         "vertices", "d", "eps", "max_iter", "fixed_iterations",
         "dangling_mode", "kernel", "num_partitions", "checkpoint",
-        "checkpoint_every", "checkpoint_table", "block_dir",
+        "checkpoint_every", "block_dir",
     ]
     state = spark.createDataFrame(
         [(1, False, 0.5)], "vertex_id long, dangling boolean, rank double"
@@ -412,7 +412,8 @@ def test_deleted_knobs_raise(spark, big_edges_df):
     for kw in ({"gather": "shuffle"}, {"broadcast_max_vertices": 1},
                {"dtype": "float64"}, {"loop_aqe": "auto"},
                {"hub_threshold": 2}, {"start_state": state},
-               {"start_iter": 5}, {"prev_metrics": []}):
+               {"start_iter": 5}, {"prev_metrics": []},
+               {"checkpoint_table": "ranks"}):
         with pytest.raises(TypeError):
             pagerank(spark, big_edges_df, kernel="join", num_partitions=4,
                      **kw)

@@ -53,7 +53,10 @@ def test_update_join_reuses_agg_exchange_at_custom_P(spark, big_edges_df):
     import re
 
     from ps_pagerank_spark.operators.graph import weighted_edges
-    from ps_pagerank_spark.operators.pagerank import _gather_scatter_join
+    from ps_pagerank_spark.operators.pagerank import (
+        _gather_scatter_join,
+        _join_gather_cols,
+    )
 
     P = 7  # deliberately != the session's default shuffle partitions
     prev = {
@@ -76,7 +79,7 @@ def test_update_join_reuses_agg_exchange_at_custom_P(spark, big_edges_df):
             .repartition(P, "vertex_id")
             .localCheckpoint(eager=True)
         )
-        contribs = _gather_scatter_join(state, wedges)
+        contribs = _gather_scatter_join(state, wedges, _join_gather_cols())
         new_state = state.select(
             "vertex_id", "dangling", F.col("rank").alias("_old")
         ).join(contribs, "vertex_id", "left")

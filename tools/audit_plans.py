@@ -34,12 +34,14 @@ from ps_pagerank_spark.operators.graph import weighted_edges
 audit("weighted_coo", weighted_edges(edges))
 
 # 3. one pagerank gather-scatter iteration (co-partitioned shuffled-hash gather)
-from ps_pagerank_spark.operators.pagerank import _gather_scatter_join
+from ps_pagerank_spark.operators.pagerank import (
+    _gather_scatter_join, _join_gather_cols,
+)
 edgesP = weighted_edges(edges).repartition(8, "src_id").persist(); edgesP.count()
 state = edges.select(F.col("src_id").alias("vertex_id")).distinct().select(
     "vertex_id", F.lit(False).alias("dangling"), F.lit(0.1).alias("rank")
 ).repartition(8, "vertex_id").localCheckpoint()
-contribs = _gather_scatter_join(state, edgesP, None)
+contribs = _gather_scatter_join(state, edgesP, _join_gather_cols())
 p = audit("gather_scatter_shuffle", contribs)
 new_state = (state.select("vertex_id","dangling",F.col("rank").alias("_old"))
     .join(contribs, "vertex_id", "left"))
