@@ -18,20 +18,23 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
-def main() -> None:
+def main(argv: list[str] | None = None, spark=None) -> None:
+    """CLI entrypoint; a passed-in ``spark`` session is not stopped."""
     ap = argparse.ArgumentParser()
     ap.add_argument("--landing", required=True)
     ap.add_argument("--catalog", required=True)
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--continuous", action="store_true")
     ap.add_argument("--max-files-per-trigger", type=int, default=16)
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     from ps_pagerank_spark import get_spark
     from ps_pagerank_spark.plans.catalog import Catalog
     from ps_pagerank_spark.streaming.ingest import run_edge_ingest
 
-    spark = get_spark(app_name="ingest_job")
+    owns_spark = spark is None
+    if owns_spark:
+        spark = get_spark(app_name="ingest_job")
     q = run_edge_ingest(
         spark,
         args.landing,
@@ -42,7 +45,8 @@ def main() -> None:
     )
     if args.continuous:
         q.awaitTermination()
-    spark.stop()
+    if owns_spark:
+        spark.stop()
 
 
 if __name__ == "__main__":

@@ -4,13 +4,10 @@ Treats media as opaque ``binary`` payload columns with typed metadata, the
 way a crawl-scale training pipeline stores them next to text. The decode /
 feature-extract step runs as an Arrow-batched pandas UDF over
 ``mapInPandas`` — the Spark-side plumbing (schema, batch shape, partition
-behavior) is real and tested; the actual pixel/sample decode is STUBBED
-because no image/audio library exists in this container:
-
-  * ``decode_mode="fake"`` (default) — deterministic md5-derived pseudo
-    features, so tests and the DuckDB oracle can verify the full path.
-  * ``decode_mode="real"`` — raises NotImplementedError at the first
-    batch, with the exact place a PIL/libav call would go.
+behavior) is real and tested; the pixel/sample decode itself is a
+deterministic md5-derived pseudo decode (``_fake_decode``, the seam where a
+PIL/libav call would go), so tests and the DuckDB oracle can verify the
+full path.
 
 Fake-feature parity note: ``mean_byte_u`` equals the mean code point of
 the text the payload was encoded from ONLY for ASCII payloads (the
@@ -65,9 +62,7 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int, int, str]:
     return width, height, 3, mean_u, digest
 
 
-def extract_media_features(
-    media: DataFrame, *, decode_mode: str = "fake"
-) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """Decode/feature-extract via mapInPandas (Arrow batches).
 
     Scale shape: one batch ≈ spark.sql.execution.arrow.maxRecordsPerBatch
@@ -75,17 +70,9 @@ def extract_media_features(
     output is a narrow typed feature row per media item, so the heavy
     binary column is dropped before any shuffle.
     """
-    if decode_mode not in ("fake", "real"):
-        raise ValueError(f"unknown decode_mode {decode_mode!r}")
-
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         drop_zip_importers()
         for pdf in batches:
-            if decode_mode == "real":
-                raise NotImplementedError(
-                    "real decode requires an image/audio library "
-                    "(PIL/libav) not present in this container"
-                )
             feats = [_fake_decode(bytes(p)) for p in pdf["payload"]]
             out = pd.DataFrame(
                 feats,
@@ -106,7 +93,7 @@ def extract_media_features(
 
 
 def media_features_sql(docs_sql: str) -> str:
-    """DuckDB twin of media_from_documents → extract_media_features(fake)
+    """DuckDB twin of media_from_documents → extract_media_features
     (valid for ASCII text payloads — see module docstring)."""
     h = "CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT)"
     mean_cp = (

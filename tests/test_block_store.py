@@ -259,7 +259,7 @@ def test_cli_resume_keeps_csr_block_kernel(spark, tmp_path, big_edges_df,
     the resume builds a csr_block store in --block-dir, plus the same
     scores (allclose 1e-12) and total iterations."""
     import ps_pagerank_spark.operators.pagerank as pr
-    from jobs.pagerank_job import main
+    from jobs.graph_job import main
 
     edges_path = str(tmp_path / "edges_pq")
     big_edges_df.write.parquet(edges_path)
@@ -292,7 +292,8 @@ def test_cli_resume_keeps_csr_block_kernel(spark, tmp_path, big_edges_df,
     monkeypatch.setattr(pr, "_build_csr_blocks", spy)
     main(
         [
-            "--edges", edges_path, "--catalog", cat_dir, "--out", "ranks",
+            "pagerank", "--edges", edges_path, "--catalog", cat_dir,
+            "--out", "ranks",
             "--dangling", "redistribute", "--kernel", "csr_block",
             "--block-dir", str(bdir), "--num-partitions", "4", "--resume",
         ],

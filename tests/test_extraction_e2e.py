@@ -414,14 +414,12 @@ def test_front_half_default_matches_explicit_partitions(spark, pages):
     )
 
 
-@pytest.mark.parametrize("job", ["pagerank_job", "graph_job"])
-def test_cli_pages_path_extracts_each_page_once(spark, pages, tmp_path, monkeypatch, job):
+def test_cli_pages_path_extracts_each_page_once(spark, pages, tmp_path, monkeypatch):
     """The CLI --pages path writes vertices and then edges from one links
     frame; it must run the extractor over each page once, not once per
     write. An accumulator counts the pages fed to the extractor."""
-    import importlib
-
     import ps_pagerank_spark.functions.extract as ex
+    from jobs.graph_job import main
 
     pages_path = str(tmp_path / "pages_pq")
     pages.write.parquet(pages_path)
@@ -440,7 +438,6 @@ def test_cli_pages_path_extracts_each_page_once(spark, pages, tmp_path, monkeypa
         return real(cols.mapInArrow(tap, cols.schema), html_col)
 
     monkeypatch.setattr(ex, "extract_links", counting)
-    main = importlib.import_module(f"jobs.{job}").main
-    args = ["--pages", pages_path, "--catalog", str(tmp_path / "cat")]
-    main((["components"] if job == "graph_job" else []) + args, spark=spark)
+    main(["components", "--pages", pages_path,
+          "--catalog", str(tmp_path / "cat")], spark=spark)
     assert seen.value == n_pages

@@ -220,3 +220,44 @@ def test_graph_job_cli_dispatch(spark, tmp_path):
                 for r in triangle_counts(
                     spark, edges, num_partitions=4).collect()}
     assert got_tri == want_tri
+
+
+def test_graph_job_pagerank_cli(spark, tmp_path):
+    """The `pagerank` algorithm of jobs/graph_job.py writes all four of its
+    outputs: the ranks table under the default --out (== a direct
+    pagerank() call with the CLI's defaults), its {iterations, converged}
+    props, one `metrics` row per iteration with the rank vector's partition
+    lineage, and the --checkpoint-every checkpoint table."""
+    from jobs.graph_job import main
+    from ps_pagerank_spark.operators.pagerank import CHECKPOINT_TABLE, pagerank
+    from ps_pagerank_spark.plans.catalog import Catalog
+
+    edges = edges_from_pairs(spark, BIG_EDGES)
+    edges_path = str(tmp_path / "edges_pq")
+    edges.write.parquet(edges_path)
+    cat_dir = str(tmp_path / "cat")
+
+    main(["pagerank", "--edges", edges_path, "--catalog", cat_dir,
+          "--checkpoint-every", "2", "--num-partitions", "4"], spark=spark)
+
+    cat = Catalog(cat_dir)
+    want = pagerank(spark, edges, eps=1e-6, dangling_mode="redistribute",
+                    num_partitions=4)
+    got = {r["vertex_id"]: r["rank"]
+           for r in cat.read(spark, "pagerank").collect()}
+    want_ranks = {r["vertex_id"]: r["rank"] for r in want.ranks.collect()}
+    assert got.keys() == want_ranks.keys()
+    assert np.allclose([got[v] for v in sorted(got)],
+                       [want_ranks[v] for v in sorted(got)], atol=1e-12)
+
+    props = cat.latest_snapshot("pagerank")["props"]
+    assert props["iterations"] == want.iterations
+    assert props["converged"] is True
+
+    metrics = cat.read(spark, "metrics").collect()
+    assert sorted(r["iter"] for r in metrics) == list(
+        range(1, want.iterations + 1))
+    assert all(r["run_id"] == "pagerank" for r in metrics)
+    assert all(sum(x["rows"] for x in r["lineage"]) == len(got)
+               for r in metrics)
+    assert CHECKPOINT_TABLE in cat.tables()

@@ -9,7 +9,6 @@ from __future__ import annotations
 import hashlib
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
 from ps_pagerank_spark.functions.text import (
@@ -200,14 +199,3 @@ def test_media_features_deterministic(spark):
     assert feats[0]["mean_byte_u"] == math.floor((97 + 98 + 99) / 3 * 1e6)
     assert feats[0]["content_hash"] == hashlib.md5(b"abc").hexdigest()
     assert feats[1]["mean_byte_u"] == 0 and feats[1]["n_bytes"] == 0
-
-
-def test_media_real_decode_raises(spark):
-    from ps_pagerank_spark.functions.multimodal import (
-        extract_media_features,
-        media_from_documents,
-    )
-
-    media = media_from_documents(_docs(spark, ["x"]))
-    with pytest.raises(Exception, match="NotImplementedError|not present"):
-        extract_media_features(media, decode_mode="real").count()

@@ -458,3 +458,25 @@ def test_auto_compaction_bounds_reader_plan(spark, dirs):
     assert got == {(url_of(s), url_of(d)) for s, d in all_edges}
     # next_vertex_id survives compaction (props carried forward)
     assert cat.latest_snapshot("vertices")["props"]["next_vertex_id"] == 24
+
+
+def test_ingest_job_cli_matches_batch_front_half(spark, dirs, tmp_path):
+    """jobs/ingest_job.py drives one availableNow run over a landing dir of
+    page parquet files (one file per micro-batch); its vertices and edges
+    tables hold the same counts as pages_to_edges on the same pages."""
+    from jobs.ingest_job import main
+
+    _write_pages(spark, [(0, 1), (1, 2), (2, 0)], dirs["landing"])
+    _write_pages(spark, [(3, 0), (3, 4), (4, 1)], dirs["landing"],
+                 only_vertices=[3, 4])
+    main(["--landing", dirs["landing"], "--catalog", dirs["catalog"],
+          "--checkpoint", dirs["ckpt"], "--max-files-per-trigger", "1"],
+         spark=spark)
+
+    cat = Catalog(dirs["catalog"])
+    batch = Catalog(str(tmp_path / "batch"))
+    pages_to_edges(spark, spark.read.parquet(dirs["landing"]), batch)
+    for table in ("vertices", "edges"):
+        assert (cat.read(spark, table).count()
+                == batch.read(spark, table).count()), table
+    assert batch.read(spark, "edges").count() == 6

@@ -1,4 +1,4 @@
-import sys, re
+import sys, re, tempfile
 from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from ps_pagerank_spark import get_spark
@@ -57,8 +57,9 @@ audit("text_features", docs.select("doc_id", *[v.alias(k) for k,v in feats.items
 from ps_pagerank_spark.functions.extract import extract_links
 from ps_pagerank_spark.sources.pages import pages_df_from_edges
 pages = pages_df_from_edges(spark, 50, [(i, (i+1)%50) for i in range(50)])
-pages.write.mode("overwrite").parquet("/tmp/pages_audit")
-audit("link_extraction", extract_links(spark.read.parquet("/tmp/pages_audit")))
+with tempfile.TemporaryDirectory() as tmp:
+    pages.write.parquet(f"{tmp}/pages_audit")
+    audit("link_extraction", extract_links(spark.read.parquet(f"{tmp}/pages_audit")))
 
 # 6. top-k: expect TakeOrderedAndProject, no global sort
 from ps_pagerank_spark.operators.pagerank import top_k_ranks
