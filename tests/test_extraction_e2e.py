@@ -414,10 +414,19 @@ def test_front_half_default_matches_explicit_partitions(spark, pages):
     )
 
 
-def test_cli_pages_path_extracts_each_page_once(spark, pages, tmp_path, monkeypatch):
+# Ids keep the names of the two CLIs these routes came from: PageRank (once
+# jobs/pagerank_job.py) and the graph algorithms.
+@pytest.mark.parametrize("algorithm", [
+    pytest.param("pagerank", id="pagerank_job"),
+    pytest.param("components", id="graph_job"),
+])
+def test_cli_pages_path_extracts_each_page_once(
+    spark, pages, tmp_path, monkeypatch, algorithm
+):
     """The CLI --pages path writes vertices and then edges from one links
     frame; it must run the extractor over each page once, not once per
-    write. An accumulator counts the pages fed to the extractor."""
+    write, whichever algorithm follows. An accumulator counts the pages fed
+    to the extractor."""
     import ps_pagerank_spark.functions.extract as ex
     from jobs.graph_job import main
 
@@ -438,6 +447,6 @@ def test_cli_pages_path_extracts_each_page_once(spark, pages, tmp_path, monkeypa
         return real(cols.mapInArrow(tap, cols.schema), html_col)
 
     monkeypatch.setattr(ex, "extract_links", counting)
-    main(["components", "--pages", pages_path,
+    main([algorithm, "--pages", pages_path,
           "--catalog", str(tmp_path / "cat")], spark=spark)
     assert seen.value == n_pages
